@@ -42,7 +42,17 @@ object RefLogs {
   /** Play pattern in application.log (ApplicationLogData.scala:50). */
   val TsDot = "yyyy-MM-dd HH:mm:ss.SSSZ"
 
-  /** Committed reference runs used by the oracle gates. */
+  /** Committed reference runs used by the oracle gates. These absolute
+    * paths point into the reference testbed's own checkout and sit OUTSIDE
+    * this repository; nothing here creates them. They are needed by:
+    *  - the registry gates in [[all]]: q_reflog_feedback and
+    *    q_reflog_drop_persec read Run006Pid, q_reflog_ratio reads
+    *    Run003Drop; without the files their `build` fails at analysis time
+    *    (PlanLintSpec plans them only where both directories exist);
+    *  - the committed-artifact specs — RefLogsSpec's feedback, ratio,
+    *    perSecond and load() cases and GnuplotGraphSpec's two byte-parity
+    *    cases — which are cancelled where the run directory is absent.
+    */
   val Run006Pid =
     "/root/reference/test-runs-006/1.5.0-rc3-7-25000.60-8-25000.100-7-25000.150_pid"
   val Run003Drop = "/root/reference/test-runs-003/streaming-t006-7-50000-drop"
@@ -180,13 +190,19 @@ object RefLogs {
     cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) - lit(baseTime)))
 
   /** Load a full reference run directory into its eight tables, tolerating
-    * absent files (reference TestData.load, TestData.scala:178-236). */
+    * absent files inside it (reference TestData.load, TestData.scala:178-236).
+    * A run directory that does not exist is refused with an
+    * IllegalArgumentException naming it: eight empty tables would pass for
+    * a run that logged nothing. */
   def load(spark: SparkSession, runDir: String): Map[String, DataFrame] = {
+    val dir = new java.io.File(runDir)
+    if (!dir.isDirectory)
+      throw new IllegalArgumentException(s"run directory not found: $runDir")
     def linesOf(name: String): DataFrame = {
-      val f = new java.io.File(runDir, name)
+      val f = new java.io.File(dir, name)
       if (f.exists) lines(spark, f.getPath) else emptyLines(spark)
     }
-    val receiverFiles = Option(new java.io.File(runDir).listFiles())
+    val receiverFiles = Option(dir.listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.matches("receiver(_\\d+)?\\.log"))
       .map(_.getPath)
