@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Runtime SQL-conf tuning shared by every graft entry point (Bench,
   * Verify, ScaleSmoke, Main, Plans, the test harness) so the mains and
-  * the specs execute under the same aggregation regime. */
+  * the specs execute under the same aggregation and checkpoint regime. */
 object SessionTuning {
 
   /** ObjectHashAggregate's sort-based fallback threshold. The default
@@ -27,8 +27,13 @@ object SessionTuning {
     * in a hot path (that is what graft_collect_capped exists for). */
   val ObjectHashFallbackGroups: Int = 1 << 20
 
-  def tune(spark: SparkSession): Unit =
+  def tune(spark: SparkSession): Unit = {
     spark.conf.set(
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       ObjectHashFallbackGroups.toString)
+    // streaming checkpoints on file: paths are published without forking
+    // chmod/readlink (see LocalCheckpointFileManager)
+    spark.conf.set(graft.streaming.LocalCheckpointFileManager.ConfKey,
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+  }
 }

@@ -31,10 +31,7 @@ object Tables {
     * build side where an extra exchange serializes before the join),
     * and `events` (window/agg gates net +5.1 s across the family — the
     * window work is too light to pay for the exchange). */
-  // `var` is a measurement hook ONLY (same-JVM A/B harnesses flip it to
-  // compare scan shapes inside one session); production code never
-  // mutates it.
-  @volatile private[graft] var ParallelizeTables: Set[String] = Set("documents")
+  private[graft] val ParallelizeTables: Set[String] = Set("documents")
 
   private val sizeCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]

@@ -2547,31 +2547,36 @@ object Similarity {
     // batch, postings generation-folded mid-run (batch 1)
     val semDocs = s"$root/sem_docs"
     val semIdx = s"$root/sem_idx"
-    val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-      .parquet(semSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val batch = b.withColumn("doc_id", col("vec_id"))
-          .select("doc_id", "vec_id", "label", "embedding")
-        // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
-        // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
-        graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
-        if (id == 1L) {
-          graft.streaming.StreamLshIngest.compactPostings(s, semIdx); ()
+    val probes = try {
+      val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
+        .parquet(semSrc)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val batch = b.withColumn("doc_id", col("vec_id"))
+            .select("doc_id", "vec_id", "label", "embedding")
+          // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
+          // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
+          graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
+          if (id == 1L) {
+            graft.streaming.StreamLshIngest.compactPostings(s, semIdx); ()
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    // the query-probe checkpoint is a pure function of the BASE embeddings
-    // table (no run-dir dependency, registry geometry — this gate never
-    // refreshes it), so it runs here, backfilling executor gaps while the
-    // two ingest streams drain, instead of as a serial serve-phase action
-    // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
-    // wait for the post-fold committed geometry)
-    val probes = lshQueryProbes(emb).localCheckpoint()
-    lexQ.awaitTermination()
-    semQ.awaitTermination()
+        .start()
+      try {
+        // the query-probe checkpoint is a pure function of the BASE embeddings
+        // table (no run-dir dependency, registry geometry — this gate never
+        // refreshes it), so it runs here, backfilling executor gaps while the
+        // two ingest streams drain, instead of as a serial serve-phase action
+        // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
+        // wait for the post-fold committed geometry)
+        val p = lshQueryProbes(emb).localCheckpoint()
+        lexQ.awaitTermination()
+        semQ.awaitTermination()
+        p
+      } finally semQ.stop() // no stream outlives a failed probe or ingest
+    } finally lexQ.stop()
 
     // serve BOTH branches off the folded artifacts, fuse, done —
     // checkpointed because the run dir is reaped 3 builds later
@@ -2832,41 +2837,44 @@ object Similarity {
     // AnnMaintenance.lshStep decides every batch
     val semDocs = s"$root/sem_docs"
     val semIdx = s"$root/sem_idx"
-    val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-      .parquet(semSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val shaped = b.withColumn("doc_id", col("vec_id"))
-          .select("doc_id", "vec_id", "label", "embedding")
-        val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
-        val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
-        // corpus landing ∥ posting-delta landing (r17, guide §2.6)
-        graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
-          id, geometry = geomNow)
-        if (id == 1L) {
-          val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
-            .filter(takedownVec).select(col("vec_id")).localCheckpoint()
-          // two independent tombstone trees (corpus + index), one
-          // checkpointed key set — overlap the landings (guide §2.6)
-          Par.units(
-            () => { graft.streaming.DeltaCompact.landTombstones(
-              doomed, semDocs, 0L, watermark = Some(id)); () },
-            () => { graft.streaming.StreamLshIngest.landTombstones(
-              doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
-              watermark = Some(id)); () })
+    try {
+      val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
+        .parquet(semSrc)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val shaped = b.withColumn("doc_id", col("vec_id"))
+            .select("doc_id", "vec_id", "label", "embedding")
+          val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
+          val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
+          // corpus landing ∥ posting-delta landing (r17, guide §2.6)
+          graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
+            id, geometry = geomNow)
+          if (id == 1L) {
+            val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
+              .filter(takedownVec).select(col("vec_id")).localCheckpoint()
+            // two independent tombstone trees (corpus + index), one
+            // checkpointed key set — overlap the landings (guide §2.6)
+            Par.units(
+              () => { graft.streaming.DeltaCompact.landTombstones(
+                doomed, semDocs, 0L, watermark = Some(id)); () },
+              () => { graft.streaming.StreamLshIngest.landTombstones(
+                doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
+                watermark = Some(id)); () })
+          }
+          graft.streaming.AnnMaintenance.lshStepDetached(s, semDocs, semIdx,
+            maint, autoSize = false)
+          ()
         }
-        graft.streaming.AnnMaintenance.lshStepDetached(s, semDocs, semIdx,
-          maint, autoSize = false)
-        ()
-      }
-      .start()
-    lexQ.awaitTermination()
-    semQ.awaitTermination()
-    // quiesce: both detached ACTs must have committed (or surfaced their
-    // failure HERE) before the end-of-run folds touch the same trees
-    maint.awaitAll()
-    maint.close()
+        .start()
+      try {
+        lexQ.awaitTermination()
+        semQ.awaitTermination()
+      } finally semQ.stop() // a failed ingest stops its sibling too
+      // quiesce: both detached ACTs must have committed (or surfaced their
+      // failure HERE) before the end-of-run folds touch the same trees
+      maint.awaitAll()
+    } finally try lexQ.stop() finally maint.close()
 
     // end-of-run maintenance tick: fold the post-refresh deltas, forget
     // the vector corpus's tombstones physically, carry the geometry —
