@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, IOException, OutputStream}
+import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.{CancellableFSDataOutputStream, RenameHelperMethods}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
 /** Streaming checkpoint writes for `file:` paths without process spawns.
   *
@@ -29,12 +29,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    fails if the target exists, which is the atomic "first writer wins"
   *    the logs need; the clash surfaces as Hadoop's
   *    `FileAlreadyExistsException`, which `HDFSMetadataLog` maps to its
-  *    concurrent-writer error. A file system without hard links falls
-  *    back to the default manager's rename;
+  *    concurrent-writer error; any other I/O error propagates as is;
   *  - overwriting publish (state-store files): `rename(2)`, after
   *    dropping any `.<name>.crc` sidecar a Hadoop writer left for the old
   *    bytes, so reads through Hadoop's checksummed `LocalFileSystem` do
-  *    not verify new bytes against an old checksum.
+  *    not verify new bytes against an old checksum;
+  *  - directories: created only where no directory exists yet, following
+  *    symbolic links as Hadoop's `mkdirs` does (`Files.createDirectories`
+  *    refuses a link to an existing directory on JDKs without the fix for
+  *    JDK-8294193, which includes early JDK 17 updates).
   *
   * Reads, listings, existence checks and deletes, and every path on
   * another file system, go to the manager Spark would have chosen
@@ -73,14 +76,17 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       case None => fallback.createAtomic(p, overwriteIfPossible)
     }
 
+  private def createDirectories(dir: java.nio.file.Path): Unit =
+    if (!Files.isDirectory(dir)) Files.createDirectories(dir)
+
   override def mkdirs(p: Path): Unit = local(p) match {
-    case Some(dir) => Files.createDirectories(dir); ()
+    case Some(dir) => createDirectories(dir)
     case None => fallback.mkdirs(p)
   }
 
   override def createCheckpointDirectory(): Path = local(path) match {
     case Some(dir) =>
-      Files.createDirectories(dir)
+      createDirectories(dir)
       FileSystem.getLocal(hadoopConf).makeQualified(path)
     case None => fallback.createCheckpointDirectory()
   }
@@ -120,10 +126,6 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           throw new FileAlreadyExistsException(s"$target already exists")
-        case _: UnsupportedOperationException | _: IOException
-            if fallback.isInstanceOf[RenameHelperMethods] =>
-          fallback.asInstanceOf[RenameHelperMethods].renameTempFile(
-            new Path(tmp.toUri), new Path(target.toUri), false)
       }
 
     override def cancel(): Unit = synchronized {
