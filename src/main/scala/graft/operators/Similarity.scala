@@ -1129,7 +1129,8 @@ object Similarity {
         ()
       }
       .start()
-    q.awaitTermination()
+    // a failed or interrupted await leaves no stream running
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     // explicit schema: an all-empty replay leaves only _SUCCESS behind,
     // and schema inference over zero part files would fail the gate
     val outSchema = StructType(Seq(
@@ -1191,7 +1192,8 @@ object Similarity {
         ()
       }
       .start()
-    q.awaitTermination()
+    // a failed or interrupted await leaves no stream running
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     graft.streaming.DeltaCompact.compact(s, outDir)
     val corpus = graft.streaming.DeltaCompact.readCorpus(s, outDir)
     // decoupled from the run dir (reaped 3 builds later), like
@@ -2658,21 +2660,22 @@ object Similarity {
       // independent jobs over the checkpointed expansion (distinct batch
       // dirs), overlapped from driver threads (guide §2.6)
       val postings = lshPostings(emb).localCheckpoint()
-      // the tombstone landing overlaps the three delta landings (r17):
-      // its watermark is PINNED to 2 — exactly what the post-landing
-      // computed value would be (the highest delta batch id below is 2),
-      // so the delete applies to all three slices identically — which
-      // removes the only ordering dependency and makes it a fourth
+      // the tombstone landing overlaps the delta landings: its
+      // watermark is pinned to the highest delta batch id the loop below
+      // lands (slices - 1) — exactly what the post-landing computed value
+      // would be — so the delete applies to every slice identically, which
+      // removes the only ordering dependency and makes it one more
       // independent leg (guide §2.6)
-      Par.units(((0 until 3).map(i => () => {
+      val slices = 3
+      Par.units(((0 until slices).map(i => () => {
         graft.streaming.StreamLshIngest.landPostingsDelta(
-          postings.filter(col("neighbor_id") % 3 === i), idx, i.toLong)
+          postings.filter(col("neighbor_id") % slices === i), idx, i.toLong)
         ()
       }) :+ (() => {
         graft.streaming.StreamLshIngest.landTombstones(
           emb.filter(col("vec_id") % DeleteMod === DeleteRem)
             .select(col("vec_id").as("neighbor_id")), idx, 0L,
-          watermark = Some(2L))
+          watermark = Some(slices - 1L))
         ()
       })): _*)
       lshDeleteDone += idx

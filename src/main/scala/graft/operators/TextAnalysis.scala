@@ -852,7 +852,8 @@ object TextAnalysis {
         ()
       }
       .start()
-    q.awaitTermination()
+    // a failed or interrupted await leaves no stream running
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     // explicit schema: an all-empty replay leaves only _SUCCESS behind,
     // and schema inference over zero part files would fail the gate
     // instead of returning the (correctly) empty result
@@ -1149,7 +1150,9 @@ object TextAnalysis {
     val src =
       if (new java.io.File(tablePath).isDirectory) reader.parquet(tablePath)
       else reader.option("pathGlobFilter", "documents.parquet").parquet(d)
-    graft.streaming.StreamShardRouter.route(src, outDir).awaitTermination()
+    val q = graft.streaming.StreamShardRouter.route(src, outDir)
+    // a failed or interrupted await leaves no stream running
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     s.read.parquet(outDir)
       .groupBy(col("shard_id").cast("int").as("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1701,7 +1704,8 @@ object TextAnalysis {
         ()
       }
       .start()
-    q.awaitTermination()
+    // a failed or interrupted await leaves no stream running
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     val merged = graft.streaming.StreamBm25Ingest.mergeIndexes(s, outDir)
     // decoupled from the run dir (reaped 3 builds later), like
     // q_stream_ann_compact's read-back
@@ -1746,20 +1750,21 @@ object TextAnalysis {
       reapSamePid = n =>
         n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
     val corpusDir = s"$root/docs"
-    // three independent delta landings (distinct batch dirs) PLUS the
+    // independent delta landings (distinct batch dirs) PLUS the
     // tombstone landing, all overlapped from driver threads (guide
-    // §2.6). The tombstone's watermark is PINNED to 2 (r17) — exactly
-    // what the post-landing computed value would be (the highest delta
-    // batch id is 2), so the delete covers all three slices identically
-    // and the only ordering dependency disappears.
-    Par.units(((0 until 3).map(i => () => {
+    // §2.6). The tombstone's watermark is pinned to the highest delta
+    // batch id the loop lands (slices - 1) — exactly what the
+    // post-landing computed value would be — so the delete covers every
+    // slice identically and the only ordering dependency disappears.
+    val slices = 3
+    Par.units(((0 until slices).map(i => () => {
       graft.streaming.StreamShardRouter.landBatch(
-        docs.filter(col("doc_id") % 3 === i), corpusDir, i.toLong)
+        docs.filter(col("doc_id") % slices === i), corpusDir, i.toLong)
       ()
     }) :+ (() => {
       graft.streaming.DeltaCompact.landTombstones(
         docs.filter(col("doc_id") % Similarity.DeleteMod === Similarity.DeleteRem)
-          .select(col("doc_id")), corpusDir, 0L, watermark = Some(2L))
+          .select(col("doc_id")), corpusDir, 0L, watermark = Some(slices - 1L))
       ()
     })): _*)
     // maintenance fold: tombstones applied physically, then folded away

@@ -43,10 +43,60 @@ object BucketMath {
     acc.result()
   }
 
+  /** Appends the rows of buckets `part, part + n, …` of one second at
+    * `rate` to `out`, bucket `i` at `baseMs + i * BucketMs`. Bucket `i`'s
+    * first element is `floor(i * rate/100)`: the prefix sum of
+    * [[inBucket]] telescopes in the same double arithmetic, so
+    * `valueAt(element)` sees the element index [[bucketsFor]]' `mk` would,
+    * and the union over `part = 0 until n` is that second's rows. */
+  def fill(baseMs: Long, rate: Double, part: Int, n: Int, out: RowBuffer)(valueAt: Int => Int): Unit = {
+    val r10 = rate / 100d
+    var i = part
+    while (i < BucketsPerSecond) {
+      val end = ((i + 1) * r10).toInt
+      var k = (i * r10).toInt
+      if (k < end) {
+        out.reserve(end - k)
+        val t = baseMs + i * BucketMs
+        while (k < end) { out.put(t, valueAt(k)); k += 1 }
+      }
+      i += n
+    }
+  }
+
   /** Total rows a second yields at `rate` — Σ inBucket telescopes to
     * floor(100 * (rate/100)) term-by-term in the same double arithmetic,
     * so this is exactly Σ inBucket(i, rate) without the loop. */
   def rowsPerSecond(rate: Double): Int = (100 * (rate / 100d)).toInt
+}
+
+/** Reused primitive storage for the rows of one reader's share of one
+  * plan-second ([[TestPlan.fillRows]]): `size` rows of (`timeMs(i)`,
+  * `value(i)`). The arrays grow to the largest share seen and are never
+  * shrunk, so a reader that refills one buffer per plan-second allocates
+  * nothing per row. */
+final class RowBuffer {
+  private var times = new Array[Long](256)
+  private var values = new Array[Int](256)
+  private var n = 0
+
+  def size: Int = n
+  def timeMs(i: Int): Long = times(i)
+  def value(i: Int): Int = values(i)
+
+  private[plans] def clear(): Unit = n = 0
+  private[plans] def reserve(extra: Int): Unit =
+    if (n + extra > times.length) {
+      val cap = math.max(n + extra, times.length * 2)
+      times = java.util.Arrays.copyOf(times, cap)
+      values = java.util.Arrays.copyOf(values, cap)
+    }
+  /** Callers [[reserve]] first. */
+  private[plans] def put(timeMs: Long, value: Int): Unit = {
+    times(n) = timeMs
+    values(n) = value
+    n += 1
+  }
 }
 
 /** One rate phase of a test plan. `valuesFor` is a *pure* function of the
@@ -63,6 +113,10 @@ sealed trait Phase extends Serializable {
     * full value list there (e.g. 50k tuples/s) was pure allocation waste.
     * Exact by the telescoping bucket sum ([[BucketMath.rowsPerSecond]]). */
   def rowCountFor(second: Int): Int
+  /** Appends the rows of buckets `part, part + n, …` of `valuesFor(second)`,
+    * times shifted by `offsetMs`, to `out` — the allocation-free twin of
+    * `valuesFor` that plan-gen readers call. */
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit
 }
 
 /** Emits nothing for `duration` seconds (time offset only).
@@ -70,6 +124,7 @@ sealed trait Phase extends Serializable {
 final case class NoopPhase(duration: Option[Int]) extends Phase {
   def valuesFor(second: Int): List[TimedValues] = Nil
   def rowCountFor(second: Int): Int = 0
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit = ()
 }
 
 /** Constant `rate` items/s of a constant `value`. The reference keeps
@@ -81,6 +136,9 @@ final case class FixedPhase(value: Int, rate: Int, duration: Option[Int]) extend
     else BucketMath.bucketsFor(second, rate.toDouble)((_, n) => List.fill(n)(value))
   def rowCountFor(second: Int): Int =
     if (duration.exists(_ < second)) 0 else BucketMath.rowsPerSecond(rate.toDouble)
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit =
+    if (!duration.exists(_ < second))
+      BucketMath.fill(offsetMs + second * 1000L, rate.toDouble, part, n, out)(_ => value)
 }
 
 /** Linear rate interpolation from `startRate` to `endRate` over `durationSec`
@@ -96,6 +154,9 @@ final case class RampPhase(value: Int, startRate: Int, endRate: Int, durationSec
     else BucketMath.bucketsFor(second, rateAt(second))((_, n) => List.fill(n)(value))
   def rowCountFor(second: Int): Int =
     if (second >= durationSec) 0 else BucketMath.rowsPerSecond(rateAt(second))
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit =
+    if (second < durationSec)
+      BucketMath.fill(offsetMs + second * 1000L, rateAt(second), part, n, out)(_ => value)
 }
 
 /** Constant rate cycling through `values` round-robin across the second's
@@ -103,12 +164,16 @@ final case class RampPhase(value: Int, startRate: Int, endRate: Int, durationSec
   * resets each second. (reference: CyclePhase.scala:7-26) */
 final case class CyclePhase(values: List[Int], rate: Int, duration: Option[Int]) extends Phase {
   require(values.nonEmpty, "cycle phase needs at least one value")
+  private val cycle = values.toArray
   def valuesFor(second: Int): List[TimedValues] =
     if (duration.exists(_ <= second)) Nil
     else BucketMath.bucketsFor(second, rate.toDouble)((offset, n) =>
       List.tabulate(n)(x => values((offset + x) % values.size)))
   def rowCountFor(second: Int): Int =
     if (duration.exists(_ <= second)) 0 else BucketMath.rowsPerSecond(rate.toDouble)
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit =
+    if (!duration.exists(_ <= second))
+      BucketMath.fill(offsetMs + second * 1000L, rate.toDouble, part, n, out)(k => cycle(k % cycle.length))
 }
 
 /** Sequential phase composition: map an absolute second to the active phase
@@ -142,6 +207,11 @@ final case class PhaseSeq(phases: List[Phase]) extends Serializable {
 
   def rowCountFor(second: Int): Int =
     activePhase(second).map { case (p, local) => p.rowCountFor(local) }.getOrElse(0)
+
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit =
+    activePhase(second).foreach { case (p, local) =>
+      p.fillRows(local, part, n, offsetMs + (second - local) * 1000L, out)
+    }
 }
 
 /** Repeats its inner phase sequence `times` times (unbounded if None):
@@ -162,6 +232,12 @@ final case class LoopPhase(times: Option[Int], phases: List[Phase]) extends Phas
   def rowCountFor(second: Int): Int =
     if (duration.exists(_ < second)) 0
     else seq.rowCountFor(seq.totalDuration.map(second % _).getOrElse(second))
+  def fillRows(second: Int, part: Int, n: Int, offsetMs: Long, out: RowBuffer): Unit =
+    if (!duration.exists(_ < second)) {
+      val inLoop = seq.totalDuration.map(second % _).getOrElse(second)
+      val beforeSec = seq.totalDuration.map(d => (second / d) * d).getOrElse(0)
+      seq.fillRows(inLoop, part, n, offsetMs + beforeSec * 1000L, out)
+    }
 }
 
 /** A whole test plan: the phase sequence plus duration algebra (sum of
@@ -173,10 +249,23 @@ final case class TestPlan(phases: List[Phase]) extends Serializable {
   def valuesFor(second: Int): List[TimedValues] = seq.valuesFor(second)
   def isDoneAt(second: Int): Boolean = duration.exists(_ <= second)
 
-  /** Rows generated for `second`, exploded to (timeMs, value) pairs. */
+  /** Rows generated for `second`, exploded to (timeMs, value) pairs — the
+    * reference-parity oracle that [[fillRows]] is checked against; no
+    * generator calls it. */
   def rowsFor(second: Int): List[(Long, Int)] =
     valuesFor(second).flatMap(tv => tv.values.map(v => (tv.timeMs, v)))
 
   /** Count of [[rowsFor]] without materializing it (admission control). */
   def rowCountFor(second: Int): Int = seq.rowCountFor(second)
+
+  /** Replaces `out`'s contents with reader `part`'s share (of `n`) of
+    * `second`: the rows of its 10 ms buckets `part, part + n, …`. Over
+    * `part = 0 until n` the shares are [[rowsFor]]`(second)` as a
+    * multiset, and every reader holds a share of every second, so n
+    * readers of a range of seconds split its value mix evenly. */
+  def fillRows(second: Int, part: Int, n: Int, out: RowBuffer): Unit = {
+    require(0 <= part && part < n, s"reader $part of $n")
+    out.clear()
+    seq.fillRows(second, part, n, 0L, out)
+  }
 }

@@ -4,6 +4,7 @@ import java.util
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.plans.{PlanParser, TestPlan}
+import graft.plans.{BucketMath, PlanParser, RowBuffer, TestPlan}
 
 /** Data Source V2 implementation of the plan-driven generator — the
   * reference's testbed (load generator) re-expressed as a Spark source.
@@ -29,7 +30,8 @@ import graft.plans.{PlanParser, TestPlan}
   *  - `secondsPerTrigger` (default 1): replay pacing per micro-batch
   *  - `maxRowsPerTrigger`: admission-control row cap (ReadLimit)
   *  - `maxSeconds`: bound for unbounded plans (required if plan unbounded)
-  *  - `numPartitions` (default 4): generation parallelism per batch
+  *  - `numPartitions` (default 4, at most 100 used): readers per batch,
+  *    each taking every n-th 10 ms bucket of every plan-second in it
   *  - `rateLimitKey`: name in [[RateLimitRegistry]] consulted each trigger
   *    for a dynamic row cap (how the PID backpressure controller steers
   *    the source, mirroring receiver rate updates —
@@ -43,7 +45,7 @@ class PlanDataSource extends TableProvider with DataSourceRegister {
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new PlanTable(properties)
+    new PlanTable(PlanOptions(properties))
 }
 
 object PlanDataSource {
@@ -64,7 +66,9 @@ object RateLimitRegistry {
   def clear(key: String): Unit = limits.remove(key)
 }
 
-private final class PlanTable(props: util.Map[String, String])
+/** The source over parsed options; [[PlanGenerator]] builds one directly
+  * for a [[TestPlan]] it already holds. */
+private final class PlanTable(opts: PlanOptions)
     extends Table with SupportsRead {
   override def name(): String = "plan-gen"
   override def schema(): StructType = PlanDataSource.Schema
@@ -75,29 +79,41 @@ private final class PlanTable(props: util.Map[String, String])
       override def build(): Scan = this
       override def readSchema(): StructType = PlanDataSource.Schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new PlanMicroBatchStream(new PlanOptions(props))
-      override def toBatch: Batch = new PlanBatch(new PlanOptions(props))
+        new PlanMicroBatchStream(opts)
+      override def toBatch: Batch = new PlanBatch(opts)
     }
 }
 
-private final class PlanOptions(props: util.Map[String, String]) extends Serializable {
-  private def opt(k: String): Option[String] = {
-    // CaseInsensitiveStringMap lower-cases keys; accept either casing.
-    val direct = Option(props.get(k))
-    direct.orElse(Option(props.get(k.toLowerCase)))
-  }
-  val planText: String = opt("plan").getOrElse(
-    throw new IllegalArgumentException("plan-gen source needs a 'plan' option"))
-  @transient lazy val plan: TestPlan = PlanParser.parse(planText)
-  val streamId: Int = opt("streamId").map(_.toInt).getOrElse(0)
-  val startEpochMs: Long = opt("startEpochMs").map(_.toLong).getOrElse(0L)
-  val secondsPerTrigger: Int = opt("secondsPerTrigger").map(_.toInt).getOrElse(1)
-  val maxRowsPerTrigger: Option[Long] = opt("maxRowsPerTrigger").map(_.toLong)
-  val maxSeconds: Option[Int] = opt("maxSeconds").map(_.toInt)
-  val numPartitions: Int = opt("numPartitions").map(_.toInt).getOrElse(4)
-  val rateLimitKey: Option[String] = opt("rateLimitKey")
+private final case class PlanOptions(
+    plan: TestPlan,
+    streamId: Int = 0,
+    startEpochMs: Long = 0L,
+    secondsPerTrigger: Int = 1,
+    maxRowsPerTrigger: Option[Long] = None,
+    maxSeconds: Option[Int] = None,
+    numPartitions: Int = 4,
+    rateLimitKey: Option[String] = None) {
+  require(numPartitions >= 1, s"plan-gen needs numPartitions >= 1, got $numPartitions")
   def planSeconds: Int = plan.duration.orElse(maxSeconds).getOrElse(
     throw new IllegalArgumentException("unbounded plan needs a 'maxSeconds' option"))
+}
+
+private object PlanOptions {
+  def apply(props: util.Map[String, String]): PlanOptions = {
+    // CaseInsensitiveStringMap lower-cases keys; accept either casing.
+    def opt(k: String): Option[String] =
+      Option(props.get(k)).orElse(Option(props.get(k.toLowerCase)))
+    PlanOptions(
+      plan = PlanParser.parse(opt("plan").getOrElse(
+        throw new IllegalArgumentException("plan-gen source needs a 'plan' option"))),
+      streamId = opt("streamId").map(_.toInt).getOrElse(0),
+      startEpochMs = opt("startEpochMs").map(_.toLong).getOrElse(0L),
+      secondsPerTrigger = opt("secondsPerTrigger").map(_.toInt).getOrElse(1),
+      maxRowsPerTrigger = opt("maxRowsPerTrigger").map(_.toLong),
+      maxSeconds = opt("maxSeconds").map(_.toInt),
+      numPartitions = opt("numPartitions").map(_.toInt).getOrElse(4),
+      rateLimitKey = opt("rateLimitKey"))
+  }
 }
 
 private final case class SecondsOffset(seconds: Int) extends Offset {
@@ -167,53 +183,64 @@ private final class PlanBatch(opts: PlanOptions) extends Batch {
 }
 
 private object PlanPartitioning {
-  /** Round-robin the seconds range across numPartitions readers: seconds
-    * are uniform-cost within a phase, so striping balances mixed-rate
-    * plans better than contiguous chunks. */
-  def partitions(opts: PlanOptions, startSec: Int, endSec: Int): Array[InputPartition] = {
-    val secs = (startSec until endSec).toArray
-    if (secs.isEmpty) Array.empty
+  /** `numPartitions` readers per batch, reader p owning the 10 ms buckets
+    * p, p + n, … of every plan-second in [startSec, endSec). The cost of a
+    * row follows its value (Hanoi work doubles per step), and values
+    * change from second to second, so striping whole seconds over readers
+    * handed one reader most of a batch's expensive seconds; striping
+    * buckets gives every reader the same share of every second and so the
+    * same value mix. n is capped at the buckets per second, so no reader
+    * is planned that owns no bucket. */
+  def partitions(opts: PlanOptions, startSec: Int, endSec: Int): Array[InputPartition] =
+    if (startSec >= endSec) Array.empty
     else {
-      val n = math.min(opts.numPartitions, secs.length)
-      (0 until n).map { p =>
-        PlanInputPartition(
-          opts.planText, secs.filter(_ % n == p),
-          opts.startEpochMs, opts.streamId): InputPartition
-      }.toArray
+      val n = math.min(opts.numPartitions, BucketMath.BucketsPerSecond)
+      Array.tabulate[InputPartition](n)(p => PlanInputPartition(
+        opts.plan, startSec, endSec, p, n, opts.startEpochMs, opts.streamId))
     }
-  }
 }
 
 private final case class PlanInputPartition(
-    planText: String,
-    seconds: Array[Int],
+    plan: TestPlan,
+    startSec: Int,
+    endSec: Int,
+    part: Int,
+    numParts: Int,
     startEpochMs: Long,
     streamId: Int) extends InputPartition
 
 private final class PlanReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[PlanInputPartition]
-    new PartitionReader[InternalRow] {
-      private val plan = PlanParser.parse(p.planText)
-      private var secIdx = 0
-      private var rows: Iterator[(Long, Int)] = Iterator.empty
-      private var current: (Long, Int) = _
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PlanReader(partition.asInstanceOf[PlanInputPartition])
+}
 
-      override def next(): Boolean = {
-        while (!rows.hasNext && secIdx < p.seconds.length) {
-          rows = plan.rowsFor(p.seconds(secIdx)).iterator
-          secIdx += 1
-        }
-        if (rows.hasNext) { current = rows.next(); true } else false
-      }
+/** Fills one [[RowBuffer]] per plan-second and writes each row into one
+  * reused `UnsafeRow`: nothing is allocated per row. Spark copies a row
+  * wherever it keeps one past the next `next()`. */
+private final class PlanReader(p: PlanInputPartition) extends PartitionReader[InternalRow] {
+  private val rows = new RowBuffer
+  private val writer = new UnsafeRowWriter(3)
+  private var sec = p.startSec
+  private var i = 0
 
-      override def get(): InternalRow =
-        InternalRow(
-          (current._1 + p.startEpochMs) * 1000L, // micros for TimestampType
-          current._2,
-          p.streamId)
-
-      override def close(): Unit = ()
+  override def next(): Boolean = {
+    while (i >= rows.size && sec < p.endSec) {
+      p.plan.fillRows(sec, p.part, p.numParts, rows)
+      sec += 1
+      i = 0
     }
+    if (i < rows.size) {
+      // fixed-width fields and no nulls: reset() only sets the row's size
+      writer.reset()
+      writer.write(0, (rows.timeMs(i) + p.startEpochMs) * 1000L) // micros for TimestampType
+      writer.write(1, rows.value(i))
+      writer.write(2, p.streamId)
+      i += 1
+      true
+    } else false
   }
+
+  override def get(): InternalRow = writer.getRow
+
+  override def close(): Unit = ()
 }

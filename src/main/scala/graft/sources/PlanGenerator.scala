@@ -1,13 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import graft.plans.TestPlan
 
 /** Batch materialization of a test plan: the deterministic generator as a
   * DataFrame. Each plan-second is a pure function of the plan, so the
-  * seconds range distributes across executors with no coordination and no
-  * shuffle — at any scale the generator is embarrassingly parallel.
+  * plan's buckets distribute across readers with no coordination and no
+  * shuffle — at any scale the generator is embarrassingly parallel. It is
+  * a batch scan of the plan-gen source itself (one reader per core), so
+  * batch and streaming share one row generator.
   * (reference: testbed DataGenerator.scala:16-23, PhaseContainer.scala:12-21)
   */
 object PlanGenerator {
@@ -21,16 +23,10 @@ object PlanGenerator {
       streamId: Int = 0,
       startEpochMs: Long = 0L,
       maxSeconds: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val seconds = plan.duration.orElse(maxSeconds).getOrElse(
-      throw new IllegalArgumentException("unbounded plan needs maxSeconds"))
-    val rows: Dataset[(Long, Int)] = spark.range(0, seconds.toLong)
-      .as[Long]
-      .flatMap(s => plan.rowsFor(s.toInt))
-    rows.toDF("time_ms", "value")
-      .select(
-        timestamp_millis(col("time_ms") + startEpochMs).as("event_time"),
-        col("value").cast("int").as("value"),
-        lit(streamId).as("stream_id"))
+    if (plan.duration.orElse(maxSeconds).isEmpty)
+      throw new IllegalArgumentException("unbounded plan needs maxSeconds")
+    val opts = PlanOptions(plan, streamId = streamId, startEpochMs = startEpochMs,
+      maxSeconds = maxSeconds, numPartitions = spark.sparkContext.defaultParallelism)
+    GraftShims.ofRows(spark, DataSourceV2Relation.create(new PlanTable(opts), None, None))
   }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * they pin the floor-diff bucket arithmetic and loop re-basing.
   */
 class PhasesSpec extends AnyFunSuite {
+  import PhasesSpec._
 
   test("ramp: constant output when startRate == endRate (25/s => t*40+30)") {
     val phase = RampPhase(12, 25, 25, 4)
@@ -127,4 +128,68 @@ class PhasesSpec extends AnyFunSuite {
     // plan with an unbounded phase has no duration
     assert(TestPlan(List(FixedPhase(1, 1, None))).duration.isEmpty)
   }
+
+  /** One reader's rows, filled into a fresh buffer. */
+  private def share(fill: RowBuffer => Unit): Seq[(Long, Int)] = {
+    val buf = new RowBuffer
+    fill(buf)
+    (0 until buf.size).map(i => (buf.timeMs(i), buf.value(i)))
+  }
+
+  /** The union of the n shares is `expected` as a multiset, and every row
+    * of share p lies in one of p's buckets (p, p + n, …). */
+  private def assertSplits(expected: Seq[(Long, Int)], n: Int, ctx: String)(
+      fill: (Int, RowBuffer) => Unit): Unit = {
+    val shares = (0 until n).map(p => share(fill(p, _)))
+    shares.zipWithIndex.foreach { case (rows, p) =>
+      rows.foreach { case (t, _) =>
+        assert(((t % 1000) / BucketMath.BucketMs) % n == p, s"$ctx: row at $t ms in reader $p of $n")
+      }
+    }
+    assert(shares.flatten.sorted == expected.sorted, s"$ctx, n = $n")
+  }
+
+  test("fillRows: the readers' shares of each second are rowsFor as a multiset") {
+    val plan = PlanParser.parse(ParityPlanText)
+    for (n <- ParityReaders; second <- 0 to plan.duration.get)
+      assertSplits(plan.rowsFor(second), n, s"second $second")((p, buf) =>
+        plan.fillRows(second, p, n, buf))
+  }
+
+  test("fillRows: every phase kind matches valuesFor, duration-boundary quirks included") {
+    val phases = PlanParser.parse(ParityPlanText).phases
+    for (phase <- phases; n <- ParityReaders; second <- 0 to phase.duration.get + 1)
+      assertSplits(phase.valuesFor(second).flatMap(tv => tv.values.map(v => (tv.timeMs + 5000L, v))),
+        n, s"$phase second $second")((p, buf) => phase.fillRows(second, p, n, 5000L, buf))
+  }
+
+  test("fillRows: a refill replaces the buffer and grows it past its first capacity") {
+    val plan = TestPlan(List(FixedPhase(1, 50000, Some(1)), FixedPhase(2, 10, Some(1))))
+    val buf = new RowBuffer
+    plan.fillRows(0, 0, 1, buf)
+    assert(buf.size == 50000 && buf.value(49999) == 1 && buf.timeMs(49999) == 990L)
+    plan.fillRows(1, 0, 1, buf)
+    assert(buf.size == 10 && (0 until 10).map(buf.value).forall(_ == 2))
+    intercept[IllegalArgumentException](plan.fillRows(0, 1, 1, buf))
+  }
+}
+
+object PhasesSpec {
+  /** Every phase kind, including a loop nested in a loop, at rate 3 (the
+    * double-rounding edge: 3/100 per bucket) and at rate 1234 (buckets of
+    * 12 and 13 rows); ramps run from the rate to three times it. */
+  val ParityPlanText: String = Seq(3, 1234).map { rate =>
+    s"""  { type = noop, duration = 1 }
+       |  { type = fixed, value = 3, rate = $rate, duration = 2 }
+       |  { type = ramp, startRate = $rate, endRate = ${rate * 3}, value = 5, duration = 3 }
+       |  { type = cycle, values = [1, 2, 8], rate = $rate, duration = 2 }
+       |  { type = loop, times = 2, phases = [
+       |      { type = fixed, value = 9, rate = $rate, duration = 1 }
+       |      { type = loop, times = 2, phases = [
+       |          { type = cycle, values = [2, 3, 5], rate = $rate, duration = 1 } ] } ] }""".stripMargin
+  }.mkString("sequence = [\n", "\n", "\n]")
+
+  /** Reader counts: one, odd, the bench's four, prime, every bucket its
+    * own reader, and more readers than buckets. */
+  val ParityReaders: Seq[Int] = Seq(1, 3, 4, 7, 100, 128)
 }
