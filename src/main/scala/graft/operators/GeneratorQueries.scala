@@ -85,7 +85,7 @@ object GeneratorQueries {
   /** Fixed/loop-only plan: per-value row counts are trivially closed-form
     * (duration × rate, rates multiple of 100's bucket math identity), with
     * no cycle-distribution arithmetic to re-derive. */
-  private val DetPlan: String =
+  private[graft] val DetPlan: String =
     """sequence = [
       |  { type = fixed, value = 4, rate = 1000, duration = 10 }
       |  { type = fixed, value = 7, rate = 50, duration = 3 }

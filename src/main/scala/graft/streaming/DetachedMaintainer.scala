@@ -1,7 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.{ConcurrentHashMap, ExecutionException, Executors,
-  FutureTask, ThreadFactory}
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask,
+  LinkedBlockingQueue, ThreadFactory, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Runs maintenance ACTs OFF the ingest path — the scale piece the
@@ -69,8 +69,14 @@ final class DetachedMaintainer(namePrefix: String = "graft-maint",
   private val seq = new AtomicLong(0)
   // fixed pool = the concurrency cap; its unbounded FIFO work queue is
   // bounded in practice by at-most-one-in-flight-per-tree (≤ one queued
-  // task per tree this maintainer touches, never a runaway backlog)
-  private val pool = Executors.newFixedThreadPool(maxConcurrentActs,
+  // task per tree this maintainer touches, never a runaway backlog).
+  // The threads start HERE, on the constructing thread: a thread inherits
+  // Spark's local properties from the thread that creates it, and a pool
+  // thread created lazily by a submit inside `foreachBatch` would carry
+  // that stream's job group, so the stream's stop() would cancel whatever
+  // ACT job was running on it.
+  private val pool = new ThreadPoolExecutor(maxConcurrentActs, maxConcurrentActs,
+    0L, TimeUnit.MILLISECONDS, new LinkedBlockingQueue[Runnable](),
     new ThreadFactory {
     def newThread(r: Runnable): Thread = {
       val t = new Thread(r, s"$namePrefix-${seq.incrementAndGet()}")
@@ -78,6 +84,7 @@ final class DetachedMaintainer(namePrefix: String = "graft-maint",
       t
     }
   })
+  pool.prestartAllCoreThreads()
   private val inFlight = new ConcurrentHashMap[String, FutureTask[Unit]]()
   // submission epoch-ms while the tree's ACT is still WAITING for a pool
   // slot — cleared by the ACT the instant it starts running. Operators

@@ -416,4 +416,44 @@ class DetachedMaintainerSpec extends SparkSpec {
       m.awaitAll()
     } finally m.close()
   }
+
+  test("an ACT submitted from foreachBatch survives the stream's stop()") {
+    // the ACT's job is running when the stream that submitted it stops;
+    // StreamExecution.stop() cancels the stream's job group, which must
+    // not be the ACT's
+    DetachedMaintainerSpec.started = new CountDownLatch(1)
+    DetachedMaintainerSpec.release = new CountDownLatch(1)
+    val m = new DetachedMaintainer("dm-spec-stop")
+    try {
+      val q = spark.readStream.format("plan-gen")
+        .option("plan", "sequence = [ { type = fixed, value = 3, rate = 10, duration = 1 } ]")
+        .load()
+        .writeStream
+        .foreachBatch { (_: DataFrame, _: Long) =>
+          m.submit("t")(() => spark.sparkContext.parallelize(Seq(1), 1).foreach { _ =>
+            DetachedMaintainerSpec.started.countDown()
+            DetachedMaintainerSpec.release.await(60, TimeUnit.SECONDS)
+            ()
+          })
+          ()
+        }
+        .start()
+      try {
+        q.processAllAvailable()
+        assert(DetachedMaintainerSpec.started.await(60, TimeUnit.SECONDS), "ACT job never started")
+      } finally q.stop()
+      DetachedMaintainerSpec.release.countDown()
+      m.await("t") // throws if the stop cancelled the ACT's job
+    } finally {
+      DetachedMaintainerSpec.release.countDown()
+      m.close()
+    }
+  }
+}
+
+object DetachedMaintainerSpec {
+  // reached from inside a local-mode task: an object's fields are static,
+  // so the closure does not serialize the latches
+  @volatile var started = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
 }

@@ -11,12 +11,15 @@ import graft.sources.RateLimitRegistry
 class SpikeRecoverySpec extends SparkSpec {
 
   test("PID limit dips under a 4x cost spike and total delivery stays exact") {
-    // value 7 sustainable, value 9 ≈ 4x cost (O(2^n) workload)
+    // value 16 ≈ 4x the cost of 14 (O(2^n) workload). A solve of 14 takes
+    // ~60 µs on a 2020s x86 core, so an 8000-row batch is ~0.5 s of CPU:
+    // the rows alone overrun a 100 ms trigger on four cores, whatever the
+    // per-trigger overhead
     val planText =
       """sequence = [
-        |  { type = fixed, value = 7, rate = 2000, duration = 4 }
-        |  { type = fixed, value = 9, rate = 2000, duration = 4 }
-        |  { type = fixed, value = 7, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 14, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 16, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 14, rate = 2000, duration = 4 }
         |]""".stripMargin
     val key = "spike-spec"
     val pid = new PidController(kp = 0.5, ki = 0.1, minRows = 200, maxRows = 100000)
@@ -142,11 +145,12 @@ class SpikeRecoverySpec extends SparkSpec {
   }
 
   test("estimator-mode listener steers the admission limit through a live spike") {
+    // the same overrunning workload as the PID-controller case above
     val planText =
       """sequence = [
-        |  { type = fixed, value = 7, rate = 2000, duration = 4 }
-        |  { type = fixed, value = 9, rate = 2000, duration = 4 }
-        |  { type = fixed, value = 7, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 14, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 16, rate = 2000, duration = 4 }
+        |  { type = fixed, value = 14, rate = 2000, duration = 4 }
         |]""".stripMargin
     val key = "spike-est-spec"
     val listener = new PidRateListener(
