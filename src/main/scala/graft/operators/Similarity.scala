@@ -2249,25 +2249,6 @@ object Similarity {
   private[graft] def lshDirKey(tb: Column): Column =
     shiftright(tb, LshDirShift).cast("long")
 
-  /** Size of [[lshDirKey]]'s domain — tables × 2^(bits − dirShift), the
-    * serve layout's directory count. Exposed so the streaming delta
-    * landing ([[graft.streaming.StreamLshIngest]]) derives its shard
-    * count from the SAME geometry constants instead of duplicating the
-    * arithmetic: if the geometry ever changes, both layouts move
-    * together. */
-  private[graft] val lshDirKeyDomain: Int = lshDirKeyDomainFor(LshTables, LshBits)
-
-  /** [[lshDirKeyDomain]] at an arbitrary geometry — the streaming
-    * geometry-refresh path ([[graft.streaming.StreamLshIngest
-    * .refreshGeometry]]) re-derives its fold shard count from the
-    * COMMITTED generation's geometry sidecar rather than the registry
-    * constants, so a re-sized index keeps its layout arithmetic in one
-    * place. */
-  private[graft] def lshDirKeyDomainFor(tables: Int, bits: Int): Int = {
-    require(bits >= LshDirShift, s"bits=$bits below dir shift $LshDirShift")
-    tables << (bits - LshDirShift)
-  }
-
   val qKnnLshPersist: Q = Q("q_knn_lsh_persist", DuckLshSql) { (s, d) =>
     GraftFunctions.register(s)
     val dir = ensureLshIndex(s, d)
@@ -2373,9 +2354,9 @@ object Similarity {
   /** The capped-LSH pipeline with geometry as parameters: postings capped
     * per bucket by the `graft_min_k` id-hash reservoir, served through the
     * shared [[lshServeJoin]]. The registry gate runs the default geometry;
-    * the recall smoke ([[graft.LshRecallSmoke]]) passes a wider `bits` at
-    * larger corpora to demonstrate the bits ∝ log n adjustment that holds
-    * recall as occupancy-per-bucket grows. */
+    * SCALE.md round 11's recall table passed a wider `bits` at larger
+    * corpora to demonstrate the bits ∝ log n adjustment that holds recall
+    * as occupancy-per-bucket grows. */
   /** The capped posting index alone — per (table, bucket), the `cap`
     * entries with the lowest portable id-hash, in serve schema
     * (tb, neighbor_id, embedding). This is the artifact that would land
@@ -2429,14 +2410,6 @@ object Similarity {
       math.log(corpusCount / targetOccupancy) / math.log(2)).toInt
     math.max(LshBits, needed)
   }
-
-  /** [[knnLshCapped]] with bits auto-sized from the corpus count — the
-    * serve shape a production deployment runs: geometry follows the
-    * corpus instead of being a hand-tuned constant. The count is one
-    * driver-side plan parameter (like the IVF codebook sizing). */
-  private[graft] def knnLshCappedAuto(emb: DataFrame,
-      tables: Int = LshTables, cap: Int = LshCap): DataFrame =
-    knnLshCapped(emb, tables, lshGeometry(emb.count(), cap), cap)
 
   val qKnnLshCapped: Q = Q("q_knn_lsh_capped", DuckLshCappedSql) { (s, d) =>
     knnLshCapped(Tables.embeddings(s, d))
@@ -2748,12 +2721,12 @@ object Similarity {
     *    runs the DECIDE steps on the ingest path (metadata-cheap,
     *    measured flat across two corpus decades), but a fired ACT runs
     *    on the [[graft.streaming.DetachedMaintainer]], off-path —
-    *    [[graft.streaming.AnnMaintenance.lshStepDetached]] submits the
+    *    [[graft.streaming.AnnMaintenance.lshStep]] submits the
     *    LSH reclaim rebuild when tombstone pressure crosses its floor
     *    (the ~1/7 takedown trips the 5% default exactly once, at batch
     *    1; the width stays pinned to the committed geometry because THIS
     *    gate's oracle fixes it — auto-sizing is LifecycleV2Spec's job),
-    *    and [[graft.streaming.StreamBm25Ingest.maintainIndexDetached]]
+    *    and [[graft.streaming.StreamBm25Ingest.maintainIndex]]
     *    submits the capped-index rebuild from the folded survivors (the
     *    only exact delete for a capped aggregate — `q_bm25_delete`
     *    rationale), also exactly once (the at-most-one-in-flight guard
@@ -2829,7 +2802,7 @@ object Similarity {
           graft.streaming.DeltaCompact.landTombstones(
             doomed, s"$lexOut/docs", 0L, watermark = Some(id))
         }
-        graft.streaming.StreamBm25Ingest.maintainIndexDetached(s, lexOut, maint)
+        graft.streaming.StreamBm25Ingest.maintainIndex(s, lexOut, maint)
         ()
       }
       .start()
@@ -2837,58 +2810,67 @@ object Similarity {
     // semantic ingest (CONCURRENT with the lexical stream, as in
     // q_hybrid_stream_persist): LSH posting deltas at the COMMITTED
     // geometry; takedown at batch 1 tombstones corpus AND index;
-    // AnnMaintenance.lshStep decides every batch
+    // AnnMaintenance.lshStep decides every batch, its ACT detached
     val semDocs = s"$root/sem_docs"
     val semIdx = s"$root/sem_idx"
     try {
-      val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(semSrc)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val shaped = b.withColumn("doc_id", col("vec_id"))
-            .select("doc_id", "vec_id", "label", "embedding")
-          val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
-          val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
-          // corpus landing ∥ posting-delta landing (r17, guide §2.6)
-          graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
-            id, geometry = geomNow)
-          if (id == 1L) {
-            val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
-              .filter(takedownVec).select(col("vec_id")).localCheckpoint()
-            // two independent tombstone trees (corpus + index), one
-            // checkpointed key set — overlap the landings (guide §2.6)
-            Par.units(
-              () => { graft.streaming.DeltaCompact.landTombstones(
-                doomed, semDocs, 0L, watermark = Some(id)); () },
-              () => { graft.streaming.StreamLshIngest.landTombstones(
-                doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
-                watermark = Some(id)); () })
-          }
-          graft.streaming.AnnMaintenance.lshStepDetached(s, semDocs, semIdx,
-            maint, autoSize = false)
-          ()
-        }
-        .start()
       try {
-        lexQ.awaitTermination()
-        semQ.awaitTermination()
-      } finally semQ.stop() // a failed ingest stops its sibling too
-      // quiesce: both detached ACTs must have committed (or surfaced their
-      // failure HERE) before the end-of-run folds touch the same trees
-      maint.awaitAll()
-    } finally try lexQ.stop() finally maint.close()
+        val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
+          .parquet(semSrc)
+          .writeStream
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (b: DataFrame, id: Long) =>
+            val shaped = b.withColumn("doc_id", col("vec_id"))
+              .select("doc_id", "vec_id", "label", "embedding")
+            val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
+            val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
+            // corpus landing ∥ posting-delta landing (r17, guide §2.6)
+            graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
+              id, geometry = geomNow)
+            if (id == 1L) {
+              val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
+                .filter(takedownVec).select(col("vec_id")).localCheckpoint()
+              // two independent tombstone trees (corpus + index), one
+              // checkpointed key set — overlap the landings (guide §2.6)
+              Par.units(
+                () => { graft.streaming.DeltaCompact.landTombstones(
+                  doomed, semDocs, 0L, watermark = Some(id)); () },
+                () => { graft.streaming.StreamLshIngest.landTombstones(
+                  doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
+                  watermark = Some(id)); () })
+            }
+            graft.streaming.AnnMaintenance.lshStep(s, semDocs, semIdx,
+              maint, autoSize = false)
+            ()
+          }
+          .start()
+        try {
+          lexQ.awaitTermination()
+          semQ.awaitTermination()
+        } finally semQ.stop() // a failed ingest stops its sibling too
+        // quiesce: both detached ACTs must have committed (or surfaced their
+        // failure HERE) before the end-of-run folds touch the same trees
+        maint.awaitAll()
+      } finally lexQ.stop()
 
-    // end-of-run maintenance tick: fold the post-refresh deltas, forget
-    // the vector corpus's tombstones physically, carry the geometry —
-    // THREE independent trees (semDocs, semIdx, lexOut), so the three
-    // folds overlap from driver threads (guide §2.6) instead of paying
-    // three per-action floors back to back
-    Par.units(
-      () => { graft.streaming.DeltaCompact.compact(s, semDocs,
-        tombstoneKey = Some("vec_id")); () },
-      () => { graft.streaming.StreamLshIngest.compactPostings(s, semIdx); () },
-      () => { graft.streaming.StreamBm25Ingest.maintainIndex(s, lexOut); () }) // no-op unless deletes pend
+      // end-of-run maintenance tick: fold the post-refresh deltas, forget
+      // the vector corpus's tombstones physically, carry the geometry —
+      // THREE independent trees (semDocs, semIdx, lexOut), so the three
+      // folds overlap from driver threads (guide §2.6) instead of paying
+      // three per-action floors back to back. The lexical rebuild is a
+      // no-op unless deletes pend; no serve is live, so it GCs at the
+      // commit and keeps the tree's retention, and the tick awaits it.
+      Par.units(
+        () => { graft.streaming.DeltaCompact.compact(s, semDocs,
+          tombstoneKey = Some("vec_id")); () },
+        () => { graft.streaming.StreamLshIngest.compactPostings(s, semIdx); () },
+        () => {
+          graft.streaming.StreamBm25Ingest.maintainIndex(s, lexOut, maint,
+            gcGraceMs = 0L,
+            retainSnapshots = graft.streaming.DeltaCompact.PreserveRetention)
+          maint.await(lexOut)
+        })
+    } finally maint.close()
 
     // serve purely off the folded artifacts, through the registry
     // kernels; the two branch checkpoints are independent (lex docs tree

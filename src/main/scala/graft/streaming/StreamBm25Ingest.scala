@@ -266,36 +266,28 @@ object StreamBm25Ingest {
     man
   }
 
-  /** The lexical delete-maintenance DECIDE: pending corpus tombstones ⇒
-    * [[rebuildIndex]], else nothing. The decide is one metadata listing,
-    * cheap enough to run every batch (the [[AnnMaintenance.lshStep]]
-    * cadence discipline); the act is paid only when deletes actually
-    * landed. Returns whether a rebuild fired. */
-  def maintainIndex(s: SparkSession, outDir: String): Boolean = {
-    val pending = DeltaCompact.listPendingTombstoneBatches(
-      s"$outDir/docs", s.sparkContext.hadoopConfiguration)
-    if (pending.isEmpty) false
-    else { rebuildIndex(s, outDir); true }
-  }
-
-  /** [[maintainIndex]] with the ACT DETACHED: the DECIDE (one metadata
-    * listing) stays on the ingest path, but a fired rebuild is submitted
-    * to `maintainer` and staged OFF-path — ingest keeps landing batches
-    * above the fold watermark, serves keep merging the committed index,
-    * and the swap is the rebuild's atomic generation commit. At most one
-    * rebuild per tree is in flight (the [[DetachedMaintainer]] guard);
-    * while one runs, this is a no-op. Quiesce with
-    * `maintainer.await(outDir)` before an end-of-run fold.
+  /** The lexical delete-maintenance step: pending corpus tombstones ⇒
+    * [[rebuildIndex]], else nothing. The DECIDE is one metadata listing
+    * on the caller's thread, cheap enough to run every batch (the
+    * [[AnnMaintenance.lshStep]] cadence discipline); a fired rebuild is
+    * submitted to `maintainer` and staged OFF-path — ingest keeps landing
+    * batches above the fold watermark, serves keep merging the committed
+    * index, and the swap is the rebuild's atomic generation commit. At
+    * most one rebuild per tree is in flight (the [[DetachedMaintainer]]
+    * guard); while one runs, this is a no-op. Returns whether a rebuild
+    * was submitted; a caller that needs it finished (an end-of-run fold)
+    * calls `maintainer.await(outDir)`.
     *
-    * `gcGraceMs` defaults to [[DeltaCompact.StagingTtlMs]]: a detached
-    * rebuild's post-commit sweep must not yank delta directories that a
-    * concurrent ingest read-back or serve plan still lists (the grace
-    * contract on [[DeltaCompact.compact]]).
+    * `gcGraceMs` defaults to [[DeltaCompact.StagingTtlMs]]: a rebuild's
+    * post-commit sweep must not yank delta directories that a concurrent
+    * ingest read-back or serve plan still lists (the grace contract on
+    * [[DeltaCompact.compact]]). A caller with no concurrent reader passes
+    * 0 to GC at the commit.
     *
     * `beforeAct` runs on the maintainer thread before the rebuild — the
     * injection point DetachedMaintainerSpec uses to slow the ACT and
     * prove cadence/serve isolation; production callers leave it. */
-  def maintainIndexDetached(s: SparkSession, outDir: String,
+  def maintainIndex(s: SparkSession, outDir: String,
       maintainer: DetachedMaintainer,
       gcGraceMs: Long = DeltaCompact.StagingTtlMs,
       retainSnapshots: Int = DeltaCompact.PreserveRetentionDetached,

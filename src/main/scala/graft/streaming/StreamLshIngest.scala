@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ingest-time LSH indexing, micro-batch by micro-batch: land the batch
-  * shard-partitioned ([[StreamShardRouter]], idempotent replay), read the
-  * LANDED files back, and expand each landed vector into its multi-table
-  * LSH posting rows — the corpus side of `q_knn_lsh`'s index.
+  * shard-partitioned ([[StreamShardRouter]], idempotent replay) and,
+  * side by side, expand each of its vectors into its multi-table LSH
+  * posting rows — the corpus side of `q_knn_lsh`'s index.
   *
   * This is the training-free counterpart of [[StreamAnnIngest]]: the ivf2
   * chain must wait for (or periodically retrain) a frozen leaf codebook
@@ -18,48 +18,37 @@ import org.apache.spark.sql.functions._
   * (StreamLshIngestSpec) rather than approximate.
   *
   * Scale shape per batch: one narrow shard projection + partitioned file
-  * write (the only exchange), one file read of exactly the landed batch,
-  * then a per-row ×tables posting fan-out with NO shuffle — history is
-  * never re-touched, so per-batch cost tracks batch size at any corpus
-  * scale. Folding the per-batch posting deltas into the serve layout
+  * write for the corpus, and a per-row ×tables posting fan-out behind the
+  * same shard exchange for the postings delta — history is never
+  * re-touched, so per-batch cost tracks batch size at any corpus scale.
+  * Folding the per-batch posting deltas into the serve layout
   * (`tb_hi`-partitioned, tb-sorted) is [[DeltaCompact]]'s generation
   * fold, same as the ivf2 path.
   */
 object StreamLshIngest {
 
   /** One ingest micro-batch: land `batch` under
-    * `outDir/batch=<id>/shard_id=<k>/` and return the landed rows'
-    * LSH posting expansion — (tb, neighbor_id, embedding), the
-    * postings-append of this batch. `batch` needs (doc_id, vec_id,
-    * label, embedding) like the router's other callers.
+    * `outDir/batch=<id>/shard_id=<k>/` and its LSH posting expansion —
+    * (tb, neighbor_id, embedding), the postings-append of this batch — as
+    * the `idxDir/batch=<id>` delta ([[landPostingsDelta]]). `batch` needs
+    * (doc_id, vec_id, label, embedding) like the router's other callers.
+    *
+    * The two landings derive from the SAME batch rows and write DISTINCT
+    * trees, so they run OVERLAPPED from driver threads (guide §2.6, r17 —
+    * the `StreamBm25Ingest.ingestStep` pattern). Posting rows are computed
+    * from `batch` directly — landBatch writes exactly `withShard(batch)`
+    * and [[graft.operators.Similarity.lshPostings]] projects
+    * (vec_id, embedding) only, so postings-from-batch ≡
+    * postings-from-landed row for row — with the landing's own shard
+    * co-location exchange, so the plane-projection expansion still fans
+    * out across `numShards` tasks when the batch source is one
+    * unsplittable file.
     *
     * `geometry`: the expansion's (tables, bits) — MUST match the serving
     * index's committed geometry (postings at different bit widths cannot
     * share one bucket space), so geometry-refreshed pipelines pass
     * [[readGeometry]]'s answer per batch. Defaults to the registry
     * constants, the pre-refresh geometry of every tree. */
-  def ingestStep(batch: DataFrame, outDir: String, batchId: Long,
-      numShards: Int = 16,
-      geometry: LshGeometry = DefaultGeometry): DataFrame = {
-    val dir = StreamShardRouter.landBatch(batch, outDir, batchId, numShards)
-    val landed = batch.sparkSession.read.parquet(dir)
-    graft.operators.Similarity.lshPostings(landed, geometry.tables, geometry.bits)
-  }
-
-  /** [[ingestStep]] + [[landPostingsDelta]] with the two landings
-    * OVERLAPPED from driver threads (guide §2.6, r17 — the
-    * `StreamBm25Ingest.ingestStep` pattern): the corpus batch landing
-    * and the posting-delta landing derive from the SAME batch rows and
-    * write DISTINCT trees, so neither needs the other's output.
-    * Posting rows are computed from `batch` directly — landBatch writes
-    * exactly `withShard(batch)` and [[graft.operators.Similarity
-    * .lshPostings]] projects (vec_id, embedding) only, so
-    * postings-from-batch ≡ postings-from-landed row for row — with the
-    * landing's own shard co-location exchange, so the plane-projection
-    * expansion still fans out across `numShards` tasks when the batch
-    * source is one unsplittable file. For callers that need the
-    * postings frame itself (refresh decisions, specs), [[ingestStep]]
-    * is unchanged. */
   def ingestAndLand(batch: DataFrame, outDir: String, idxDir: String,
       batchId: Long, numShards: Int = 16,
       geometry: LshGeometry = DefaultGeometry): Unit = {
@@ -75,12 +64,6 @@ object StreamLshIngest {
         ()
       })
   }
-
-  /** tb_hi domain size (tables × 2^(bits − dirShift)) — the serve
-    * layout's directory count, derived from the SAME geometry constants
-    * the serve kernels use so the streaming delta layout can never
-    * silently diverge from the serve layout. */
-  private val NumDirKeys = graft.operators.Similarity.lshDirKeyDomain
 
   /** Land one batch's POSTING rows as a delta under an
     * overwrite-idempotent `batch=<id>` directory: plain parquet files,

@@ -88,8 +88,7 @@ class DetachedLifecycleSoakSpec extends SparkSpec {
     try {
       (0 until nBatches).foreach { i =>
         val b = batchDf(i, rowsPerBatch)
-        val p = StreamLshIngest.ingestStep(b, corpusDir, i.toLong)
-        StreamLshIngest.landPostingsDelta(p, idxDir, i.toLong)
+        StreamLshIngest.ingestAndLand(b, corpusDir, idxDir, i.toLong)
         landed ++= b.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getInt(2), r.getSeq[Float](3).toArray))
 
@@ -114,7 +113,7 @@ class DetachedLifecycleSoakSpec extends SparkSpec {
         // runs DETACHED (slowed so it overlaps later batches); while one
         // is in flight, pressured batches must no-op.
         val busyBefore = m.isBusy(idxDir)
-        val fired = AnnMaintenance.lshStepDetached(s, corpusDir, idxDir, m,
+        val fired = AnnMaintenance.lshStep(s, corpusDir, idxDir, m,
           autoSize = false, gcGraceMs = gcGraceMs,
           beforeAct = () => Thread.sleep(actSleepMs))
         if (fired) actsFired += 1

@@ -50,8 +50,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       // two landed batches + posting deltas at the registry geometry
       (0 until 2).foreach { i =>
         val b = emb.filter(col("vec_id") % 3 === i)
-        val p = StreamLshIngest.ingestStep(b, corpusDir, i.toLong)
-        StreamLshIngest.landPostingsDelta(p, idxDir, i.toLong)
+        StreamLshIngest.ingestAndLand(b, corpusDir, idxDir, i.toLong)
       }
       // a ~1/7 takedown on both trees — pressure over the 5% floor
       val doomed = DeltaCompact.readCorpus(s, corpusDir)
@@ -65,7 +64,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       // the injected stand-in for a multi-trigger-interval rebuild
       val actStarted = new CountDownLatch(1)
       val release = new CountDownLatch(1)
-      val fired = AnnMaintenance.lshStepDetached(s, corpusDir, idxDir, m,
+      val fired = AnnMaintenance.lshStep(s, corpusDir, idxDir, m,
         autoSize = false,
         beforeAct = () => {
           actStarted.countDown()
@@ -78,13 +77,12 @@ class DetachedMaintainerSpec extends SparkSpec {
       // (a) CADENCE: batch 2 lands on both trees WHILE the ACT blocks —
       // the ingest loop is not stalled by the running rebuild
       val b2 = emb.filter(col("vec_id") % 3 === 2)
-      val p2 = StreamLshIngest.ingestStep(b2, corpusDir, 2L)
-      StreamLshIngest.landPostingsDelta(p2, idxDir, 2L)
+      StreamLshIngest.ingestAndLand(b2, corpusDir, idxDir, 2L)
       assert(m.isBusy(idxDir), "the ACT must still be running after the land")
 
       // while one ACT is in flight, the next DECIDE is a cheap no-op —
       // no redundant rebuild piles up behind the running one
-      assert(!AnnMaintenance.lshStepDetached(s, corpusDir, idxDir, m,
+      assert(!AnnMaintenance.lshStep(s, corpusDir, idxDir, m,
         autoSize = false))
 
       // (b) SERVE ISOLATION: the pointer has not moved (no generation
@@ -126,7 +124,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       // DECIDE does not re-fire
       assert(DeltaCompact.listPendingTombstoneBatches(idxDir,
         s.sparkContext.hadoopConfiguration).isEmpty)
-      assert(!AnnMaintenance.lshStepDetached(s, corpusDir, idxDir, m,
+      assert(!AnnMaintenance.lshStep(s, corpusDir, idxDir, m,
         autoSize = false))
     } finally {
       m.close()
@@ -147,7 +145,7 @@ class DetachedMaintainerSpec extends SparkSpec {
         StreamBm25Ingest.ingestStep(
           docs.filter(col("doc_id") % 3 === i), out, i.toLong)
       }
-      assert(!StreamBm25Ingest.maintainIndexDetached(s, out, m)) // no pressure
+      assert(!StreamBm25Ingest.maintainIndex(s, out, m)) // no pressure
 
       DeltaCompact.landTombstones(
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")),
@@ -155,7 +153,7 @@ class DetachedMaintainerSpec extends SparkSpec {
 
       val actStarted = new CountDownLatch(1)
       val release = new CountDownLatch(1)
-      val fired = StreamBm25Ingest.maintainIndexDetached(s, out, m,
+      val fired = StreamBm25Ingest.maintainIndex(s, out, m,
         beforeAct = () => {
           actStarted.countDown()
           assert(release.await(600, TimeUnit.SECONDS), "spec never released the ACT")
@@ -168,7 +166,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       val more = docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 7 =!= 3)
       StreamBm25Ingest.ingestStep(more, out, 2L)
       assert(m.isBusy(out))
-      assert(!StreamBm25Ingest.maintainIndexDetached(s, out, m)) // busy → no-op
+      assert(!StreamBm25Ingest.maintainIndex(s, out, m)) // busy → no-op
 
       // (b) SERVE ISOLATION: no index generation committed yet — the
       // merge still reads the landed partials (the delete's effect waits
@@ -197,7 +195,7 @@ class DetachedMaintainerSpec extends SparkSpec {
         .collect().toSet
       assert(got === expect,
         "detached rebuild + merge diverged from the batch build over survivors")
-      assert(!StreamBm25Ingest.maintainIndexDetached(s, out, m)) // quiet again
+      assert(!StreamBm25Ingest.maintainIndex(s, out, m)) // quiet again
     } finally {
       m.close()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -225,18 +223,18 @@ class DetachedMaintainerSpec extends SparkSpec {
     val m = new DetachedMaintainer("dm-spec-cb")
     try {
       // bootstrap is synchronous by definition (nothing to serve yet)
-      val (_, boot) = AnnMaintenance.stepDetached(
+      val (_, boot) = AnnMaintenance.step(
         vecs(0, 40, _ % 4), corpusDir, idxDir, 0L, m)
       assert(boot)
       // healthy batch: no ACT
-      val (a1, f1) = AnnMaintenance.stepDetached(
+      val (a1, f1) = AnnMaintenance.step(
         vecs(40, 80, _ % 4), corpusDir, idxDir, 1L, m)
       assert(!f1 && agreement(a1) === 1.0)
 
       // drifted batch fires the DETACHED retrain; hold it open
       val actStarted = new CountDownLatch(1)
       val release = new CountDownLatch(1)
-      val (a2, f2) = AnnMaintenance.stepDetached(
+      val (a2, f2) = AnnMaintenance.step(
         vecs(80, 120, _ => 4), corpusDir, idxDir, 2L, m,
         beforeAct = () => {
           actStarted.countDown()
@@ -250,7 +248,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       // cadence + old-codebook isolation: the NEXT drifted batch lands
       // and assigns while the retrain still runs — against the OLD
       // codebook, and without piling a second ACT behind the first
-      val (a3, f3) = AnnMaintenance.stepDetached(
+      val (a3, f3) = AnnMaintenance.step(
         vecs(120, 160, _ => 4), corpusDir, idxDir, 3L, m)
       assert(!f3, "at-most-one-in-flight: no second ACT while one runs")
       assert(agreement(a3) === 0.0, "still the old codebook until the cut-over")
@@ -260,7 +258,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       m.await(idxDir)
 
       // post-cut-over: the same drifted distribution is now healthy
-      val (a4, f4) = AnnMaintenance.stepDetached(
+      val (a4, f4) = AnnMaintenance.step(
         vecs(160, 200, _ => 4), corpusDir, idxDir, 4L, m)
       assert(!f4, "the refresh healed the distribution — no further ACT")
       assert(agreement(a4) === 1.0)
@@ -280,8 +278,7 @@ class DetachedMaintainerSpec extends SparkSpec {
     try {
       (0 until 2).foreach { i =>
         val b = emb.filter(col("vec_id") % 3 === i)
-        val p = StreamLshIngest.ingestStep(b, corpusDir, i.toLong)
-        StreamLshIngest.landPostingsDelta(p, idxDir, i.toLong)
+        StreamLshIngest.ingestAndLand(b, corpusDir, idxDir, i.toLong)
       }
       // generation 0 commits SYNCHRONOUSLY (pre-maintenance baseline)
       StreamLshIngest.refreshGeometry(s, corpusDir, idxDir,
@@ -302,7 +299,7 @@ class DetachedMaintainerSpec extends SparkSpec {
       StreamLshIngest.landTombstones(
         doomed.select(col("vec_id").as("neighbor_id")), idxDir, 0L,
         watermark = Some(1L))
-      assert(AnnMaintenance.lshStepDetached(s, corpusDir, idxDir, m,
+      assert(AnnMaintenance.lshStep(s, corpusDir, idxDir, m,
         autoSize = false))
       m.await(idxDir)
 

@@ -35,8 +35,7 @@ class LshRefreshCrashRaceSpec extends SparkSpec {
     val idxDir = s"$base/idx"
     try {
       val b0 = emb.filter(col("vec_id") % 2 === 0)
-      StreamLshIngest.landPostingsDelta(
-        StreamLshIngest.ingestStep(b0, corpusDir, 0L), idxDir, 0L)
+      StreamLshIngest.ingestAndLand(b0, corpusDir, idxDir, 0L)
       val man0 = StreamLshIngest.compactPostings(s, idxDir)
       val geom0 = StreamLshIngest.readGeometry(s, idxDir)
       val served0 = StreamLshIngest.readPostings(s, idxDir).count()
@@ -45,8 +44,7 @@ class LshRefreshCrashRaceSpec extends SparkSpec {
       // its postings AND its (wider) geometry sidecar, before the claim
       // rename. Reconstruct exactly that staging state.
       val b1 = emb.filter(col("vec_id") % 2 === 1)
-      StreamLshIngest.landPostingsDelta(
-        StreamLshIngest.ingestStep(b1, corpusDir, 1L), idxDir, 1L)
+      StreamLshIngest.ingestAndLand(b1, corpusDir, idxDir, 1L)
       val orphan = s"$idxDir/_staging/gen=${man0.gen + 1}.killed-refresh"
       Similarity.lshPostings(emb, geom0.tables, geom0.bits + 1)
         .withColumn("shard_id", lit(0))

@@ -96,13 +96,11 @@ class MultiTreeDetachedSoakSpec extends SparkSpec {
       (0 until nBatches).foreach { i =>
         // land one batch into each tree
         val bA = vecBatch(i, 30, 0L)
-        StreamLshIngest.landPostingsDelta(
-          StreamLshIngest.ingestStep(bA, corpusA, i.toLong), idxA, i.toLong)
+        StreamLshIngest.ingestAndLand(bA, corpusA, idxA, i.toLong)
         landedA ++= bA.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getInt(2), r.getSeq[Float](3).toArray))
         val bB = vecBatch(i, 30, 10000000L)
-        StreamLshIngest.landPostingsDelta(
-          StreamLshIngest.ingestStep(bB, corpusB, i.toLong), idxB, i.toLong)
+        StreamLshIngest.ingestAndLand(bB, corpusB, idxB, i.toLong)
         landedB ++= bB.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getInt(2), r.getSeq[Float](3).toArray))
         val dC = docBatch(i, 20)
@@ -146,13 +144,13 @@ class MultiTreeDetachedSoakSpec extends SparkSpec {
         // beforeAct sleeps hold each fired ACT long enough that an
         // aligned cycle's third submission must QUEUE behind the cap.
         val hold = () => Thread.sleep(1200L)
-        if (AnnMaintenance.lshStepDetached(s, corpusA, idxA, m,
+        if (AnnMaintenance.lshStep(s, corpusA, idxA, m,
           autoSize = false, gcGraceMs = DeltaCompact.StagingTtlMs,
           beforeAct = hold)) actsFired += 1
-        if (AnnMaintenance.lshStepDetached(s, corpusB, idxB, m,
+        if (AnnMaintenance.lshStep(s, corpusB, idxB, m,
           autoSize = false, gcGraceMs = DeltaCompact.StagingTtlMs,
           beforeAct = hold)) actsFired += 1
-        if (StreamBm25Ingest.maintainIndexDetached(s, outC, m,
+        if (StreamBm25Ingest.maintainIndex(s, outC, m,
           beforeAct = hold)) actsFired += 1
 
         // observe the cap: poll for the 2-running + 1-queued instant via
@@ -202,11 +200,11 @@ class MultiTreeDetachedSoakSpec extends SparkSpec {
 
       // apply any takedown that landed after a tree's last ACT, so each
       // final state is deterministic; then: final ≡ synchronous composition
-      if (AnnMaintenance.lshStepDetached(s, corpusA, idxA, m,
+      if (AnnMaintenance.lshStep(s, corpusA, idxA, m,
         autoSize = false, gcGraceMs = DeltaCompact.StagingTtlMs)) m.await(idxA)
-      if (AnnMaintenance.lshStepDetached(s, corpusB, idxB, m,
+      if (AnnMaintenance.lshStep(s, corpusB, idxB, m,
         autoSize = false, gcGraceMs = DeltaCompact.StagingTtlMs)) m.await(idxB)
-      if (StreamBm25Ingest.maintainIndexDetached(s, outC, m)) m.await(outC)
+      if (StreamBm25Ingest.maintainIndex(s, outC, m)) m.await(outC)
 
       assert(postingSet(StreamLshIngest.readPostingsLive(s, idxA)) ===
         postingSet(Similarity.lshPostings(toVecDf(liveA))),

@@ -47,8 +47,7 @@ class StreamLshCompactSpec extends SparkSpec {
         .foreachBatch { (b: DataFrame, id: Long) =>
           val batch = b.withColumn("doc_id", col("vec_id"))
             .select("doc_id", "vec_id", "label", "embedding")
-          val postings = StreamLshIngest.ingestStep(batch, docsDir, id)
-          StreamLshIngest.landPostingsDelta(postings, idxDir, id)
+          StreamLshIngest.ingestAndLand(batch, docsDir, idxDir, id)
           // worst at-least-once window: delta landed, offsets uncommitted
           if (crashOnBatch.contains(id))
             throw new RuntimeException(s"injected crash after landing batch $id")

@@ -2,13 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.operators.Similarity
 
-/** The ingest-time LSH indexing path (land → read back → posting
-  * expansion): per-batch postings must be IDENTICAL to expanding the same
+/** The ingest-time LSH indexing path ([[StreamLshIngest.ingestAndLand]]:
+  * corpus landing ∥ posting-delta landing): the streamed postings, read
+  * back from the landed deltas, must be IDENTICAL to expanding the same
   * rows in one batch — the planes are constants and the expansion a pure
   * per-row function, so micro-batching and the disk round-trip must not
   * change one posting bit. This is the evidence behind the "index ready
@@ -29,8 +30,8 @@ class StreamLshIngestSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).sorted
 
     val outDir = Files.createTempDirectory("graft_lshspec").toFile
+    val idxDir = Files.createTempDirectory("graft_lshspec_idx").toFile
     try {
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[Row]
       val tablePath = s"$sf/embeddings.parquet"
       val reader = s.readStream.schema(Tables.embeddings(s, sf).schema)
       val src =
@@ -43,16 +44,15 @@ class StreamLshIngestSpec extends SparkSpec {
         .writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) =>
-          StreamLshIngest.ingestStep(b, outDir.getAbsolutePath, id)
-            .select("neighbor_id", "tb").collect().foreach(got.add)
-          ()
+          StreamLshIngest.ingestAndLand(b, outDir.getAbsolutePath,
+            idxDir.getAbsolutePath, id)
         }
         .start()
       q.awaitTermination()
 
-      import scala.jdk.CollectionConverters._
-      val gotSorted = got.asScala.toSeq
-        .map(r => (r.getLong(0), r.getLong(1))).sorted
+      val gotSorted = StreamLshIngest.readPostings(s, idxDir.getAbsolutePath)
+        .select("neighbor_id", "tb").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(gotSorted.nonEmpty)
       assert(gotSorted === expect.toSeq,
         "streamed posting expansion diverged from the batch twin")
@@ -69,6 +69,7 @@ class StreamLshIngestSpec extends SparkSpec {
         "landed batches are not shard-partitioned")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(outDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(idxDir)
     }
   }
 }
