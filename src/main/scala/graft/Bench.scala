@@ -197,25 +197,25 @@ object Bench {
     // fresh index.
     def onceOr(label: String)(f: => Unit): Double = timedOr(label, runs = 1)(f)
     val ivfBuildSec = onceOr("knn_ivf_persist_build") {
-      operators.Similarity.rebuildIvfIndex(spark, sfDir); ()
+      operators.Similarity.ivfIndex.rebuild(spark, sfDir); ()
     }
     val ivfServeSec = timedOr("knn_ivf_persist_serve")(force(
       SparkEntry.registry.find(_.name == "q_knn_ivf_persist").get.build(spark, sfDir)))
     progress(f"knn_ivf_persist build: $ivfBuildSec%.2fs, serve: $ivfServeSec%.2fs")
     val ivf2BuildSec = onceOr("knn_ivf2_persist_build") {
-      operators.Similarity.rebuildIvf2Index(spark, sfDir); ()
+      operators.Similarity.ivf2Persisted.rebuild(spark, sfDir); ()
     }
     val ivf2ServeSec = timedOr("knn_ivf2_persist_serve")(force(
       SparkEntry.registry.find(_.name == "q_knn_ivf2_persist").get.build(spark, sfDir)))
     progress(f"knn_ivf2_persist build: $ivf2BuildSec%.2fs, serve: $ivf2ServeSec%.2fs")
     val lshBuildSec = onceOr("knn_lsh_persist_build") {
-      operators.Similarity.rebuildLshIndex(spark, sfDir); ()
+      operators.Similarity.lshIndex.rebuild(spark, sfDir); ()
     }
     val lshServeSec = timedOr("knn_lsh_persist_serve")(force(
       SparkEntry.registry.find(_.name == "q_knn_lsh_persist").get.build(spark, sfDir)))
     progress(f"knn_lsh_persist build: $lshBuildSec%.2fs, serve: $lshServeSec%.2fs")
     val ivfPqBuildSec = onceOr("knn_ivf_pq_persist_build") {
-      operators.Similarity.rebuildIvfPqIndex(spark, sfDir); ()
+      operators.Similarity.ivfPqIndex.rebuild(spark, sfDir); ()
     }
     val ivfPqServeSec = timedOr("knn_ivf_pq_persist_serve")(force(
       SparkEntry.registry.find(_.name == "q_knn_ivf_pq_persist").get.build(spark, sfDir)))
@@ -231,9 +231,9 @@ object Bench {
           .getContentSummary(p).getLength
       } catch { case scala.util.control.NonFatal(_) => -1L }
     val ivfPostingsBytes =
-      duBytes(s"${operators.Similarity.ivfIndexDir(spark, sfDir)}/postings")
+      duBytes(s"${operators.Similarity.ivfIndex.dir(spark, sfDir)}/postings")
     val ivfPqPostingsBytes =
-      duBytes(s"${operators.Similarity.ivfPqIndexDir(spark, sfDir)}/postings")
+      duBytes(s"${operators.Similarity.ivfPqIndex.dir(spark, sfDir)}/postings")
     progress(f"knn_ivf_pq_persist build: $ivfPqBuildSec%.2fs, serve: " +
       f"$ivfPqServeSec%.2fs; postings bytes ivf=$ivfPostingsBytes " +
       f"pq=$ivfPqPostingsBytes")
@@ -245,7 +245,7 @@ object Bench {
     // shape end-to-end: both branches reading landed artifacts, fusion
     // on their top-k outputs, zero in-flight index construction.
     val bm25BuildSec = onceOr("hybrid_bm25_persist_build") {
-      operators.TextAnalysis.rebuildBm25Index(spark, sfDir); ()
+      operators.TextAnalysis.bm25Persisted.rebuild(spark, sfDir); ()
     }
     val hybridServeSec = timedOr("hybrid_persist_serve")(force(
       SparkEntry.registry.find(_.name == "q_hybrid_rrf_persist").get.build(spark, sfDir)))
@@ -660,10 +660,7 @@ object Bench {
       val cents = operators.Similarity.ivf2LeafCentroids(spark, sfDir).localCheckpoint()
       // same /tmp hygiene as the other graft roots: dead-pid dirs from
       // crashed benches are reaped here (age-floored), ours deleted below
-      val annPid = ProcessHandle.current().pid()
-      operators.TmpDirs.reap("/tmp/graft_annleg", annPid,
-        operators.TmpDirs.runPrefixPid)
-      val outDir = s"/tmp/graft_annleg/run_${annPid}_${System.nanoTime()}"
+      val outDir = operators.TmpDirs.runDir("graft_annleg")
       val rowsAssigned = new java.util.concurrent.atomic.AtomicLong(0)
       val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
       import org.apache.spark.sql.functions._

@@ -35,7 +35,8 @@ object ScaleSmoke {
         (col("doc_id") + lit(k * nDocs)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", s"c$k$$1").as("text"),
         col("lang"), col("source"),
-        length(regexp_replace(col("text"), "(\\S+)", s"c$k$$1")).as("n_chars"))
+        length(regexp_replace(col("text"), "(\\S+)", s"c$k$$1")).cast("long")
+          .as("n_chars"))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 

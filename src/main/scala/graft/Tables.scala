@@ -118,6 +118,21 @@ object Tables {
     s.read.parquet(s"$d/documents.parquet")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
+  /** Table `name` replayed as a file-source stream. The source wants a
+    * DIRECTORY: a Spark-written table at `$d/<name>.parquet` IS one and
+    * is streamed directly; the generated testdata ships each table as a
+    * single FILE, which the source rejects as a basePath, so the sf dir
+    * is streamed filtered down to that one leaf file instead. (A bare
+    * `pathGlobFilter` on a directory-layout table matches NO leaf file
+    * and silently streams zero rows — caught by the 10× smoke, whose
+    * synthesized corpus is directory-layout.) */
+  def readStream(s: SparkSession, d: String, name: String): DataFrame = {
+    val path = s"$d/$name.parquet"
+    val reader = s.readStream.schema(s.read.parquet(path).schema)
+    if (new java.io.File(path).isDirectory) reader.parquet(path)
+    else reader.option("pathGlobFilter", s"$name.parquet").parquet(d)
+  }
+
   /** Expected (column, Spark simpleString dtype) per table. Time/timestamp
     * columns may legitimately drift in physical type across testdata
     * regenerations (the loaders adapt — events.ts has shipped as

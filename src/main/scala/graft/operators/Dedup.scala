@@ -887,8 +887,6 @@ object Dedup {
     * components ≈ Jaccard ≥ 0.5 (k/8 is binary-exact in both engines). */
   private val NeardupMinEst = 0.5
 
-  private val neardupPersistDone = scala.collection.mutable.Set.empty[String]
-
   private def mhNames: Seq[String] = (0 until NumHashes).map(i => s"mh$i")
 
   /** Wide band columns from a signature frame — the [[qMinhashBands]]
@@ -913,20 +911,14 @@ object Dedup {
     * buckets carry no near-dup signal and would expand quadratically),
     * and land the posting rows range-partitioned + sorted on (band_id,
     * bhash) so probe-side row-group min/max skipping works. Memoized per
-    * (data fingerprint, pid) like `ensureBm25Index`. */
-  private[graft] def ensureNeardupIndex(s: SparkSession, d: String): String = synchronized {
-    val pid = ProcessHandle.current().pid()
-    val dir = s"/tmp/graft_neardup/${Similarity.dataFingerprint(s"$d/documents.parquet")}_$pid"
-    if (!neardupPersistDone(dir)) {
-      TmpDirs.reap("/tmp/graft_neardup", pid, TmpDirs.pidSuffix)
+    * (data fingerprint, pid) like `TextAnalysis.bm25Persisted`. */
+  private[graft] val neardupIndex = TmpDirs.BuildOnce("graft_neardup", "documents") {
+    (s, d, dir) =>
       buildNeardupIndex(
         Tables.documents(s, d)
           .filter(col("doc_id") % IncomingMod =!= IncomingRem)
           .select(col("doc_id"), col("text")),
         dir)
-      neardupPersistDone += dir
-    }
-    dir
   }
 
   /** The build kernel over an ARBITRARY corpus frame (doc_id, text) —
@@ -1033,7 +1025,7 @@ object Dedup {
          |   FROM est WHERE est >= $NeardupMinEst)
          |WHERE rn = 1""".stripMargin
     }) { (s, d) =>
-    neardupServe(s, ensureNeardupIndex(s, d),
+    neardupServe(s, neardupIndex.dir(s, d),
       Tables.documents(s, d)
         .filter(col("doc_id") % IncomingMod === IncomingRem)
         .select(col("doc_id"), col("text")))
@@ -1052,8 +1044,6 @@ object Dedup {
   // signature verdicts them INDEX-ONLY (one bit_count(xor)), corpus text
   // never read at serve.
 
-  private val simhashPersistDone = scala.collection.mutable.Set.empty[String]
-
   /** 60-bit / 4×15 geometry — the scale-safe parameterization
     * ([[simhashPairsQ]]); Hamming ≤ 3 is the pigeonhole-covered radius. */
   private val ShBits = 60
@@ -1066,12 +1056,9 @@ object Dedup {
       s"stack(4, ${(0 until 4).map(b =>
         s"$b, shiftright(simhash, ${ShBandBits * b}) % ${1L << ShBandBits}").mkString(", ")}) AS (band_id, band)")
 
-  private[graft] def ensureSimhashIndex(s: SparkSession, d: String): String = synchronized {
-    val pid = ProcessHandle.current().pid()
-    val dir = s"/tmp/graft_simhashidx/${Similarity.dataFingerprint(s"$d/documents.parquet")}_$pid"
-    if (!simhashPersistDone(dir)) {
+  private[graft] val simhashIndex = TmpDirs.BuildOnce("graft_simhashidx", "documents") {
+    (s, d, dir) =>
       GraftFunctions.register(s)
-      TmpDirs.reap("/tmp/graft_simhashidx", pid, TmpDirs.pidSuffix)
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") % IncomingMod =!= IncomingRem)
         .select(col("doc_id"), col("text"))
@@ -1086,9 +1073,6 @@ object Dedup {
         .repartitionByRange(col("band_id"), col("band"))
         .sortWithinPartitions("band_id", "band")
         .write.mode("overwrite").parquet(s"$dir/bands")
-      simhashPersistDone += dir
-    }
-    dir
   }
 
   /** Serve gate: the incoming batch fingerprints itself, band-joins the
@@ -1120,7 +1104,7 @@ object Dedup {
          |WHERE rn = 1""".stripMargin
     }) { (s, d) =>
     GraftFunctions.register(s)
-    val dir = ensureSimhashIndex(s, d)
+    val dir = simhashIndex.dir(s, d)
     val idx = s.read.parquet(s"$dir/bands")
     val incoming = Tables.documents(s, d)
       .filter(col("doc_id") % IncomingMod === IncomingRem)
@@ -1143,8 +1127,6 @@ object Dedup {
     * mod this — deterministic membership AND order, interpolated into
     * the oracle's earlier-batch predicate). */
   private val StreamBatches = 4
-
-  private val neardupStreamRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The streamed crawl-dedup loop as ONE oracle gate: the corpus
     * replayed as [[StreamBatches]] ordered batches through
@@ -1189,12 +1171,7 @@ object Dedup {
     }) { (s, d) =>
     GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val pid = ProcessHandle.current().pid()
-    val run = neardupStreamRunCounter.incrementAndGet()
-    val root = s"/tmp/graft_neardupstream/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_neardupstream", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
+    val root = TmpDirs.runDir("graft_neardupstream")
     val idx = s"$root/idx"
     val verdicts = (0 until StreamBatches).map { k =>
       val v = graft.streaming.StreamNeardupIngest.ingestStep(

@@ -667,13 +667,7 @@ object Features {
       |  FROM log)
       |SELECT k AS cust_key, v AS val FROM last
       |WHERE rn = 1 AND op = 'U'""".stripMargin) { (s, d) =>
-    val pid = ProcessHandle.current().pid()
-    val run = cdcRunCounter.incrementAndGet()
-    val root = s"/tmp/graft_cdcstream/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_cdcstream", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
-    val dir = s"$root/table"
+    val dir = s"${TmpDirs.runDir("graft_cdcstream")}/table"
     val log = Tables.orders(s, d).select(
       col("o_orderkey").as("seq"), col("o_custkey").as("doc_id"),
       round(col("o_totalprice"), 2).as("v"),
@@ -693,8 +687,6 @@ object Features {
       .select(col("doc_id").as("cust_key"), col("v").as("val"))
       .localCheckpoint()
   }
-
-  private val cdcRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Snapshot retention + time travel over the landed corpus — the
     * reproducibility primitive a training pipeline needs: "train on the
@@ -718,13 +710,7 @@ object Features {
       |SELECT 'snap0' AS snap, seq, k AS cust_key, v AS val FROM log WHERE b <= 2
       |UNION ALL
       |SELECT 'current' AS snap, seq, k AS cust_key, v AS val FROM log""".stripMargin) { (s, d) =>
-    val pid = ProcessHandle.current().pid()
-    val run = cdcRunCounter.incrementAndGet()
-    val root = s"/tmp/graft_timetravel/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_timetravel", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
-    val dir = s"$root/table"
+    val dir = s"${TmpDirs.runDir("graft_timetravel")}/table"
     val log = Tables.orders(s, d).select(
       col("o_orderkey").as("doc_id"), col("o_custkey").as("k"),
       round(col("o_totalprice"), 2).as("v"))

@@ -197,22 +197,17 @@ object Layout {
     (ot, ct)
   }
 
-  /** Idempotent per (JVM, sfDir): orders re-written partitioned by order
-    * month (`o_month=YYYY-MM/` directories). Returns the path. Memoized
-    * in-process, NOT via an on-disk marker: a marker would trust stale
-    * /tmp data from a previous run against regenerated testdata. */
-  private val partitionedDone = scala.collection.mutable.Set.empty[String]
-  private def ensurePartitioned(s: org.apache.spark.sql.SparkSession,
-      d: String): String = synchronized {
-    val path = s"/tmp/graft_layout/${tag(d)}/orders_by_month"
-    if (!partitionedDone(path)) {
+  /** Built once per (orders content, JVM): orders re-written partitioned
+    * by order month (`o_month=YYYY-MM/` directories) under
+    * `orders_by_month`. Its own root, not `/tmp/graft_layout`: the reaper
+    * deletes unparseable children, and [[ensureBucketed]]'s catalog
+    * tables live there. */
+  private val byMonth = TmpDirs.BuildOnce("graft_layout_bymonth", "orders") {
+    (s, d, dir) =>
       writePartitioned(
         Tables.orders(s, d)
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")),
-        "o_month", path)
-      partitionedDone += path
-    }
-    path
+        "o_month", s"$dir/orders_by_month")
   }
 
   /** Small-file compaction — the table-maintenance write every streaming
@@ -237,21 +232,16 @@ object Layout {
     nFiles
   }
 
-  /** Idempotent per (JVM, sfDir): events written fragmented (64 files —
-    * the small-file pathology) then compacted at a 1 MiB target. Returns
-    * the compacted path. */
-  private val compactedDone = scala.collection.mutable.Set.empty[String]
-  private def ensureCompacted(s: org.apache.spark.sql.SparkSession,
-      d: String): String = synchronized {
-    val frag = s"/tmp/graft_layout/${tag(d)}/events_fragmented"
-    val path = s"/tmp/graft_layout/${tag(d)}/events_compacted"
-    if (!compactedDone(path)) {
+  /** Built once per (events content, JVM): events written fragmented (64
+    * files — the small-file pathology) then compacted at a 1 MiB target
+    * into `events_compacted` (own root, as [[byMonth]]). */
+  private val compacted = TmpDirs.BuildOnce("graft_layout_compacted", "events") {
+    (s, d, dir) =>
       Tables.events(s, d).repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      compact(s, frag, path, targetBytes = 1L << 20)
-      compactedDone += path
-    }
-    path
+        .write.mode("overwrite").parquet(s"$dir/events_fragmented")
+      compact(s, s"$dir/events_fragmented", s"$dir/events_compacted",
+        targetBytes = 1L << 20)
+      ()
   }
 
   /** Aggregate over the compacted layout: values identical to the raw
@@ -268,7 +258,7 @@ object Layout {
       |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6)
       |    AS sum_value
       |FROM events GROUP BY event_type""".stripMargin) { (s, d) =>
-    s.read.parquet(ensureCompacted(s, d))
+    s.read.parquet(s"${compacted.dir(s, d)}/events_compacted")
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         round(sum(col("value").cast("decimal(18,6)")).cast("double"), 6)
@@ -307,8 +297,7 @@ object Layout {
       |  round(sum(o_totalprice), 2) AS revenue
       |FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1995-03'
       |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-    val path = ensurePartitioned(s, d)
-    s.read.parquet(path)
+    s.read.parquet(s"${byMonth.dir(s, d)}/orders_by_month")
       .filter(col("o_month") === "1995-03")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),

@@ -820,25 +820,8 @@ object TextAnalysis {
     import org.apache.spark.sql.types._
     // localCheckpoint: train ONCE, not once per micro-batch re-plan
     val model = nbModel(s, d).localCheckpoint()
-    val pid = ProcessHandle.current().pid()
-    val run = nbStreamRunCounter.incrementAndGet()
-    TmpDirs.reap("/tmp/graft_nbstream", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
-    val landDir = s"/tmp/graft_nbstream/run_${pid}_$run/scored"
-    // The file-stream source wants a DIRECTORY. A Spark-written table at
-    // $d/documents.parquet IS one — stream it directly. The driver
-    // testdata ships it as a single FILE, which the source rejects as a
-    // basePath — stream the sf dir filtered down to that one leaf file
-    // instead. (A bare pathGlobFilter on a directory-layout table matches
-    // NO leaf file and silently streams zero rows — caught by the 10×
-    // smoke, whose synthesized corpus is directory-layout.)
-    val tablePath = s"$d/documents.parquet"
-    val reader = s.readStream.schema(Tables.documents(s, d).schema)
-    val src =
-      if (new java.io.File(tablePath).isDirectory) reader.parquet(tablePath)
-      else reader.option("pathGlobFilter", "documents.parquet").parquet(d)
-    val q = src
+    val landDir = s"${TmpDirs.runDir("graft_nbstream")}/scored"
+    val q = Tables.readStream(s, d, "documents")
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -863,8 +846,6 @@ object TextAnalysis {
       StructField("predicted_pos", IntegerType)))
     s.read.schema(outSchema).parquet(landDir)
   }
-
-  private val nbStreamRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Calibration table for the trained NB source classifier: documents
     * bucketed by fixed-width score bin (LLR/20), each bin reporting how
@@ -1077,6 +1058,18 @@ object TextAnalysis {
         / count(lit(1)), 4).as("exact_dup_rate"))
   }
 
+  /** The per-shard audit oracle of [[qShardAssign]], [[qStreamShardRoute]]
+    * and [[qReshard]]: however the shards were landed, the audit must
+    * match the day-one batch routing. */
+  private val ShardAuditSql: String =
+    """SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15))
+      |    AS BIGINT) % 16 AS INT) AS shard_id,
+      |  CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+      |    AS n_tokens,
+      |  CAST(sum(n_chars) AS BIGINT) AS n_chars
+      |FROM documents GROUP BY 1""".stripMargin
+
   /** Deterministic training-shard assignment — the pipeline's final
     * "write the shards" step: every document routed to one of 16 shards
     * by the engine-portable content hash of its id, audited as per-shard
@@ -1089,15 +1082,7 @@ object TextAnalysis {
     * `.repartition(n, col("shard_id")).write.partitionBy("shard_id")` —
     * one narrow scan plus one 16-group map-side-combined aggregate here,
     * no extra pass. */
-  val qShardAssign: Q = Q(
-    "q_shard_assign",
-    """SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15))
-      |    AS BIGINT) % 16 AS INT) AS shard_id,
-      |  CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-      |    AS n_tokens,
-      |  CAST(sum(n_chars) AS BIGINT) AS n_chars
-      |FROM documents GROUP BY 1""".stripMargin) { (s, d) =>
+  val qShardAssign: Q = Q("q_shard_assign", ShardAuditSql) { (s, d) =>
     Tables.documents(s, d)
       .withColumn("shard_id",
         (Portable.hash60(col("doc_id").cast("string")) % 16).cast("int"))
@@ -1116,41 +1101,11 @@ object TextAnalysis {
     * files back into exactly [[qShardAssign]]'s per-shard audit — facing
     * the identical DuckDB oracle, so stream-route → disk → read-back is
     * pinned indistinguishable from the batch routing, hash-for-hash. */
-  private val shardRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
   val qStreamShardRoute: Q = Q(
-    "q_stream_shard_route", {
-      // same oracle as q_shard_assign (registered below); duplicated via
-      // reference at registration time
-      """SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15))
-        |    AS BIGINT) % 16 AS INT) AS shard_id,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |    AS n_tokens,
-        |  CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM documents GROUP BY 1""".stripMargin
-    }) { (s, d) =>
-    // per-JVM + per-build unique dir: two concurrent JVMs (bench + test)
-    // over the same dataset must not race on delete/write, and the
-    // sanitized-path collision (/data/x vs /data_x) can't alias runs
-    val pid = ProcessHandle.current().pid()
-    val run = shardRunCounter.incrementAndGet()
-    val outDir = s"/tmp/graft_shards/run_${pid}_$run"
-    // reap dirs of dead pids, plus this pid's dirs at least THREE builds
-    // old (their consumers have read back; keeping two prior generations
-    // covers a concurrently-building suite's or caller's still-lazy
-    // DataFrame) — bounds the per-JVM footprint at 3 routed-corpus copies
-    TmpDirs.reap("/tmp/graft_shards", pid,
-      TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
-    val schema = Tables.documents(s, d).schema
-    val tablePath = s"$d/documents.parquet"
-    val reader = s.readStream.schema(schema)
-    val src =
-      if (new java.io.File(tablePath).isDirectory) reader.parquet(tablePath)
-      else reader.option("pathGlobFilter", "documents.parquet").parquet(d)
-    val q = graft.streaming.StreamShardRouter.route(src, outDir)
+    "q_stream_shard_route", ShardAuditSql) { (s, d) =>
+    val outDir = TmpDirs.runDir("graft_shards")
+    val q = graft.streaming.StreamShardRouter.route(
+      Tables.readStream(s, d, "documents"), outDir)
     // a failed or interrupted await leaves no stream running
     try q.awaitTermination() finally if (q.isActive) q.stop()
     s.read.parquet(outDir)
@@ -1179,23 +1134,8 @@ object TextAnalysis {
     * ever invalidating downstream shard-addressed readers
     * (DeltaCompactReshardSpec covers stragglers, idempotence, and
     * delete composition; this gate pins the VALUES). */
-  private val reshardRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-  val qReshard: Q = Q(
-    "q_reshard",
-    """SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15))
-      |    AS BIGINT) % 16 AS INT) AS shard_id,
-      |  CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-      |    AS n_tokens,
-      |  CAST(sum(n_chars) AS BIGINT) AS n_chars
-      |FROM documents GROUP BY 1""".stripMargin) { (s, d) =>
-    val pid = ProcessHandle.current().pid()
-    val run = reshardRunCounter.incrementAndGet()
-    val outDir = s"/tmp/graft_reshard/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_reshard", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
+  val qReshard: Q = Q("q_reshard", ShardAuditSql) { (s, d) =>
+    val outDir = TmpDirs.runDir("graft_reshard")
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
       col("n_chars")).localCheckpoint()
     // two independent landings over a checkpointed source (distinct
@@ -1601,12 +1541,10 @@ object TextAnalysis {
 
   // ---- persisted BM25 index: build-once / serve-many for lexical retrieval ----
 
-  private val bm25PersistDone = scala.collection.mutable.Set.empty[String]
-
   /** Build-once half of the lexical build/serve split: the impact-capped
     * PARTIAL index (tok, kept min-k postings, true df) landed as parquet,
-    * memoized per (data fingerprint, pid) exactly like
-    * [[graft.operators.Similarity]]'s `ensureIvfIndex`/`ensureLshIndex`.
+    * built once per (data fingerprint, pid) exactly like
+    * [[graft.operators.Similarity]]'s `ivfIndex`/`lshIndex`.
     * The landed artifact is the SAME mergeable partial
     * [[graft.streaming.StreamBm25Ingest]] writes per batch — batch build
     * and streaming ingest land one format, so a serve path reads either
@@ -1616,11 +1554,8 @@ object TextAnalysis {
     * vocab × [[Bm25Cap]] postings — already corpus-size-INDEPENDENT in
     * row count (the impact cap), so serve cost is index-bound, never
     * corpus-bound. */
-  private[graft] def ensureBm25Index(s: SparkSession, d: String): String = synchronized {
-    val pid = ProcessHandle.current().pid()
-    val dir = s"/tmp/graft_bm25/${Similarity.dataFingerprint(s"$d/documents.parquet")}_$pid"
-    if (!bm25PersistDone(dir)) {
-      TmpDirs.reap("/tmp/graft_bm25", pid, TmpDirs.pidSuffix)
+  private[graft] val bm25Persisted = TmpDirs.BuildOnce("graft_bm25", "documents") {
+    (s, d, dir) =>
       val docs = Tables.documents(s, d)
       bm25Partial(bm25Postings(docs))
         .repartitionByRange(col("tok"))
@@ -1630,25 +1565,6 @@ object TextAnalysis {
       // touches the corpus: scoring needs (index, dl, query text) only
       docs.select(col("doc_id"), wordCountFloor1(col("text")).as("dl"))
         .write.mode("overwrite").parquet(s"$dir/dl")
-      bm25PersistDone += dir
-    }
-    dir
-  }
-
-  /** Bench hook: drop the memoized index for `d` and rebuild from
-    * scratch — isolates the lexical BUILD cost (tokenize + capped
-    * partial + write) from the SERVE cost, mirroring `rebuildLshIndex`. */
-  private[graft] def rebuildBm25Index(s: SparkSession, d: String): String = {
-    val dir = synchronized {
-      val dd = s"/tmp/graft_bm25/${Similarity.dataFingerprint(s"$d/documents.parquet")}" +
-        s"_${ProcessHandle.current().pid()}"
-      bm25PersistDone -= dd
-      val p = new org.apache.hadoop.fs.Path(dd)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      dd
-    }
-    ensureBm25Index(s, d)
-    dir
   }
 
   /** The lexical serve path with ZERO in-flight index construction AND
@@ -1658,7 +1574,7 @@ object TextAnalysis {
     * definition — production would receive them over the wire). */
   private[graft] def bm25ServePersisted(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val dir = ensureBm25Index(s, d)
+    val dir = bm25Persisted.dir(s, d)
     bm25ServeWith(bm25Index(s.read.parquet(s"$dir/partial")),
       s.read.parquet(s"$dir/dl"), Tables.documents(s, d))
   }
@@ -1676,8 +1592,6 @@ object TextAnalysis {
     * property promoted from spec evidence to a registry gate (the
     * `q_nb_stream_score` discipline). The 4-file split is gate plumbing;
     * production streams are multi-batch by nature. */
-  private val bm25StreamRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
   val qBm25StreamTopK: Q = Q(
     "q_bm25_stream_topk",
     s"""WITH $DuckBm25Ctes
@@ -1685,12 +1599,7 @@ object TextAnalysis {
        |FROM bm25ranked WHERE rank <= $Bm25K""".stripMargin) { (s, d) =>
     graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
-    val pid = ProcessHandle.current().pid()
-    val run = bm25StreamRunCounter.incrementAndGet()
-    val root = s"/tmp/graft_bm25stream/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_bm25stream", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
+    val root = TmpDirs.runDir("graft_bm25stream")
     val srcDir = s"$root/src"
     val outDir = s"$root/ingested"
     // 4 source files → 4 AvailableNow micro-batches → 4 landed partials
@@ -1733,8 +1642,6 @@ object TextAnalysis {
     * stats correctness (df/avgdl/N all recomputed over survivors) is
     * hash-checked, not asserted. Queries are the live corpus's first
     * [[Bm25Queries]] docs on both sides. */
-  private val bm25DeleteRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
   val qBm25Delete: Q = Q(
     "q_bm25_delete",
     s"""WITH dlive AS (SELECT * FROM documents WHERE NOT (doc_id % ${Similarity.DeleteMod} = ${Similarity.DeleteRem})),
@@ -1743,12 +1650,7 @@ object TextAnalysis {
        |FROM bm25ranked WHERE rank <= $Bm25K""".stripMargin) { (s, d) =>
     graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val pid = ProcessHandle.current().pid()
-    val run = bm25DeleteRunCounter.incrementAndGet()
-    val root = s"/tmp/graft_bm25delete/run_${pid}_$run"
-    TmpDirs.reap("/tmp/graft_bm25delete", pid, TmpDirs.runPrefixPid,
-      reapSamePid = n =>
-        n.split('_').lastOption.flatMap(_.toLongOption).exists(_ <= run - 3))
+    val root = TmpDirs.runDir("graft_bm25delete")
     val corpusDir = s"$root/docs"
     // independent delta landings (distinct batch dirs) PLUS the
     // tombstone landing, all overlapped from driver threads (guide

@@ -267,8 +267,8 @@ object StreamBm25Ingest {
   }
 
   /** The lexical delete-maintenance step: pending corpus tombstones ⇒
-    * [[rebuildIndex]], else nothing. The DECIDE is one metadata listing
-    * on the caller's thread, cheap enough to run every batch (the
+    * [[rebuildFromSurvivors]], else nothing. The DECIDE is one metadata
+    * listing on the caller's thread, cheap enough to run every batch (the
     * [[AnnMaintenance.lshStep]] cadence discipline); a fired rebuild is
     * submitted to `maintainer` and staged OFF-path — ingest keeps landing
     * batches above the fold watermark, serves keep merging the committed
@@ -301,7 +301,7 @@ object StreamBm25Ingest {
       // retainSnapshots >= 1: the detached commit races live serve plans,
       // so the superseded generation must outlive the swap (gcGraceMs
       // only protects delta/tombstone dirs, not the old base)
-      rebuildIndex(s, outDir, gcGraceMs, retainSnapshots)
+      rebuildFromSurvivors(s, outDir, gcGraceMs, retainSnapshots)
       ()
     }
   }
@@ -322,9 +322,8 @@ object StreamBm25Ingest {
     *     post-delete batches never contained the deleted docs.
     * Cost class: the fold cadence's own — a rebuild rides the compaction
     * tick, never a per-delete rewrite. */
-  def rebuildIndex(s: SparkSession, outDir: String,
-      gcGraceMs: Long = 0L,
-      retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
+  private def rebuildFromSurvivors(s: SparkSession, outDir: String,
+      gcGraceMs: Long, retainSnapshots: Int): DeltaCompact.Manifest = {
     graft.functions.GraftFunctions.register(s)
     val docsDir = s"$outDir/docs"
     val idxDir = s"$outDir/idx"

@@ -24,4 +24,12 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf0001
+
+  /** Runs `f` on a fresh temp dir named `<prefix><random>` and deletes the
+    * dir afterwards, whether `f` passed or threw. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try f(dir.getAbsolutePath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

@@ -134,18 +134,19 @@ class BoundedCollectSpec extends SparkSpec {
           (901L, "srcB", "completely unique text alpha beta gamma delta epsilon zeta eta theta iota"))
     val df = docs.toDF("doc_id", "source", "text")
     df.createOrReplaceTempView("bc_documents")
-    val tmp = java.nio.file.Files.createTempDirectory("bc_docs").toString
-    df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    withTempDir("bc_docs") { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
 
-    val pairs = graft.operators.Dedup.qMinhashPairs.build(s, tmp).collect()
-    val pairSet = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairSet == Set((900L, 901L)),
-      s"only the genuine near-dup pair should survive the bucket cap, got ${pairSet.size} pairs")
+      val pairs = graft.operators.Dedup.qMinhashPairs.build(s, tmp).collect()
+      val pairSet = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairSet == Set((900L, 901L)),
+        s"only the genuine near-dup pair should survive the bucket cap, got ${pairSet.size} pairs")
 
-    // the identical docs ARE caught by the exact path (hash groupBy)
-    val exactGroups = df.groupBy(md5(col("text").cast("binary")))
-      .count().filter(col("count") > 1).count()
-    assert(exactGroups == 1L)
+      // the identical docs ARE caught by the exact path (hash groupBy)
+      val exactGroups = df.groupBy(md5(col("text").cast("binary")))
+        .count().filter(col("count") > 1).count()
+      assert(exactGroups == 1L)
+    }
   }
 
   test("hot shingle across 1k docs: jaccard pipeline stays bounded and exact for uncommon shingles") {
@@ -159,19 +160,20 @@ class BoundedCollectSpec extends SparkSpec {
       val rare = if (i < 2) "rare shared shingle text here" else s"doc$i unique body text $i"
       (i.toLong, "srcA", s"$hot $rare")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("bc_hot").toString
-    docs.toDF("doc_id", "source", "text")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    withTempDir("bc_hot") { tmp =>
+      docs.toDF("doc_id", "source", "text")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
 
-    val top = graft.operators.Dedup.qNgramJaccard.build(s, tmp).collect()
-    assert(top.nonEmpty, "the rare-shingle pair must survive the DF cap")
-    val best = top.head
-    assert((best.getLong(0), best.getLong(1)) == (0L, 1L),
-      s"docs 0 and 1 share rare shingles and must rank first, got $best")
-    // jaccard uses FULL set sizes: both docs have 7 distinct shingles
-    // (9 words -> 7 shingles), sharing 5 of the rare ones; the hot shingle
-    // and its df>cap bridge shingles are excluded from the intersection
-    // counts but stay in the denominators — value must be < 1.0
-    assert(best.getDouble(2) < 1.0 && best.getDouble(2) > 0.0)
+      val top = graft.operators.Dedup.qNgramJaccard.build(s, tmp).collect()
+      assert(top.nonEmpty, "the rare-shingle pair must survive the DF cap")
+      val best = top.head
+      assert((best.getLong(0), best.getLong(1)) == (0L, 1L),
+        s"docs 0 and 1 share rare shingles and must rank first, got $best")
+      // jaccard uses FULL set sizes: both docs have 7 distinct shingles
+      // (9 words -> 7 shingles), sharing 5 of the rare ones; the hot shingle
+      // and its df>cap bridge shingles are excluded from the intersection
+      // counts but stay in the denominators — value must be < 1.0
+      assert(best.getDouble(2) < 1.0 && best.getDouble(2) > 0.0)
+    }
   }
 }

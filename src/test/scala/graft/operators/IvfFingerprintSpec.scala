@@ -23,18 +23,18 @@ class IvfFingerprintSpec extends SparkSpec {
           Files.copy(p, dst.resolve(p.getFileName), StandardCopyOption.COPY_ATTRIBUTES))
       } else Files.copy(src, dst, StandardCopyOption.COPY_ATTRIBUTES)
 
-      val fp1 = Similarity.dataFingerprint(dst.toString)
+      val fp1 = TmpDirs.dataFingerprint(dst.toString)
       // distinct dataset paths get distinct prints even with IDENTICAL
       // contents and copied attributes (the sanitized-path collision
       // class): the full path is part of the fingerprint
-      assert(fp1 != Similarity.dataFingerprint(s"$sf/embeddings.parquet"))
+      assert(fp1 != TmpDirs.dataFingerprint(s"$sf/embeddings.parquet"))
       // "regenerate": rewrite the file(s) so mtime (and possibly length) move
       val leaf =
         if (Files.isDirectory(dst)) Files.list(dst).findFirst().get() else dst
       Files.setLastModifiedTime(leaf,
         java.nio.file.attribute.FileTime.fromMillis(
           Files.getLastModifiedTime(leaf).toMillis + 60000))
-      val fp2 = Similarity.dataFingerprint(dst.toString)
+      val fp2 = TmpDirs.dataFingerprint(dst.toString)
       assert(fp1 != fp2, "fingerprint ignored an in-place regeneration")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))

@@ -48,26 +48,27 @@ class LayoutSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(1).toDouble / fullX, r.getLong(2).toDouble / fullY))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    Layout.writeZOrdered(z, col("x"), col("y"), s"$dir/zordered", numFiles = 16)
-    // single-column layout: same rows, same file count, sorted by x only
-    z.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(s"$dir/xsorted")
+    withTempDir("graft-zorder") { dir =>
+      Layout.writeZOrdered(z, col("x"), col("y"), s"$dir/zordered", numFiles = 16)
+      // single-column layout: same rows, same file count, sorted by x only
+      z.repartitionByRange(16, col("x")).sortWithinPartitions("x")
+        .write.mode("overwrite").parquet(s"$dir/xsorted")
 
-    val zSpans = perFileSpans(s"$dir/zordered")
-    val xSpans = perFileSpans(s"$dir/xsorted")
-    assert(zSpans.length > 1 && xSpans.length > 1)
+      val zSpans = perFileSpans(s"$dir/zordered")
+      val xSpans = perFileSpans(s"$dir/xsorted")
+      assert(zSpans.length > 1 && xSpans.length > 1)
 
-    def avg(a: Array[Double]) = a.sum / a.length
-    // z-order: BOTH dimensions bounded well under the full range per file
-    assert(avg(zSpans.map(_._1)) < 0.5,
-      s"z-order x-span ${avg(zSpans.map(_._1))} not bounded")
-    assert(avg(zSpans.map(_._2)) < 0.5,
-      s"z-order y-span ${avg(zSpans.map(_._2))} not bounded")
-    // x-sort: x collapses but y stays ~unclustered — nothing for a date
-    // predicate to prune on
-    assert(avg(xSpans.map(_._2)) > 0.8,
-      s"x-sorted baseline unexpectedly clustered y: ${avg(xSpans.map(_._2))}")
+      def avg(a: Array[Double]) = a.sum / a.length
+      // z-order: BOTH dimensions bounded well under the full range per file
+      assert(avg(zSpans.map(_._1)) < 0.5,
+        s"z-order x-span ${avg(zSpans.map(_._1))} not bounded")
+      assert(avg(zSpans.map(_._2)) < 0.5,
+        s"z-order y-span ${avg(zSpans.map(_._2))} not bounded")
+      // x-sort: x collapses but y stays ~unclustered — nothing for a date
+      // predicate to prune on
+      assert(avg(xSpans.map(_._2)) > 0.8,
+        s"x-sorted baseline unexpectedly clustered y: ${avg(xSpans.map(_._2))}")
+    }
   }
 
   test("hilbert-ordered write bounds per-file spans like the z-order write") {
@@ -76,19 +77,20 @@ class LayoutSpec extends SparkSpec {
       datediff(col("o_orderdate"), lit("1992-01-01")).cast("long").as("y"))
     val full = z.agg(max(col("x")) - min(col("x")),
       max(col("y")) - min(col("y"))).collect().head
-    val dir = java.nio.file.Files.createTempDirectory("graft-hilbert").toString
-    Layout.writeHilbertOrdered(z, col("x"), col("y"), dir, numFiles = 16)
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name())
-      .agg((max(col("x")) - min(col("x"))).as("xs"),
-        (max(col("y")) - min(col("y"))).as("ys"))
-      .collect()
-      .map(r => (r.getLong(1).toDouble / full.getLong(0),
-        r.getLong(2).toDouble / full.getLong(1)))
-    assert(spans.length > 1)
-    def avg(a: Array[Double]) = a.sum / a.length
-    assert(avg(spans.map(_._1)) < 0.5 && avg(spans.map(_._2)) < 0.5,
-      s"hilbert spans not bounded: ${avg(spans.map(_._1))} ${avg(spans.map(_._2))}")
+    withTempDir("graft-hilbert") { dir =>
+      Layout.writeHilbertOrdered(z, col("x"), col("y"), dir, numFiles = 16)
+      val spans = spark.read.parquet(dir)
+        .groupBy(input_file_name())
+        .agg((max(col("x")) - min(col("x"))).as("xs"),
+          (max(col("y")) - min(col("y"))).as("ys"))
+        .collect()
+        .map(r => (r.getLong(1).toDouble / full.getLong(0),
+          r.getLong(2).toDouble / full.getLong(1)))
+      assert(spans.length > 1)
+      def avg(a: Array[Double]) = a.sum / a.length
+      assert(avg(spans.map(_._1)) < 0.5 && avg(spans.map(_._2)) < 0.5,
+        s"hilbert spans not bounded: ${avg(spans.map(_._1))} ${avg(spans.map(_._2))}")
+    }
   }
 
   test("3-column z-order write bounds per-file spans in all three dimensions") {
@@ -98,26 +100,27 @@ class LayoutSpec extends SparkSpec {
       col("o_totalprice").cast("long").as("p"))
     val full = z.agg(max(col("x")) - min(col("x")), max(col("y")) - min(col("y")),
       max(col("p")) - min(col("p"))).collect().head
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder3").toString
-    Layout.writeZOrderedN(z, Seq(col("x"), col("y"), col("p")), dir, numFiles = 8)
+    withTempDir("graft-zorder3") { dir =>
+      Layout.writeZOrderedN(z, Seq(col("x"), col("y"), col("p")), dir, numFiles = 8)
 
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name())
-      .agg((max(col("x")) - min(col("x"))).as("xs"),
-        (max(col("y")) - min(col("y"))).as("ys"),
-        (max(col("p")) - min(col("p"))).as("ps"))
-      .collect()
-      .map(r => (r.getLong(1).toDouble / full.getLong(0),
-        r.getLong(2).toDouble / full.getLong(1),
-        r.getLong(3).toDouble / full.getLong(2)))
-    assert(spans.length > 1)
-    def avg(a: Array[Double]) = a.sum / a.length
-    // with 8 files over 3 interleaved dims, each dimension's per-file
-    // span must sit well under the full range (8 files ≈ one halving per
-    // dimension; a sort on any single column leaves the other two ~1.0)
-    val (ax, ay, ap) = (avg(spans.map(_._1)), avg(spans.map(_._2)), avg(spans.map(_._3)))
-    assert(ax < 0.8 && ay < 0.8 && ap < 0.8, s"spans not bounded: $ax $ay $ap")
-    assert(ax + ay + ap < 2.0, s"joint clustering too weak: $ax $ay $ap")
+      val spans = spark.read.parquet(dir)
+        .groupBy(input_file_name())
+        .agg((max(col("x")) - min(col("x"))).as("xs"),
+          (max(col("y")) - min(col("y"))).as("ys"),
+          (max(col("p")) - min(col("p"))).as("ps"))
+        .collect()
+        .map(r => (r.getLong(1).toDouble / full.getLong(0),
+          r.getLong(2).toDouble / full.getLong(1),
+          r.getLong(3).toDouble / full.getLong(2)))
+      assert(spans.length > 1)
+      def avg(a: Array[Double]) = a.sum / a.length
+      // with 8 files over 3 interleaved dims, each dimension's per-file
+      // span must sit well under the full range (8 files ≈ one halving per
+      // dimension; a sort on any single column leaves the other two ~1.0)
+      val (ax, ay, ap) = (avg(spans.map(_._1)), avg(spans.map(_._2)), avg(spans.map(_._3)))
+      assert(ax < 0.8 && ay < 0.8 && ap < 0.8, s"spans not bounded: $ax $ay $ap")
+      assert(ax + ay + ap < 2.0, s"joint clustering too weak: $ax $ay $ap")
+    }
   }
 
   test("zkey column and oracle bit-interleave agree on round-trip values") {

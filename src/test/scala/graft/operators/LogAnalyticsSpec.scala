@@ -69,26 +69,28 @@ class LogAnalyticsSpec extends SparkSpec {
   }
 
   test("round-trip: streaming TSV-ish emission parses back into tables") {
-    val dir = java.nio.file.Files.createTempDirectory("graftlogs").toFile
-    val run = Seq(
-      formatters.exec(1000, 5000, 7, 0, 100),
-      formatters.memory(1500, 1024.0),
-      formatters.pid(1600, 100, 900, 50))
-    val app = Seq(formatters.tick(900, 7, 100), formatters.drop(950, 3, 0))
-    val recv0 = Seq(formatters.feedback(1700, 0, 5000), "1800 RATIO stream=0 ratio=0.8")
-    java.nio.file.Files.write(new java.io.File(dir, "run.log").toPath,
-      run.mkString("\n").getBytes)
-    java.nio.file.Files.write(new java.io.File(dir, "application.log").toPath,
-      app.mkString("\n").getBytes)
-    java.nio.file.Files.write(new java.io.File(dir, "receiver_0.log").toPath,
-      recv0.mkString("\n").getBytes)
-    val tables = LogAnalytics.loadAll(spark, dir.getAbsolutePath)
-    assert(tables("execution").count() == 1)
-    assert(tables("memory").count() == 1)
-    assert(tables("pid").count() == 1)
-    assert(tables("tick").count() == 1)
-    assert(tables("droppedValues").count() == 1)
-    assert(tables("feedback").count() == 1)
-    assert(tables("ratio").head.getDouble(2) == 0.8)
+    withTempDir("graftlogs") { tmp =>
+      val dir = new java.io.File(tmp)
+      val run = Seq(
+        formatters.exec(1000, 5000, 7, 0, 100),
+        formatters.memory(1500, 1024.0),
+        formatters.pid(1600, 100, 900, 50))
+      val app = Seq(formatters.tick(900, 7, 100), formatters.drop(950, 3, 0))
+      val recv0 = Seq(formatters.feedback(1700, 0, 5000), "1800 RATIO stream=0 ratio=0.8")
+      java.nio.file.Files.write(new java.io.File(dir, "run.log").toPath,
+        run.mkString("\n").getBytes)
+      java.nio.file.Files.write(new java.io.File(dir, "application.log").toPath,
+        app.mkString("\n").getBytes)
+      java.nio.file.Files.write(new java.io.File(dir, "receiver_0.log").toPath,
+        recv0.mkString("\n").getBytes)
+      val tables = LogAnalytics.loadAll(spark, dir.getAbsolutePath)
+      assert(tables("execution").count() == 1)
+      assert(tables("memory").count() == 1)
+      assert(tables("pid").count() == 1)
+      assert(tables("tick").count() == 1)
+      assert(tables("droppedValues").count() == 1)
+      assert(tables("feedback").count() == 1)
+      assert(tables("ratio").head.getDouble(2) == 0.8)
+    }
   }
 }

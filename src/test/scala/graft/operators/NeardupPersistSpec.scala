@@ -27,7 +27,7 @@ class NeardupPersistSpec extends SparkSpec {
 
   test("the landed index carries signatures, never text; index-only verification") {
     val s = spark
-    val dir = Dedup.ensureNeardupIndex(s, sf)
+    val dir = Dedup.neardupIndex.dir(s, sf)
     val idx = s.read.parquet(s"$dir/bands")
     assert(!idx.columns.contains("text"),
       "the index must store signatures only — corpus text never lands in it")
@@ -61,7 +61,7 @@ class NeardupPersistSpec extends SparkSpec {
     assert(out.filter(col("dup_of") % 10 === 7).count() === 0)
     assert(out.filter(col("hamming") > 3 || col("hamming") < 0).count() === 0)
     assert(out.select("doc_id").distinct().count() === out.count())
-    val idx = s.read.parquet(s"${Dedup.ensureSimhashIndex(s, sf)}/bands")
+    val idx = s.read.parquet(s"${Dedup.simhashIndex.dir(s, sf)}/bands")
     assert(idx.columns.toSet === Set("band_id", "band", "doc_id", "simhash"),
       "8 bytes of signature + band rows — never text")
   }

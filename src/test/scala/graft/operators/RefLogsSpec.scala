@@ -70,66 +70,70 @@ class RefLogsSpec extends SparkSpec {
   }
 
   test("run.log parsers: memory, execution, pid (synthetic reference-format lines)") {
-    val dir = Files.createTempDirectory("reflogs").toFile
-    val runLog = new java.io.File(dir, "run.log")
-    Files.writeString(runLog.toPath, Seq(
-      // log4j line shape behind RunLogData.scala:67 (comma millis, MB unit)
-      "2015-07-13 16:57:00,296+0000 INFO MemoryStore: Added input blah (estimated size 7.1 KB, free: 265.4 MB)",
-      "2015-07-13 16:57:01,000+0000 INFO MemoryStore: Added input blah (estimated size 7.1 KB, free: 271769.6 KB)",
-      // SimpleStreamingApp.scala:107 format string, verbatim field order
-      "batch result: 1436372230123\t1436372225000\t7\t0\t14635\t102445\t7.0\t0.5",
-      // PID rate estimator line (RunLogData.scala:69); zero-record row dropped
-      "time = 1436372230000, # records = 5000, processing time = 1200, scheduling delay = 30",
-      "time = 1436372231000, # records = 0, processing time = 0, scheduling delay = 0",
-      "2015-07-13 16:57:02,000+0000 INFO other: unrelated line"
-    ).mkString("\n"))
+    withTempDir("reflogs") { tmp =>
+      val dir = new java.io.File(tmp)
+      val runLog = new java.io.File(dir, "run.log")
+      Files.writeString(runLog.toPath, Seq(
+        // log4j line shape behind RunLogData.scala:67 (comma millis, MB unit)
+        "2015-07-13 16:57:00,296+0000 INFO MemoryStore: Added input blah (estimated size 7.1 KB, free: 265.4 MB)",
+        "2015-07-13 16:57:01,000+0000 INFO MemoryStore: Added input blah (estimated size 7.1 KB, free: 271769.6 KB)",
+        // SimpleStreamingApp.scala:107 format string, verbatim field order
+        "batch result: 1436372230123\t1436372225000\t7\t0\t14635\t102445\t7.0\t0.5",
+        // PID rate estimator line (RunLogData.scala:69); zero-record row dropped
+        "time = 1436372230000, # records = 5000, processing time = 1200, scheduling delay = 30",
+        "time = 1436372231000, # records = 0, processing time = 0, scheduling delay = 0",
+        "2015-07-13 16:57:02,000+0000 INFO other: unrelated line"
+      ).mkString("\n"))
 
-    val mem = memory(lines(spark, runLog.getPath)).orderBy("time").collect()
-    assert(mem.length === 2)
-    assert(mem(0).getDouble(1) === 265.4 * 1024) // MB → KB
-    assert(mem(1).getDouble(1) === 271769.6)     // KB stays
-    assert(mem(0).getLong(0) === 1436806620296L) // 2015-07-13 16:57:00.296 UTC
+      val mem = memory(lines(spark, runLog.getPath)).orderBy("time").collect()
+      assert(mem.length === 2)
+      assert(mem(0).getDouble(1) === 265.4 * 1024) // MB → KB
+      assert(mem(1).getDouble(1) === 271769.6)     // KB stays
+      assert(mem(0).getLong(0) === 1436806620296L) // 2015-07-13 16:57:00.296 UTC
 
-    val exec = execution(lines(spark, runLog.getPath)).collect()
-    assert(exec.length === 1)
-    assert((exec(0).getLong(0), exec(0).getLong(1), exec(0).getInt(2),
-      exec(0).getInt(3), exec(0).getInt(4)) ===
-      ((1436372230123L, 1436372225000L, 7, 0, 14635)))
+      val exec = execution(lines(spark, runLog.getPath)).collect()
+      assert(exec.length === 1)
+      assert((exec(0).getLong(0), exec(0).getLong(1), exec(0).getInt(2),
+        exec(0).getInt(3), exec(0).getInt(4)) ===
+        ((1436372230123L, 1436372225000L, 7, 0, 14635)))
 
-    val pids = pid(lines(spark, runLog.getPath)).collect()
-    assert(pids.length === 1) // records=0 filtered (TestData.scala:194)
-    assert((pids(0).getLong(0), pids(0).getInt(1), pids(0).getInt(2),
-      pids(0).getInt(3)) === ((1436372230000L, 5000, 1200, 30)))
+      val pids = pid(lines(spark, runLog.getPath)).collect()
+      assert(pids.length === 1) // records=0 filtered (TestData.scala:194)
+      assert((pids(0).getLong(0), pids(0).getInt(1), pids(0).getInt(2),
+        pids(0).getInt(3)) === ((1436372230000L, 5000, 1200, 30)))
+    }
   }
 
   test("application.log parsers: tick, dropped, requested (dot-millis format) + per-client rollup") {
-    val dir = Files.createTempDirectory("reflogs").toFile
-    val appLog = new java.io.File(dir, "application.log")
-    Files.writeString(appLog.toPath, Seq(
-      // Play log shape behind ApplicationLogData.scala:52-54 (DOT millis)
-      "2015-07-13 16:57:03.085+0000 [INFO] [DataGeneratorActor] At tick 3085, 1000 times 7",
-      "2015-07-13 16:57:21.964+0000 [WARN] [DataGeneratorActor] unable to deliver 297 values to client 0",
-      "2015-07-13 16:57:21.990+0000 [WARN] [DataGeneratorActor] unable to deliver 3 values to client 0",
-      "2015-07-13 16:57:22.100+0000 [WARN] [DataGeneratorActor] unable to deliver 50 values to client 1",
-      "2015-07-13 16:57:21.500+0000 [INFO] [DataGeneratorActor] received request for 5000 values from client 0"
-    ).mkString("\n"))
+    withTempDir("reflogs") { tmp =>
+      val dir = new java.io.File(tmp)
+      val appLog = new java.io.File(dir, "application.log")
+      Files.writeString(appLog.toPath, Seq(
+        // Play log shape behind ApplicationLogData.scala:52-54 (DOT millis)
+        "2015-07-13 16:57:03.085+0000 [INFO] [DataGeneratorActor] At tick 3085, 1000 times 7",
+        "2015-07-13 16:57:21.964+0000 [WARN] [DataGeneratorActor] unable to deliver 297 values to client 0",
+        "2015-07-13 16:57:21.990+0000 [WARN] [DataGeneratorActor] unable to deliver 3 values to client 0",
+        "2015-07-13 16:57:22.100+0000 [WARN] [DataGeneratorActor] unable to deliver 50 values to client 1",
+        "2015-07-13 16:57:21.500+0000 [INFO] [DataGeneratorActor] received request for 5000 values from client 0"
+      ).mkString("\n"))
 
-    val ticks = tick(lines(spark, appLog.getPath)).collect()
-    assert(ticks.length === 1)
-    assert((ticks(0).getLong(0), ticks(0).getInt(1), ticks(0).getInt(2)) ===
-      ((1436806623085L, 7, 1000))) // dot-millis parsed, value/count swapped per reference
+      val ticks = tick(lines(spark, appLog.getPath)).collect()
+      assert(ticks.length === 1)
+      assert((ticks(0).getLong(0), ticks(0).getInt(1), ticks(0).getInt(2)) ===
+        ((1436806623085L, 7, 1000))) // dot-millis parsed, value/count swapped per reference
 
-    val dropped = droppedValues(lines(spark, appLog.getPath))
-    assert(dropped.count() === 3)
-    val perSec = perSecond(dropped).orderBy("time", "client_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    // client 0's two drops in second 1436806641 merge; client 1 separate
-    assert(perSec.toSeq === Seq(
-      (1436806641000L, 0, 300L), (1436806642000L, 1, 50L)))
+      val dropped = droppedValues(lines(spark, appLog.getPath))
+      assert(dropped.count() === 3)
+      val perSec = perSecond(dropped).orderBy("time", "client_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      // client 0's two drops in second 1436806641 merge; client 1 separate
+      assert(perSec.toSeq === Seq(
+        (1436806641000L, 0, 300L), (1436806642000L, 1, 50L)))
 
-    val req = requestedValues(lines(spark, appLog.getPath)).collect()
-    assert(req.length === 1)
-    assert((req(0).getInt(1), req(0).getInt(2)) === ((5000, 0)))
+      val req = requestedValues(lines(spark, appLog.getPath)).collect()
+      assert(req.length === 1)
+      assert((req(0).getInt(1), req(0).getInt(2)) === ((5000, 0)))
+    }
   }
 
   test("load() assembles the eight tables from a committed run dir, tolerating absent files") {
@@ -143,17 +147,19 @@ class RefLogsSpec extends SparkSpec {
   }
 
   test("load() refuses a run dir that does not exist, naming it; an empty dir loads eight empty tables") {
-    val dir = Files.createTempDirectory("reflogs")
-    val tables = load(spark, dir.toString)
-    assert(tables.size === 8)
-    assert(tables.values.forall(_.count() === 0))
+    withTempDir("reflogs") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val tables = load(spark, dir.toString)
+      assert(tables.size === 8)
+      assert(tables.values.forall(_.count() === 0))
 
-    val missing = dir.resolve("no-such-run").toString
-    val e = intercept[IllegalArgumentException](load(spark, missing))
-    assert(e.getMessage.contains(missing))
-    // the graph CLI reports the missing dir, not an empty execution table
-    val g = intercept[IllegalArgumentException](
-      GnuplotGraph.write(spark, missing, "t", dir.resolve("out").toString))
-    assert(g.getMessage.contains(missing))
+      val missing = dir.resolve("no-such-run").toString
+      val e = intercept[IllegalArgumentException](load(spark, missing))
+      assert(e.getMessage.contains(missing))
+      // the graph CLI reports the missing dir, not an empty execution table
+      val g = intercept[IllegalArgumentException](
+        GnuplotGraph.write(spark, missing, "t", dir.resolve("out").toString))
+      assert(g.getMessage.contains(missing))
+    }
   }
 }

@@ -118,12 +118,13 @@ class TrainingOpsSpec extends SparkSpec {
     // Vector 10 points the other way (all sign bits flip) → singleton.
     val b = Array.tabulate(64)(k => math.sin(k + 1).toFloat)
     def scaled(f: Float) = b.map(_ * f)
-    val dir = writeEmbeddings(Seq(
+    withEmbeddings(Seq(
       1L -> scaled(1.0f), 2L -> scaled(1.1f), 3L -> scaled(1.4f),
-      10L -> b.map(-_)))
-    val rows = Similarity.qSemDedup.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(rows == Map(1L -> ((2L, 3L)), 10L -> ((10L, 1L))), s"got $rows")
+      10L -> b.map(-_))) { dir =>
+      val rows = Similarity.qSemDedup.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(rows == Map(1L -> ((2L, 3L)), 10L -> ((10L, 1L))), s"got $rows")
+    }
   }
 
   test("q_gopher_rules trips each rule independently") {
@@ -132,25 +133,27 @@ class TrainingOpsSpec extends SparkSpec {
     val symb = ("# " * 10) + "the and " + ("word " * 48).trim      // 10/60 symbols > 0.1
     val nums = ("123 " * 58) + "the and"                           // 2/60 alpha words < 0.8
     val nostop = ("word " * 60).trim                               // 0 required stopwords
-    val dir = writeDocs(Seq(1L -> pass, 2L -> short, 3L -> symb, 4L -> nums, 5L -> nostop))
-    val got = TextAnalysis.qGopherRules.build(spark, dir).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6), r.getInt(7), r.getInt(8)))).toMap
-    // (word_count_ok, mean_wl_ok, symbol_ok, alpha_ok, stop_ok, passes)
-    assert(got(1L) == ((1, 1, 1, 1, 1, 1)), s"pass doc: ${got(1L)}")
-    assert(got(2L)._1 == 0 && got(2L)._6 == 0, s"short doc: ${got(2L)}")
-    assert(got(3L)._3 == 0 && got(3L)._6 == 0, s"symbol doc: ${got(3L)}")
-    assert(got(4L)._4 == 0 && got(4L)._6 == 0, s"numeric doc: ${got(4L)}")
-    assert(got(5L)._5 == 0 && got(5L)._6 == 0, s"no-stop doc: ${got(5L)}")
+    withDocs(Seq(1L -> pass, 2L -> short, 3L -> symb, 4L -> nums, 5L -> nostop)) { dir =>
+      val got = TextAnalysis.qGopherRules.build(spark, dir).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6), r.getInt(7), r.getInt(8)))).toMap
+      // (word_count_ok, mean_wl_ok, symbol_ok, alpha_ok, stop_ok, passes)
+      assert(got(1L) == ((1, 1, 1, 1, 1, 1)), s"pass doc: ${got(1L)}")
+      assert(got(2L)._1 == 0 && got(2L)._6 == 0, s"short doc: ${got(2L)}")
+      assert(got(3L)._3 == 0 && got(3L)._6 == 0, s"symbol doc: ${got(3L)}")
+      assert(got(4L)._4 == 0 && got(4L)._6 == 0, s"numeric doc: ${got(4L)}")
+      assert(got(5L)._5 == 0 && got(5L)._6 == 0, s"no-stop doc: ${got(5L)}")
+    }
   }
 
   test("q_vocab_coverage ranks types and accumulates to 1.0") {
-    val dir = writeDocs(Seq((1L, "a a a b b c")))
-    val rows = TextAnalysis.qVocabCoverage.build(spark, dir).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(rows.toSeq == Seq(
-      (1, "a", 3L, 0.5), (2, "b", 2L, 0.833333), (3, "c", 1L, 1.0)),
-      s"got ${rows.toSeq}")
+    withDocs(Seq((1L, "a a a b b c"))) { dir =>
+      val rows = TextAnalysis.qVocabCoverage.build(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      assert(rows.toSeq == Seq(
+        (1, "a", 3L, 0.5), (2, "b", 2L, 0.833333), (3, "c", 1L, 1.0)),
+        s"got ${rows.toSeq}")
+    }
   }
 
   test("q_weighted_sample keeps exactly the normalized-quality residue set") {
@@ -179,17 +182,18 @@ class TrainingOpsSpec extends SparkSpec {
     // — not pinned to a value (it is the hash luck the op measures), but
     // it must be positive for a pair that survived banding, and a valid
     // multiple of 1/8.
-    val dir = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu"),
       (3L, "totally different content about streaming backpressure and rates"),
-      (4L, "yet another unrelated document mentioning parquet and shuffles")))
-    val rows = Dedup.qMinhashJaccardEst.build(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    assert(rows.map(r => (r._1, r._2)).toSeq == Seq((1L, 2L)), s"got ${rows.toSeq}")
-    val (_, _, est, exact) = rows.head
-    assert(exact == BigDecimal(9.0 / 11).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    assert(est > 0 && est <= 1 && (est * 8).round == est * 8)
+      (4L, "yet another unrelated document mentioning parquet and shuffles"))) { dir =>
+      val rows = Dedup.qMinhashJaccardEst.build(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      assert(rows.map(r => (r._1, r._2)).toSeq == Seq((1L, 2L)), s"got ${rows.toSeq}")
+      val (_, _, est, exact) = rows.head
+      assert(exact == BigDecimal(9.0 / 11).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      assert(est > 0 && est <= 1 && (est * 8).round == est * 8)
+    }
   }
 
   test("q_knn_ivf_pq is consistent with full-corpus ADC on shared pairs") {
@@ -216,10 +220,11 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("q_embed_norm_check counts unit vectors and reports the worst deviation") {
     val e1 = Array.tabulate(64)(k => if (k == 0) 1f else 0f)
-    val dir = writeEmbeddings(Seq(1L -> e1, 2L -> e1.map(_ * 2f)))
-    val r = Similarity.qEmbedNormCheck.build(spark, dir).collect().head
-    assert((r.getLong(0), r.getLong(1), r.getDouble(2)) == ((2L, 1L, 1.0)),
-      s"got $r")
+    withEmbeddings(Seq(1L -> e1, 2L -> e1.map(_ * 2f))) { dir =>
+      val r = Similarity.qEmbedNormCheck.build(spark, dir).collect().head
+      assert((r.getLong(0), r.getLong(1), r.getDouble(2)) == ((2L, 1L, 1.0)),
+        s"got $r")
+    }
   }
 
   test("q_sem_decontam flags a planted paraphrase and ignores orthogonal vectors") {
@@ -227,76 +232,83 @@ class TrainingOpsSpec extends SparkSpec {
     // planted semantic leak), corpus vec 101 is orthogonal (cosine ~0).
     val b = Array.tabulate(64)(k => math.cos(k + 1).toFloat)
     val orth = Array.tabulate(64)(k => if (k % 2 == 0) b(k + 1) else -b(k - 1))
-    val dir = writeEmbeddings(Seq(
-      1L -> b, 100L -> b.map(_ * 0.5f), 101L -> orth))
-    val rows = Similarity.qSemDecontam.build(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(rows.toSeq == Seq((100L, 1L, 1.0)), s"got ${rows.toSeq}")
+    withEmbeddings(Seq(
+      1L -> b, 100L -> b.map(_ * 0.5f), 101L -> orth)) { dir =>
+      val rows = Similarity.qSemDecontam.build(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(rows.toSeq == Seq((100L, 1L, 1.0)), s"got ${rows.toSeq}")
+    }
   }
 
-  /** Write a synthetic embeddings table to a temp scale-factor dir so the
-    * registered embedding queries run on controlled vectors. */
-  private def writeEmbeddings(rows: Seq[(Long, Array[Float])]): String = {
+  /** Run `f` on a temp scale-factor dir holding a synthetic embeddings
+    * table, so the registered embedding queries run on controlled
+    * vectors. */
+  private def withEmbeddings[A](rows: Seq[(Long, Array[Float])])(f: String => A): A = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
-    rows.map { case (id, v) => (id, v, 0) }
-      .toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
+    withTempDir("graft-emb") { dir =>
+      rows.map { case (id, v) => (id, v, 0) }
+        .toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      f(dir)
+    }
   }
 
-  /** Write a synthetic documents table to a temp scale-factor dir so the
-    * real registered queries (which read `dir/documents.parquet`) run on
-    * controlled content. */
-  private def writeDocs(rows: Seq[(Long, String)]): String = {
+  /** Run `f` on a temp scale-factor dir holding a synthetic documents
+    * table, so the real registered queries (which read
+    * `dir/documents.parquet`) run on controlled content. */
+  private def withDocs[A](rows: Seq[(Long, String)])(f: String => A): A = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
-    rows.map { case (id, text) => (id, text, "en", "srcA", text.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
+    withTempDir("graft-docs") { dir =>
+      rows.map { case (id, text) => (id, text, "en", "srcA", text.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      f(dir)
+    }
   }
 
   test("bigram LM table counts hand-checkable bigrams") {
-    val dir = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "a b a b"), // bigrams: "a b" ×2, "b a"
       (2L, "a c"),     // "a c"
-      (3L, "x")))      // below two words: contributes nothing
-    val top = TextAnalysis.qBigramLm.build(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(top.head == (("a b", 2L)), s"got ${top.toSeq}")
-    assert(top.toSet == Set(("a b", 2L), ("a c", 1L), ("b a", 1L)))
+      (3L, "x"))) { dir => // "x" is below two words: contributes nothing
+      val top = TextAnalysis.qBigramLm.build(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      assert(top.head == (("a b", 2L)), s"got ${top.toSeq}")
+      assert(top.toSet == Set(("a b", 2L), ("a c", 1L), ("b a", 1L)))
+    }
   }
 
   test("per-doc LM score matches the closed-form bigram log-probs") {
-    val dir = writeDocs(Seq((1L, "a b a b"), (2L, "a c"), (3L, "x")))
-    // counts: "a b"=2, "b a"=1, "a c"=1; contexts: a·=3, b·=1
-    val out = TextAnalysis.qLmScore.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val d1 = BigDecimal((2 * math.log(2.0 / 3) + math.log(1.0)) / 3)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(out(1L) == ((3L, d1)), s"got $out")
-    val d2 = BigDecimal(math.log(1.0 / 3))
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(out(2L) == ((1L, d2)), s"got $out")
-    assert(!out.contains(3L)) // no bigrams → no score row
+    withDocs(Seq((1L, "a b a b"), (2L, "a c"), (3L, "x"))) { dir =>
+      // counts: "a b"=2, "b a"=1, "a c"=1; contexts: a·=3, b·=1
+      val out = TextAnalysis.qLmScore.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      val d1 = BigDecimal((2 * math.log(2.0 / 3) + math.log(1.0)) / 3)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(out(1L) == ((3L, d1)), s"got $out")
+      val d2 = BigDecimal(math.log(1.0 / 3))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(out(2L) == ((1L, d2)), s"got $out")
+      assert(!out.contains(3L)) // no bigrams → no score row
+    }
   }
 
   test("q_shard_assign: hash-routed shards are complete, exact, and deterministic") {
     import graft.functions.Portable
     val docs = (1L to 40L).map(id => (id, s"tok$id two three"))
-    val dir = writeDocs(docs)
-    val rows = TextAnalysis.qShardAssign.build(spark, dir).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // complete: every doc lands in exactly one shard, token/char sums exact
-    assert(rows.values.map(_._1).sum === 40L)
-    assert(rows.values.map(_._2).sum === 40L * 3)
-    assert(rows.values.map(_._3).sum === docs.map(_._2.length.toLong).sum)
-    // deterministic: shard counts reproduce the portable hash exactly
-    val expected = docs.groupBy(d => (Portable.hash60Local(d._1.toString) % 16).toInt)
-      .view.mapValues(_.size.toLong).toMap
-    rows.foreach { case (shard, (n, _, _)) =>
-      assert(expected(shard) === n, s"shard $shard: got $n want ${expected(shard)}")
+    withDocs(docs) { dir =>
+      val rows = TextAnalysis.qShardAssign.build(spark, dir).collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      // complete: every doc lands in exactly one shard, token/char sums exact
+      assert(rows.values.map(_._1).sum === 40L)
+      assert(rows.values.map(_._2).sum === 40L * 3)
+      assert(rows.values.map(_._3).sum === docs.map(_._2.length.toLong).sum)
+      // deterministic: shard counts reproduce the portable hash exactly
+      val expected = docs.groupBy(d => (Portable.hash60Local(d._1.toString) % 16).toInt)
+        .view.mapValues(_.size.toLong).toMap
+      rows.foreach { case (shard, (n, _, _)) =>
+        assert(expected(shard) === n, s"shard $shard: got $n want ${expected(shard)}")
+      }
     }
   }
 
@@ -309,13 +321,14 @@ class TrainingOpsSpec extends SparkSpec {
       .filter(id => Portable.hash60Local(id.toString) % 16 == 0)
       .take(3).toSeq
     val text = Array.fill(1100)("tok").mkString(" ")
-    val dir = writeDocs(sameShard.map(id => (id, text)))
-    val rows = TextAnalysis.qPackSequences.build(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
-    assert(rows == Map(
-      (0L, 0L) -> ((2L, 2200L)),  // docs 1+2: starts 0 and 1100, both window 0
-      (0L, 1L) -> ((1L, 1100L))), // doc 3: start 2200 → window 1
-      s"got $rows (ids=$sameShard)")
+    withDocs(sameShard.map(id => (id, text))) { dir =>
+      val rows = TextAnalysis.qPackSequences.build(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
+      assert(rows == Map(
+        (0L, 0L) -> ((2L, 2200L)),  // docs 1+2: starts 0 and 1100, both window 0
+        (0L, 1L) -> ((1L, 1100L))), // doc 3: start 2200 → window 1
+        s"got $rows (ids=$sameShard)")
+    }
   }
 
   test("q_knn_pq_adc matches a naive ADC reimplementation and tracks exact L2") {
@@ -369,65 +382,69 @@ class TrainingOpsSpec extends SparkSpec {
     // that surfaces via minhash LSH above); doc 2's variant word is a
     // stopword, so its quality (stopword ratio) is strictly higher and
     // keep-best must pick it over the smaller id.
-    val dir = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda the"),
       (3L, "totally different content streaming backpressure rates quantiles"),
-      (4L, "yet more unrelated words mentioning parquet shuffles broadcast")))
-    val rows = Dedup.qDedupKeepBest.build(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val byCluster = rows.map(t => t._1 -> t).toMap
-    assert(byCluster(1L) == ((1L, 2L, 2L)),
-      s"cluster {1,2} should keep doc 2 (higher quality); got ${rows.toSeq}")
-    assert(byCluster(3L) == ((3L, 3L, 1L)))
-    assert(byCluster(4L) == ((4L, 4L, 1L)))
-    assert(rows.length == 3)
+      (4L, "yet more unrelated words mentioning parquet shuffles broadcast"))) { dir =>
+      val rows = Dedup.qDedupKeepBest.build(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val byCluster = rows.map(t => t._1 -> t).toMap
+      assert(byCluster(1L) == ((1L, 2L, 2L)),
+        s"cluster {1,2} should keep doc 2 (higher quality); got ${rows.toSeq}")
+      assert(byCluster(3L) == ((3L, 3L, 1L)))
+      assert(byCluster(4L) == ((4L, 4L, 1L)))
+      assert(rows.length == 3)
+    }
   }
 
   test("q_dup_span_coverage counts planted shared 8-word spans exactly") {
     // docs 1/2 share exactly their first 8-word window; doc 3 is disjoint;
     // doc 4 is below the window size and must not appear at all.
-    val dir = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
       (2L, "w1 w2 w3 w4 w5 w6 w7 w8 xx yy"),
       (3L, "q1 q2 q3 q4 q5 q6 q7 q8 q9"),
-      (4L, "short doc under eight words total")))
-    val rows = Dedup.qDupSpanCoverage.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
-      .toMap
-    // doc 1: 3 windows, only [w1..w8] duplicated; doc 2 likewise; doc 3 clean
-    assert(rows == Map(
-      1L -> ((3L, 1L, 0.3333)),
-      2L -> ((3L, 1L, 0.3333)),
-      3L -> ((2L, 0L, 0.0))), s"got $rows")
+      (4L, "short doc under eight words total"))) { dir =>
+      val rows = Dedup.qDupSpanCoverage.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+        .toMap
+      // doc 1: 3 windows, only [w1..w8] duplicated; doc 2 likewise; doc 3 clean
+      assert(rows == Map(
+        1L -> ((3L, 1L, 0.3333)),
+        2L -> ((3L, 1L, 0.3333)),
+        3L -> ((2L, 0L, 0.0))), s"got $rows")
+    }
   }
 
   test("q_dup_span_removal excises exactly the covered words") {
     // same planted corpus as the coverage spec: docs 1/2 share their first
     // 8-word window, so words 1-8 of each are excised and the tails survive
-    val dir = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
       (2L, "w1 w2 w3 w4 w5 w6 w7 w8 xx yy"),
       (3L, "q1 q2 q3 q4 q5 q6 q7 q8 q9"),
-      (4L, "short doc under eight words total")))
-    val rows = Dedup.qDupSpanRemoval.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
-      .toMap
-    def fp(s: String) = org.apache.commons.codec.digest.DigestUtils.md5Hex(s)
-    assert(rows == Map(
-      1L -> ((10L, 8L, fp("w9 w10"))),
-      2L -> ((10L, 8L, fp("xx yy"))),
-      3L -> ((9L, 0L, fp("q1 q2 q3 q4 q5 q6 q7 q8 q9")))), s"got $rows")
+      (4L, "short doc under eight words total"))) { dir =>
+      val rows = Dedup.qDupSpanRemoval.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
+        .toMap
+      def fp(s: String) = org.apache.commons.codec.digest.DigestUtils.md5Hex(s)
+      assert(rows == Map(
+        1L -> ((10L, 8L, fp("w9 w10"))),
+        2L -> ((10L, 8L, fp("xx yy"))),
+        3L -> ((9L, 0L, fp("q1 q2 q3 q4 q5 q6 q7 q8 q9")))), s"got $rows")
+    }
   }
 
   test("q_dup_span_removal empties a fully-duplicated document") {
     val ten = (1 to 10).map("w" + _).mkString(" ")
-    val dir = writeDocs(Seq((1L, ten), (2L, ten)))
-    val rows = Dedup.qDupSpanRemoval.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(2), r.getString(3)))).toMap
-    val emptyFp = org.apache.commons.codec.digest.DigestUtils.md5Hex("")
-    assert(rows == Map(1L -> ((10L, emptyFp)), 2L -> ((10L, emptyFp))),
-      s"got $rows")
+    withDocs(Seq((1L, ten), (2L, ten))) { dir =>
+      val rows = Dedup.qDupSpanRemoval.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(2), r.getString(3)))).toMap
+      val emptyFp = org.apache.commons.codec.digest.DigestUtils.md5Hex("")
+      assert(rows == Map(1L -> ((10L, emptyFp)), 2L -> ((10L, emptyFp))),
+        s"got $rows")
+    }
   }
 
   test("q_incr_dedup agrees with the pair graph restricted to new-vs-historical") {
@@ -518,17 +535,18 @@ class TrainingOpsSpec extends SparkSpec {
     // no learned pair) stays at one token per character.
     val enc = TextAnalysis.qBpeEncode
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe-enc").toString
-    Seq((1L, "abc abc abd"), (2L, "xyz"))
-      .toDF("doc_id", "text")
-      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-      .withColumn("source", org.apache.spark.sql.functions.lit("t"))
-      .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = enc.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(got(1L) === ((3L, 3L, 1.0)), s"trained words must fully merge: ${got(1L)}")
-    assert(got(2L) === ((1L, 3L, 3.0)), s"untrained word stays char-split: ${got(2L)}")
+    withTempDir("bpe-enc") { dir =>
+      Seq((1L, "abc abc abd"), (2L, "xyz"))
+        .toDF("doc_id", "text")
+        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+        .withColumn("source", org.apache.spark.sql.functions.lit("t"))
+        .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = enc.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+      assert(got(1L) === ((3L, 3L, 1.0)), s"trained words must fully merge: ${got(1L)}")
+      assert(got(2L) === ((1L, 3L, 3.0)), s"untrained word stays char-split: ${got(2L)}")
+    }
   }
 
   test("incremental index assign: covers exactly the new batch, cells from the frozen index") {
@@ -554,23 +572,24 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("naive-bayes source classifier separates disjoint vocabularies perfectly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("nb-src").toString
-    // src0 speaks only {alpha beta}, src1 only {gamma delta} — with
-    // disjoint vocabularies every llr is decisive and the classifier must
-    // get every doc right
-    (Seq((1L, "alpha beta alpha", "src0"), (2L, "beta alpha", "src0"),
-      (3L, "gamma delta gamma", "src1"), (4L, "delta delta", "src1"))
-      .toDF("doc_id", "text", "source"))
-      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-      .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = TextAnalysis.qNbSourceScore.build(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(3), r.getInt(4)))).toMap
-    assert(got.size === 4)
-    got.foreach { case (id, (src, score, pred)) =>
-      if (src == "src0") assert(score > 0 && pred === 1, s"doc $id: $score")
-      else assert(score < 0 && pred === 0, s"doc $id: $score")
+    withTempDir("nb-src") { dir =>
+      // src0 speaks only {alpha beta}, src1 only {gamma delta} — with
+      // disjoint vocabularies every llr is decisive and the classifier must
+      // get every doc right
+      (Seq((1L, "alpha beta alpha", "src0"), (2L, "beta alpha", "src0"),
+        (3L, "gamma delta gamma", "src1"), (4L, "delta delta", "src1"))
+        .toDF("doc_id", "text", "source"))
+        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+        .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = TextAnalysis.qNbSourceScore.build(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(3), r.getInt(4)))).toMap
+      assert(got.size === 4)
+      got.foreach { case (id, (src, score, pred)) =>
+        if (src == "src0") assert(score > 0 && pred === 1, s"doc $id: $score")
+        else assert(score < 0 && pred === 0, s"doc $id: $score")
+      }
     }
   }
 

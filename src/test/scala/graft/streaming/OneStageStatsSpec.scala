@@ -33,31 +33,33 @@ class OneStageStatsSpec extends SparkSpec {
     val planRows = 3000L
     val evals = spark.sparkContext.longAccumulator("metric-evals")
     val counting = udf { v: Int => evals.add(1L); v.toLong }
-    val dir = Files.createTempDirectory("graft-once")
-    val writer = new RunLogWriter(dir)
-    val tsv = new ConcurrentLinkedQueue[String]()
-    try {
-      val q = StreamingStats.run(
-        spark, planText,
-        triggerMs = 50L,
-        secondsPerTrigger = 3,
-        numPartitions = Some(4),
-        metricCol = df => df.withColumn("hanoi_ms", counting(col("value"))),
-        sink = RunLogs.loggingSink(writer, inner = (stats, _) =>
-          StreamingStats.toTsv(stats, 0L).collect().foreach(r => tsv.add(r.getString(0)))))
-      try q.processAllAvailable() finally q.stop()
-    } finally writer.close()
+    withTempDir("graft-once") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val writer = new RunLogWriter(dir)
+      val tsv = new ConcurrentLinkedQueue[String]()
+      try {
+        val q = StreamingStats.run(
+          spark, planText,
+          triggerMs = 50L,
+          secondsPerTrigger = 3,
+          numPartitions = Some(4),
+          metricCol = df => df.withColumn("hanoi_ms", counting(col("value"))),
+          sink = RunLogs.loggingSink(writer, inner = (stats, _) =>
+            StreamingStats.toTsv(stats, 0L).collect().foreach(r => tsv.add(r.getString(0)))))
+        try q.processAllAvailable() finally q.stop()
+      } finally writer.close()
 
-    assert(evals.value == planRows, s"metric evaluated ${evals.value} times for $planRows rows")
-    // (value, stream_id, count, sum) from the logged lines and from the TSV
-    def fields(line: String): Seq[Long] = line.split("\t").slice(2, 6).map(_.toLong).toSeq
-    val logged = Files.readAllLines(dir.resolve("run.log")).asScala.toSeq
-      .filter(_.contains("batch result: "))
-      .map(l => fields(l.substring(l.indexOf("batch result: ") + "batch result: ".length)))
-    val printed = tsv.asScala.toSeq.map(fields)
-    assert(logged.nonEmpty)
-    assert(logged.sortBy(_.mkString(",")) == printed.sortBy(_.mkString(",")))
-    assert(logged.map(_(2)).sum == planRows)
+      assert(evals.value == planRows, s"metric evaluated ${evals.value} times for $planRows rows")
+      // (value, stream_id, count, sum) from the logged lines and from the TSV
+      def fields(line: String): Seq[Long] = line.split("\t").slice(2, 6).map(_.toLong).toSeq
+      val logged = Files.readAllLines(dir.resolve("run.log")).asScala.toSeq
+        .filter(_.contains("batch result: "))
+        .map(l => fields(l.substring(l.indexOf("batch result: ") + "batch result: ".length)))
+      val printed = tsv.asScala.toSeq.map(fields)
+      assert(logged.nonEmpty)
+      assert(logged.sortBy(_.mkString(",")) == printed.sortBy(_.mkString(",")))
+      assert(logged.map(_(2)).sum == planRows)
+    }
   }
 
   test("whole-plan trigger over q_stream_batch_stats_det's plan emits the gate's oracle rows") {

@@ -87,60 +87,61 @@ class StreamCurationSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
 
     // offline training corpus: src0 speaks {alpha beta}, src1 {gamma delta}
-    val trainDir = java.nio.file.Files.createTempDirectory("nb-stream").toString
-    Seq((1L, "alpha beta alpha", "src0"), (2L, "beta alpha", "src0"),
-      (3L, "gamma delta gamma", "src1"), (4L, "delta delta", "src1"))
-      .toDF("doc_id", "text", "source")
-      .withColumn("lang", lit("en"))
-      .withColumn("n_chars", length($"text"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$trainDir/documents.parquet")
+    withTempDir("nb-stream") { trainDir =>
+      Seq((1L, "alpha beta alpha", "src0"), (2L, "beta alpha", "src0"),
+        (3L, "gamma delta gamma", "src1"), (4L, "delta delta", "src1"))
+        .toDF("doc_id", "text", "source")
+        .withColumn("lang", lit("en"))
+        .withColumn("n_chars", length($"text"))
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$trainDir/documents.parquet")
 
-    // the trained token->llr model (the vocabulary-sized aggregate from the
-    // batch classifier's chain), materialized as the static frame
-    val toks = graft.Tables.documents(spark, trainDir)
-      .select($"source", explode(graft.functions.Portable.words($"text")).as("tok"))
-    val cnt = toks.groupBy("tok").agg(
-      sum(when($"source" === "src0", 1).otherwise(0)).as("c_pos"),
-      sum(when($"source" =!= "src0", 1).otherwise(0)).as("c_neg"))
-    val tot = cnt.agg(sum("c_pos").as("n_pos"), sum("c_neg").as("n_neg"),
-      count(lit(1)).as("v"))
-    val model = cnt.crossJoin(broadcast(tot))
-      .select($"tok",
-        (log(($"c_pos" + 1.0) / ($"n_pos" + $"v")) -
-          log(($"c_neg" + 1.0) / ($"n_neg" + $"v"))).as("llr"))
-      .localCheckpoint()
+      // the trained token->llr model (the vocabulary-sized aggregate from the
+      // batch classifier's chain), materialized as the static frame
+      val toks = graft.Tables.documents(spark, trainDir)
+        .select($"source", explode(graft.functions.Portable.words($"text")).as("tok"))
+      val cnt = toks.groupBy("tok").agg(
+        sum(when($"source" === "src0", 1).otherwise(0)).as("c_pos"),
+        sum(when($"source" =!= "src0", 1).otherwise(0)).as("c_neg"))
+      val tot = cnt.agg(sum("c_pos").as("n_pos"), sum("c_neg").as("n_neg"),
+        count(lit(1)).as("v"))
+      val model = cnt.crossJoin(broadcast(tot))
+        .select($"tok",
+          (log(($"c_pos" + 1.0) / ($"n_pos" + $"v")) -
+            log(($"c_neg" + 1.0) / ($"n_neg" + $"v"))).as("llr"))
+        .localCheckpoint()
 
-    // live feed scored per micro-batch via foreachBatch
-    val in = MemoryStream[SrcDoc]
-    val out = scala.collection.mutable.Map.empty[Long, (Long, Double, Boolean, Boolean)]
-    val q = in.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        StreamCuration.scoreWithModel(batch, model).collect().foreach { r =>
-          out.synchronized {
-            out(r.getAs[Long]("doc_id")) = (
-              r.getAs[Long]("n_scored_tokens"),
-              r.getAs[Double]("nb_score"),
-              r.getAs[Boolean]("is_oov"),
-              r.getAs[Boolean]("keep"))
+      // live feed scored per micro-batch via foreachBatch
+      val in = MemoryStream[SrcDoc]
+      val out = scala.collection.mutable.Map.empty[Long, (Long, Double, Boolean, Boolean)]
+      val q = in.toDF().writeStream
+        .outputMode(OutputMode.Append())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          StreamCuration.scoreWithModel(batch, model).collect().foreach { r =>
+            out.synchronized {
+              out(r.getAs[Long]("doc_id")) = (
+                r.getAs[Long]("n_scored_tokens"),
+                r.getAs[Double]("nb_score"),
+                r.getAs[Boolean]("is_oov"),
+                r.getAs[Boolean]("keep"))
+            }
           }
         }
-      }
-      .start()
-    try {
-      in.addData(
-        SrcDoc(10, "alpha beta", "live", ts(1000)),     // pure positive vocab
-        SrcDoc(11, "gamma delta", "live", ts(1000)),    // pure negative vocab
-        SrcDoc(12, "unseen words only", "live", ts(1000))) // OOV -> neutral 0.0
-      q.processAllAvailable()
-    } finally q.stop()
+        .start()
+      try {
+        in.addData(
+          SrcDoc(10, "alpha beta", "live", ts(1000)),     // pure positive vocab
+          SrcDoc(11, "gamma delta", "live", ts(1000)),    // pure negative vocab
+          SrcDoc(12, "unseen words only", "live", ts(1000))) // OOV -> neutral 0.0
+        q.processAllAvailable()
+      } finally q.stop()
 
-    assert(out(10L)._2 > 0 && !out(10L)._3 && out(10L)._4, s"positive doc: ${out(10L)}")
-    assert(out(11L)._2 < 0 && !out(11L)._3 && !out(11L)._4, s"negative doc: ${out(11L)}")
-    // OOV: neutral score, flagged, and KEPT — the model has no evidence, so
-    // a cold-start stream never silently loses the document; strict
-    // consumers filter keep && !is_oov instead
-    assert(out(12L) === ((0L, 0.0, true, true)), s"OOV doc must be flagged+kept: ${out(12L)}")
+      assert(out(10L)._2 > 0 && !out(10L)._3 && out(10L)._4, s"positive doc: ${out(10L)}")
+      assert(out(11L)._2 < 0 && !out(11L)._3 && !out(11L)._4, s"negative doc: ${out(11L)}")
+      // OOV: neutral score, flagged, and KEPT — the model has no evidence, so
+      // a cold-start stream never silently loses the document; strict
+      // consumers filter keep && !is_oov instead
+      assert(out(12L) === ((0L, 0.0, true, true)), s"OOV doc must be flagged+kept: ${out(12L)}")
+    }
   }
 }

@@ -45,33 +45,34 @@ class StreamDedupSpec extends SparkSpec {
     import spark.implicits._
 
     // historical corpus on disk → the real batch band index
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist").toString
-    Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
-      (2L, "totally different content about streaming backpressure and rates"))
-      .map { case (id, text) => (id, text, "en", "srcA", text.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val index = graft.operators.Dedup.qMinhashBands.build(spark, dir)
+    withTempDir("graft-hist") { dir =>
+      Seq(
+        (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
+        (2L, "totally different content about streaming backpressure and rates"))
+        .map { case (id, text) => (id, text, "en", "srcA", text.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val index = graft.operators.Dedup.qMinhashBands.build(spark, dir)
 
-    val in = MemoryStream[Doc]
-    val q = StreamDedup.againstIndex(in.toDF(), index)
-      .writeStream.format("memory").queryName("incr_out")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      in.addData(
-        // near-dup of historical doc 1 (one word changed — the planted
-        // pair shape the LSH banding test proves collides on a band)
-        Doc(100, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu", ts(1000)),
-        // novel content: no band in common with the history
-        Doc(101, "fresh unseen words discussing shuffle partitions and codegen", ts(1000)))
-      q.processAllAvailable()
-      val got = spark.table("incr_out").as[Doc].collect().map(_.doc_id).toSet
-      assert(got === Set(101L), s"expected dup-of-corpus doc 100 dropped, got $got")
-    } finally {
-      q.stop()
-      spark.sql("DROP TABLE IF EXISTS incr_out")
+      val in = MemoryStream[Doc]
+      val q = StreamDedup.againstIndex(in.toDF(), index)
+        .writeStream.format("memory").queryName("incr_out")
+        .outputMode(OutputMode.Append())
+        .start()
+      try {
+        in.addData(
+          // near-dup of historical doc 1 (one word changed — the planted
+          // pair shape the LSH banding test proves collides on a band)
+          Doc(100, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu", ts(1000)),
+          // novel content: no band in common with the history
+          Doc(101, "fresh unseen words discussing shuffle partitions and codegen", ts(1000)))
+        q.processAllAvailable()
+        val got = spark.table("incr_out").as[Doc].collect().map(_.doc_id).toSet
+        assert(got === Set(101L), s"expected dup-of-corpus doc 100 dropped, got $got")
+      } finally {
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS incr_out")
+      }
     }
   }
 

@@ -16,41 +16,32 @@ class StreamShardRouterSpec extends SparkSpec {
   }
 
   test("replay is idempotent: re-routing the same data does not duplicate") {
-    val out = s"/tmp/graft_shards_spec"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    val schema = graft.Tables.documents(spark, sf).schema
-    def routeOnce(): Unit = {
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(sf)
-      StreamShardRouter.route(src, out).awaitTermination()
+    withTempDir("graft_shards_spec") { out =>
+      def routeOnce(): Unit =
+        StreamShardRouter.route(graft.Tables.readStream(spark, sf, "documents"), out)
+          .awaitTermination()
+      routeOnce()
+      val n1 = spark.read.parquet(out).count()
+      routeOnce() // an at-least-once re-delivery overwrites batch=0, never appends
+      val n2 = spark.read.parquet(out).count()
+      assert(n1 == graft.Tables.documents(spark, sf).count())
+      assert(n2 == n1)
     }
-    routeOnce()
-    val n1 = spark.read.parquet(out).count()
-    routeOnce() // an at-least-once re-delivery overwrites batch=0, never appends
-    val n2 = spark.read.parquet(out).count()
-    assert(n1 == graft.Tables.documents(spark, sf).count())
-    assert(n2 == n1)
   }
 
   test("reading one shard is a partition-pruned scan") {
-    // routed by the previous test; re-route defensively if absent
-    val out = s"/tmp/graft_shards_spec"
-    if (!new java.io.File(out).exists()) {
-      val schema = graft.Tables.documents(spark, sf).schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(sf)
-      StreamShardRouter.route(src, out).awaitTermination()
+    withTempDir("graft_shards_spec") { out =>
+      StreamShardRouter.route(graft.Tables.readStream(spark, sf, "documents"), out)
+        .awaitTermination()
+      val one = spark.read.parquet(out).filter(col("shard_id") === 3)
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") &&
+        plan.contains("shard_id"), s"expected pruned scan, got:\n$plan")
+      // pruned read returns exactly the batch gate's count for that shard
+      val expected = TextAnalysis.qShardAssign.build(spark, sf)
+        .filter(col("shard_id") === 3).select("n_docs").collect()(0).getLong(0)
+      assert(one.count() == expected)
     }
-    val one = spark.read.parquet(out).filter(col("shard_id") === 3)
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("shard_id"), s"expected pruned scan, got:\n$plan")
-    // pruned read returns exactly the batch gate's count for that shard
-    val expected = TextAnalysis.qShardAssign.build(spark, sf)
-      .filter(col("shard_id") === 3).select("n_docs").collect()(0).getLong(0)
-    assert(one.count() == expected)
   }
 
   test("persisted IVF index serves bit-identical results to the in-memory path") {
@@ -65,7 +56,7 @@ class StreamShardRouterSpec extends SparkSpec {
   test("persisted IVF postings scan carries the probed-cell partition filter") {
     // the dir is fingerprint+pid-keyed (round 8) — resolve it via the
     // operator's own accessor rather than rebuilding the naming by hand
-    val dir = Similarity.ivfIndexDir(spark, sf)
+    val dir = Similarity.ivfIndex.dir(spark, sf)
     val probe = spark.read.parquet(s"$dir/postings").filter(col("cell") === 0)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"))
