@@ -124,11 +124,47 @@ object DeltaCompact {
   private[streaming] def fs(dir: String, conf: Configuration): FileSystem =
     new Path(dir).getFileSystem(conf)
 
-  private def readSmallFile(p: Path, f: FileSystem): String = {
+  // ---- small JSON files: the manifests and the trees' flat sidecars ----
+
+  private def readText(p: Path, f: FileSystem): String = {
     val in = f.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in),
       StandardCharsets.UTF_8)
     finally in.close()
+  }
+
+  private def writeText(p: Path, txt: String, conf: Configuration,
+      overwrite: Boolean): Unit = {
+    val out = p.getFileSystem(conf).create(p, overwrite)
+    try out.write(txt.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** Numeric field `k` of the JSON text `txt` read from `p` (a `what`).
+    * A missing or malformed field fails loudly, naming the file. */
+  private def longField(txt: String, k: String, p: Path, what: String): Long =
+    s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
+      .getOrElse(throw new IllegalStateException(
+        s"corrupt $what $p: missing $k in $txt"))
+      .group(1).toLong
+
+  /** Write a flat `{"k":v,…}` sidecar, fields in the given order — the
+    * order is the byte layout, which trees already on disk share. */
+  private[streaming] def writeSidecar(p: Path, fields: Seq[(String, Long)],
+      conf: Configuration): Unit =
+    writeText(p, fields.map { case (k, v) => s""""$k":$v""" }
+      .mkString("{", ",", "}"), conf, overwrite = true)
+
+  /** The `keys` of a [[writeSidecar]] file (a `what`, for the corrupt-file
+    * message), or None when the file is absent. */
+  private[streaming] def readSidecar(p: Path, keys: Seq[String], what: String,
+      conf: Configuration): Option[Map[String, Long]] = {
+    val f = p.getFileSystem(conf)
+    if (!f.exists(p)) None
+    else {
+      val txt = readText(p, f)
+      Some(keys.map(k => k -> longField(txt, k, p, what)).toMap)
+    }
   }
 
   /** Parse one manifest JSON payload (shared by the pointer manifest and
@@ -139,12 +175,7 @@ object DeltaCompact {
     val histRe = """"history"\s*:\s*\[([^\]]*)\]""".r
     val hist = histRe.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
     val top = histRe.replaceFirstIn(s, "")
-    def field(k: String): Long = {
-      val m = s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(top)
-        .getOrElse(throw new IllegalStateException(
-          s"corrupt compaction manifest $p: missing $k in $s"))
-      m.group(1).toLong
-    }
+    def field(k: String): Long = longField(top, k, p, "compaction manifest")
     val history = """\{"gen":(\d+),"maxFoldedBatch":(-?\d+)\}""".r
       .findAllMatchIn(hist)
       .map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
@@ -168,7 +199,7 @@ object DeltaCompact {
     val p = manifestPath(outDir)
     val f = fs(outDir, conf)
     if (!f.exists(p)) None
-    else Some(parseManifest(readSmallFile(p, f), p))
+    else Some(parseManifest(readText(p, f), p))
   }
 
   private def manifestJson(m: Manifest, nonce: Option[String] = None): String = {
@@ -183,8 +214,7 @@ object DeltaCompact {
   }
 
   /** ONE definition of "the next generation's manifest under a retention
-    * policy", shared by [[compact]] and every out-of-object fold (the
-    * LSH geometry refresh, the BM25 rebuild, the codebook retrain):
+    * policy", computed by [[commitGeneration]] for every fold:
     * gen = prev + 1, the superseded generation joins the retained
     * history (truncated to the policy depth), and the policy itself is
     * persisted. Detached maintainers MUST pass `retainSnapshots >= 1`
@@ -203,17 +233,13 @@ object DeltaCompact {
     Manifest(prev.map(_.gen + 1).getOrElse(0L), watermark, history, keep)
   }
 
-  /** `private[streaming]`: [[StreamBm25Ingest.compactIndex]] and
-    * [[StreamAnnRefresh]] reuse the manifest commit protocol with folds
-    * (re-cap + df sum; retrain + reassign) that a plain
-    * union-repartition can't express. */
+  /** The pointer swap (protocol step 3): called by
+    * [[commitStagedGeneration]] after a won claim and by [[rollForward]]
+    * when it adopts a crashed winner's generation. */
   private[streaming] def writeManifest(outDir: String, m: Manifest,
       conf: Configuration = new Configuration()): Unit = {
     val tmp = new Path(outDir, s"_compaction.json.tmp.${System.nanoTime()}")
-    val f = fs(outDir, conf)
-    val out = f.create(tmp, true)
-    try out.write(manifestJson(m).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(tmp, manifestJson(m), conf, overwrite = true)
     // rename-with-overwrite within one directory: the pointer swap.
     // FileSystem.rename can't replace an existing destination portably;
     // FileContext.rename(OVERWRITE) is the API contract for exactly this
@@ -247,7 +273,7 @@ object DeltaCompact {
     val f = fs(dir, conf)
     if (!f.exists(p)) None
     else {
-      val txt = readSmallFile(p, f)
+      val txt = readText(p, f)
       val nonce = """"nonce"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
         .getOrElse(throw new IllegalStateException(
           s"corrupt generation manifest $p: missing nonce in $txt"))
@@ -258,14 +284,13 @@ object DeltaCompact {
 
   private[streaming] def writeGenManifest(dir: String, m: Manifest,
       nonce: String, conf: Configuration): Unit = {
-    val p = new Path(dir, GenManifestName)
-    val out = fs(dir, conf).create(p, false)
-    try out.write(manifestJson(m, Some(nonce)).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(new Path(dir, GenManifestName), manifestJson(m, Some(nonce)), conf,
+      overwrite = false)
   }
 
   /** Stage-and-commit one generation under the concurrent-maintainer
-    * guard (protocol steps 1-4 of the object scaladoc). `stage` must
+    * guard (protocol steps 1-4 of the object scaladoc) — the claim half
+    * of [[commitGeneration]], which every fold goes through. `stage` must
     * write the generation's COMPLETE content under the staging path it
     * is given; this helper then adds the in-generation manifest, claims
     * `base_gen=<man.gen>` by atomic rename, swaps the pointer, and GCs.
@@ -276,7 +301,7 @@ object DeltaCompact {
       conf: Configuration, gcGraceMs: Long = 0L)(stage: String => Unit): Unit = {
     val nonce = java.util.UUID.randomUUID().toString
     val staging = new Path(stagingRoot(outDir), s"gen=${man.gen}.$nonce")
-    val dest = new Path(outDir, s"base_gen=${man.gen}")
+    val dest = new Path(genDir(outDir, man.gen))
     val f = fs(outDir, conf)
     stage(staging.toString)
     writeGenManifest(staging.toString, man, nonce, conf)
@@ -330,16 +355,53 @@ object DeltaCompact {
       conf: Configuration, gcGraceMs: Long = 0L): Option[Manifest] = {
     var cur = readManifest(outDir, conf)
     var next = cur.map(_.gen + 1).getOrElse(0L)
-    var orphan = readGenManifest(s"$outDir/base_gen=$next", conf)
+    var orphan = readGenManifest(genDir(outDir, next), conf)
     while (orphan.isDefined) {
       val m = orphan.get._1
       writeManifest(outDir, m, conf)
       gcFolded(outDir, m, conf, gcGraceMs)
       cur = Some(m)
       next = m.gen + 1
-      orphan = readGenManifest(s"$outDir/base_gen=$next", conf)
+      orphan = readGenManifest(genDir(outDir, next), conf)
     }
     cur
+  }
+
+  private def genDir(dir: String, gen: Long): String = s"$dir/base_gen=$gen"
+
+  /** The committed generation's directory, or None before the first
+    * commit — how a reader finds a generation's own files (codebooks,
+    * sidecars): through the pointer, never by listing. */
+  private[streaming] def currentGenDir(dir: String,
+      conf: Configuration): Option[String] =
+    readManifest(dir, conf).map(m => genDir(dir, m.gen))
+
+  /** THE generation commit every fold goes through ([[compact]], the LSH
+    * geometry refresh, the BM25 index fold and rebuild, the IVF and PQ
+    * refreshes): the next manifest after the target's committed one,
+    * carrying `from`'s watermark, staged and claimed under the
+    * concurrent-maintainer guard ([[commitStagedGeneration]]), then GC of
+    * exactly the target's tombstone batches `tombstones` — captured by
+    * the caller BEFORE it read its input, so a delete landing mid-fold
+    * survives to apply logically.
+    *
+    * `into == from.dir` is a fold of a tree INTO ITSELF: the claimed slot
+    * follows `from.man`, which must come from [[captureForFold]] — input,
+    * watermark and slot from ONE rolled-forward manifest. A second
+    * roll-forward here could adopt a racing winner's generation and claim
+    * the slot after it over a view that winner already folded, instead of
+    * losing cleanly with a [[ConcurrentCompactionException]]. Otherwise
+    * `from` is a cross-tree SOURCE captured read-only ([[capture]]), and
+    * the target is rolled forward here, at commit. */
+  private[streaming] def commitGeneration(from: View, into: String,
+      conf: Configuration, retainSnapshots: Int, gcGraceMs: Long = 0L,
+      tombstones: Seq[Long] = Nil)(stage: String => Unit): Manifest = {
+    val prev =
+      if (into == from.dir) from.man else rollForward(into, conf, gcGraceMs)
+    val man = nextManifest(prev, from.watermark, retainSnapshots)
+    commitStagedGeneration(into, man, conf, gcGraceMs)(stage)
+    gcTombstoneBatches(into, tombstones, conf, gcGraceMs)
+    man
   }
 
   // ---- atomic delta landing ----
@@ -434,21 +496,71 @@ object DeltaCompact {
   private val WmCol = "__graft_wm"
   private val TsWmCol = "__graft_ts_wm"
 
-  /** ONE definition of "the corpus as of (manifest, deltaIds)": committed
-    * base (if any) + exactly the given delta batches, schema-aligned by
-    * name, each row tagged with its landing sequence ([[WmCol]]). Shared
-    * by [[readCorpus]] and [[compact]] so the data the fold writes can
-    * never diverge from the data readers see. */
-  private def assemble(spark: SparkSession, outDir: String,
-      man: Option[Manifest], deltaIds: Seq[Long],
-      allowEvolution: Boolean = false): DataFrame = {
+  /** One CAPTURED view of a tree: its committed manifest and exactly the
+    * delta batches above that manifest's watermark, listed once. A fold
+    * reads, and commits the watermark of, exactly the view it captured:
+    * a delta landing after the capture stays a delta above the committed
+    * watermark instead of being baked into a base it postdates (the
+    * forward-landing guarantee on [[compact]]). Readers use the same
+    * views, so the data a fold writes can never diverge from the data
+    * readers see. */
+  private[streaming] final case class View(dir: String, man: Option[Manifest],
+      deltas: Seq[Long]) {
+    def isEmpty: Boolean = man.isEmpty && deltas.isEmpty
+
+    /** The highest batch id the view covers (-1 when nothing landed). */
+    def watermark: Long =
+      (deltas ++ man.map(_.maxFoldedBatch)).foldLeft(-1L)(math.max)
+
+    /** The view's rows, no tombstone applied. */
+    def read(spark: SparkSession, allowEvolution: Boolean = false): DataFrame =
+      assemble(spark, this, allowEvolution).drop(WmCol)
+
+    /** The view's rows minus every tombstone landed under `dir` — listed
+      * at plan time, so a delete landing mid-fold is applied (but not
+      * GC'd by the caller's captured sweep; re-application is a no-op). */
+    def readLive(spark: SparkSession, keyCol: String,
+        allowEvolution: Boolean = false): DataFrame =
+      minus(spark, keyCol, readTombstones(spark, dir), allowEvolution)
+
+    private[DeltaCompact] def minus(spark: SparkSession, keyCol: String,
+        ts: Option[DataFrame], allowEvolution: Boolean): DataFrame = {
+      val tagged = assemble(spark, this, allowEvolution)
+      ts.fold(tagged)(antiTombstoned(tagged, _, keyCol)).drop(WmCol)
+    }
+  }
+
+  /** Capture `dir`'s view READ-ONLY: one manifest read, one delta
+    * listing. Never rolls the tree forward — a cross-tree fold's source
+    * and every serve read only. */
+  private[streaming] def capture(dir: String, conf: Configuration): View =
+    viewAfter(dir, readManifest(dir, conf), conf)
+
+  /** The view a fold of `dir` into itself reads: adopt a predecessor that
+    * won its rename but crashed pre-pointer ([[rollForward]]) BEFORE
+    * capturing, so the input, the watermark and the slot
+    * [[commitGeneration]] claims all follow that one manifest. */
+  private[streaming] def captureForFold(dir: String, conf: Configuration,
+      gcGraceMs: Long): View =
+    viewAfter(dir, rollForward(dir, conf, gcGraceMs), conf)
+
+  private def viewAfter(dir: String, man: Option[Manifest],
+      conf: Configuration): View =
+    View(dir, man,
+      listDeltaBatches(dir, conf).filter(id => man.forall(id > _.maxFoldedBatch)))
+
+  /** A view's rows — committed base (if any) + exactly its delta batches,
+    * schema-aligned by name, each row tagged with its landing sequence
+    * ([[WmCol]]). */
+  private def assemble(spark: SparkSession, v: View,
+      allowEvolution: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val parts =
-      man.map(m => spark.read.parquet(s"$outDir/base_gen=${m.gen}")
+      v.man.map(m => spark.read.parquet(genDir(v.dir, m.gen))
         .withColumn(WmCol, lit(m.maxFoldedBatch))).toSeq ++
-        deltaIds.map(id => spark.read.parquet(s"$outDir/batch=$id")
+        v.deltas.map(id => spark.read.parquet(s"${v.dir}/batch=$id")
           .withColumn(WmCol, lit(id)))
-    require(parts.nonEmpty, s"no landed data under $outDir")
+    require(parts.nonEmpty, s"no landed data under ${v.dir}")
     // allowEvolution = additive schema evolution (the table-format rule:
     // new columns may appear; old rows read them as null). The DEFAULT
     // stays strict — a silently missing column is usually an ingest bug,
@@ -456,21 +568,14 @@ object DeltaCompact {
     parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = allowEvolution))
   }
 
-  private[streaming] def unfoldedDeltas(outDir: String, man: Option[Manifest],
-      conf: Configuration = new Configuration()): Seq[Long] =
-    listDeltaBatches(outDir, conf).filter(id => man.forall(id > _.maxFoldedBatch))
-
   /** The full corpus as of NOW: committed base (if any) + every delta
     * batch newer than the fold watermark. Never lists `base_gen`
     * directories — the manifest IS the source of truth, which is what
     * makes a half-written new base invisible. */
   def readCorpus(spark: SparkSession, outDir: String,
-      allowEvolution: Boolean = false): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val man = readManifest(outDir, conf)
-    assemble(spark, outDir, man, unfoldedDeltas(outDir, man, conf),
-      allowEvolution).drop(WmCol)
-  }
+      allowEvolution: Boolean = false): DataFrame =
+    capture(outDir, spark.sparkContext.hadoopConfiguration)
+      .read(spark, allowEvolution)
 
   // ---- tombstones: the DELETE half of the corpus lifecycle ----
   //
@@ -515,10 +620,7 @@ object DeltaCompact {
     // pin it — recomputing at a crash-replayed re-land, AFTER the batch's
     // own data landed, would raise the watermark over the batch's own rows
     // and delete them
-    val wm = watermark.getOrElse(
-      (listDeltaBatches(outDir, conf) ++
-        readManifest(outDir, conf).map(_.maxFoldedBatch))
-        .foldLeft(-1L)(math.max))
+    val wm = watermark.getOrElse(capture(outDir, conf).watermark)
     // atomic like the data landing: a fold's tombstone capture or a
     // live serve's plan-time readTombstones never sees a half directory
     atomicLandDir(s"${tombstoneRoot(outDir)}/batch=$batchId", conf) { staging =>
@@ -594,23 +696,23 @@ object DeltaCompact {
     * generation still needs an applied tombstone's logical effect, and
     * re-application is a no-op by the sequence rule. */
   def readPendingTombstones(spark: SparkSession,
-      outDir: String): Option[DataFrame] = {
-    val ids = listPendingTombstoneBatches(outDir,
-      spark.sparkContext.hadoopConfiguration)
-    if (ids.isEmpty) None
-    else Some(ids.map(id => spark.read.parquet(s"${tombstoneRoot(outDir)}/batch=$id"))
-      .reduce(_ unionByName _))
-  }
+      outDir: String): Option[DataFrame] =
+    readTombstoneBatches(spark, outDir, listPendingTombstoneBatches(outDir,
+      spark.sparkContext.hadoopConfiguration))
 
   /** All landed tombstone keys (+ their watermarks), or None when no
     * delete has ever landed (schema is the caller's key schema, so an
     * empty frame can't be conjured here). */
-  def readTombstones(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val ids = listTombstoneBatches(outDir, spark.sparkContext.hadoopConfiguration)
+  def readTombstones(spark: SparkSession, outDir: String): Option[DataFrame] =
+    readTombstoneBatches(spark, outDir,
+      listTombstoneBatches(outDir, spark.sparkContext.hadoopConfiguration))
+
+  /** The keys of exactly the tombstone batches `ids`, or None for none. */
+  private def readTombstoneBatches(spark: SparkSession, outDir: String,
+      ids: Seq[Long]): Option[DataFrame] =
     if (ids.isEmpty) None
     else Some(ids.map(id => spark.read.parquet(s"${tombstoneRoot(outDir)}/batch=$id"))
       .reduce(_ unionByName _))
-  }
 
   /** Anti-join `tagged` (a [[WmCol]]-tagged corpus) against the landed
     * tombstones under the sequence rule: a row dies iff some tombstone
@@ -635,42 +737,9 @@ object DeltaCompact {
     * re-ingests after a delete correctly visible (the sequence rule on
     * [[landTombstones]]). `keyCol` names the delete key in both trees. */
   def readCorpusLive(spark: SparkSession, outDir: String,
-      keyCol: String = "doc_id", allowEvolution: Boolean = false): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val man = readManifest(outDir, conf)
-    readCorpusLivePinned(spark, outDir, man,
-      unfoldedDeltas(outDir, man, conf), keyCol, allowEvolution)
-  }
-
-  /** [[readCorpus]] over a CAPTURED view (manifest + delta ids), no
-    * tombstone application — the non-live twin of
-    * [[readCorpusLivePinned]], for maintainers that must read EXACTLY
-    * the view their watermark describes (a delta landing between a
-    * caller's watermark listing and plan construction must not leak into
-    * a generation whose manifest predates it). */
-  private[streaming] def readCorpusPinned(spark: SparkSession, outDir: String,
-      man: Option[Manifest], deltaIds: Seq[Long],
-      allowEvolution: Boolean = false): DataFrame =
-    assemble(spark, outDir, man, deltaIds, allowEvolution).drop(WmCol)
-
-  /** [[readCorpusLive]] over a CAPTURED view (manifest + delta ids) —
-    * for maintainers whose fold watermark must cover exactly what they
-    * read: a delta landing between the caller's capture and the plan's
-    * execution stays ABOVE the committed watermark instead of being
-    * silently baked into a base it postdates (the [[compact]]
-    * forward-landing guarantee, available to out-of-object folds like
-    * the LSH geometry refresh). Tombstones are still read at plan time —
-    * a delete landing mid-fold is applied but not GC'd by the caller's
-    * captured sweep, and re-application is a no-op. */
-  private[streaming] def readCorpusLivePinned(spark: SparkSession,
-      outDir: String, man: Option[Manifest], deltaIds: Seq[Long],
-      keyCol: String, allowEvolution: Boolean = false): DataFrame = {
-    val tagged = assemble(spark, outDir, man, deltaIds, allowEvolution)
-    readTombstones(spark, outDir) match {
-      case None => tagged.drop(WmCol)
-      case Some(ts) => antiTombstoned(tagged, ts, keyCol).drop(WmCol)
-    }
-  }
+      keyCol: String = "doc_id", allowEvolution: Boolean = false): DataFrame =
+    capture(outDir, spark.sparkContext.hadoopConfiguration)
+      .readLive(spark, keyCol, allowEvolution)
 
   /** Fold every landed delta into the next base generation and commit.
     * Idempotent: compacting with no unfolded deltas rewrites the base
@@ -749,9 +818,8 @@ object DeltaCompact {
       shardDirs: Boolean = true): Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
     // adopt a predecessor that won its rename but crashed pre-pointer
-    // BEFORE computing our own next generation
-    val prev = rollForward(outDir, conf, gcGraceMs)
-    val deltas = unfoldedDeltas(outDir, prev, conf)
+    // BEFORE capturing our own view (captureForFold)
+    val view = captureForFold(outDir, conf, gcGraceMs)
     // tombstone application: capture the landed tombstone batches ONCE
     // (the delta-capture discipline — a delete landing mid-fold stays
     // pending and applies logically via readCorpusLive until the next
@@ -770,19 +838,12 @@ object DeltaCompact {
         listPendingTombstoneBatches(outDir, conf).isEmpty,
       s"pending tombstones under $outDir but compact() was called without " +
         "tombstoneKey — the fold would resurrect deleted rows")
-    val assembled = assemble(spark, outDir, prev, deltas, allowEvolution)
-    val corpus = (tombstoneKey match {
-      case Some(k) if tsBatches.nonEmpty =>
-        val ts = tsBatches
-          .map(id => spark.read.parquet(s"${tombstoneRoot(outDir)}/batch=$id"))
-          .reduce(_ unionByName _)
-        // sequence-aware application (see antiTombstoned): a key
-        // re-ingested in a batch AFTER its delete folds into the new
-        // base; only at-or-under-watermark rows are excluded
-        antiTombstoned(assembled, ts, k)
-      case _ => assembled
-    }).drop(WmCol)
-    val watermark = (deltas ++ prev.map(_.maxFoldedBatch)).max
+    // sequence-aware application (see antiTombstoned): a key re-ingested
+    // in a batch AFTER its delete folds into the new base; only
+    // at-or-under-watermark rows are excluded
+    val corpus = tombstoneKey.fold(view.read(spark, allowEvolution))(k =>
+      view.minus(spark, k, readTombstoneBatches(spark, outDir, tsBatches),
+        allowEvolution))
     // step 1: the new base, one file per shard — repartition on the
     // shard key is the ONLY shuffle, sized by shard count not data.
     // sortCols: optional within-shard clustering (e.g. the LSH layout's
@@ -807,25 +868,23 @@ object DeltaCompact {
     // ([[readCorpusAsOf]]) — the table-format snapshot-retention
     // discipline that makes "train on the corpus exactly as it was at
     // snapshot g" reproducible.
-    val man = nextManifest(prev, watermark, retainSnapshots)
     // steps 1-4 (stage → claim by rename → pointer swap → GC) under the
-    // concurrent-maintainer guard — see the object scaladoc
-    commitStagedGeneration(outDir, man, conf, gcGraceMs) { staging =>
+    // concurrent-maintainer guard — see the object scaladoc. Applied
+    // tombstones fold away too: only the CAPTURED batches (a delete
+    // landed mid-fold was not applied and must survive to apply
+    // logically / at the next fold)
+    commitGeneration(view, outDir, conf, retainSnapshots, gcGraceMs,
+      tombstones = tsBatches) { staging =>
       val w = clustered
         .write.mode("overwrite")
         .option("maxRecordsPerFile", maxRecordsPerFile)
       (if (shardDirs) w.partitionBy("shard_id") else w).parquet(staging)
       extraStage(staging)
     }
-    // applied tombstones fold away too: only the CAPTURED batches (a
-    // delete landed mid-fold was not applied and must survive to apply
-    // logically / at the next fold)
-    gcTombstoneBatches(outDir, tsBatches, conf, gcGraceMs)
-    man
   }
 
-  /** Post-commit GC sweep by predicate — shared with
-    * [[StreamBm25Ingest.compactIndex]]'s aggregating fold. Keeps the
+  /** Post-commit GC sweep by predicate, run by every generation commit
+    * and every roll-forward adoption. Keeps the
     * current generation AND every retained snapshot in the manifest's
     * history. */
   private[streaming] def gcFolded(outDir: String, man: Manifest,
@@ -900,6 +959,6 @@ object DeltaCompact {
       s"snapshot $gen not retained under $outDir (current ${man.gen}, " +
         s"retained ${man.history.map(_._1).mkString("[", ",", "]")}) — " +
         "compact with retainSnapshots > 0 to keep history readable")
-    spark.read.parquet(s"$outDir/base_gen=$gen")
+    spark.read.parquet(genDir(outDir, gen))
   }
 }

@@ -64,39 +64,16 @@ object StreamAnnRefresh {
         col("kv.embedding").as("embedding"))
   }
 
-  /** The retrain's view of the corpus + the watermark it commits: the
-    * FULL manifest-routed corpus (committed base, if the tree was ever
-    * [[DeltaCompact.compact]]ed, + unfolded deltas — reading `batch=`
-    * directories alone would silently retrain on the unfolded tail
-    * only), minus tombstoned rows when `tombstoneKey` is set (a retrain
-    * must not learn from, or reassign, deleted vectors). The watermark
-    * is the highest corpus batch the retrain saw: max unfolded delta id,
-    * or the base's own fold watermark when everything is folded. */
-  private def corpusAndWatermark(s: SparkSession, corpusDir: String,
-      tombstoneKey: Option[String]): (DataFrame, Long) = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val man = DeltaCompact.readManifest(corpusDir, conf)
-    val deltas = DeltaCompact.unfoldedDeltas(corpusDir, man, conf)
-    require(man.nonEmpty || deltas.nonEmpty,
-      s"no landed corpus under $corpusDir")
-    // PINNED to the same (manifest, deltas) the watermark describes: a
-    // batch landing between the listing above and plan construction must
-    // stay ABOVE the committed watermark, not silently join a retrain
-    // whose manifest predates it — the capture discipline a DETACHED
-    // refresh racing live ingest depends on
-    val corpus = tombstoneKey match {
-      case Some(k) =>
-        DeltaCompact.readCorpusLivePinned(s, corpusDir, man, deltas, keyCol = k)
-      case None => DeltaCompact.readCorpusPinned(s, corpusDir, man, deltas)
-    }
-    (corpus, (deltas ++ man.map(_.maxFoldedBatch)).max)
-  }
-
-  /** Retrain + reassign + atomic cut-over. Reads the corpus under
-    * `corpusDir` via the manifest (committed base + unfolded deltas —
-    * see [[corpusAndWatermark]]), trains a fresh per-label codebook from
-    * a [[reservoir]] sample, writes the full reassignment as the next
-    * generation, and commits. `tombstoneKey`: apply landed corpus
+  /** Retrain + reassign + atomic cut-over. Reads ONE captured view of
+    * the corpus under `corpusDir` — the FULL manifest-routed corpus
+    * (committed base, if the tree was ever [[DeltaCompact.compact]]ed, +
+    * unfolded deltas — reading `batch=` directories alone would silently
+    * retrain on the unfolded tail only) — and commits that view's
+    * watermark: a batch landing after the capture stays ABOVE it, never
+    * silently joining a retrain whose manifest predates it (the capture
+    * discipline a DETACHED refresh racing live ingest depends on). Trains
+    * a fresh per-label codebook from a [[reservoir]] sample, writes the
+    * full reassignment as the next generation, and commits. `tombstoneKey`: apply landed corpus
     * tombstones before retraining (the delete-lifecycle contract —
     * deleted vectors neither train nor reassign). Returns the committed
     * manifest. Run from the ingest's own maintenance cadence (the
@@ -106,45 +83,41 @@ object StreamAnnRefresh {
       tombstoneKey: Option[String] = None,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
     GraftFunctions.register(s)
-    val conf = s.sparkContext.hadoopConfiguration
-    val (corpus, watermark) = corpusAndWatermark(s, corpusDir, tombstoneKey)
+    val view = DeltaCompact.capture(corpusDir, s.sparkContext.hadoopConfiguration)
+    val corpus = tombstoneKey.fold(view.read(s))(k => view.readLive(s, keyCol = k))
     val cents = StreamAnn.labelCentroids(reservoir(corpus, sampleSize))
       .localCheckpoint()
-    val prev = DeltaCompact.rollForward(idxDir, conf)
     // detached callers pass retainSnapshots >= 1 (nextManifest doc): the
-    // commit races live serves, which must survive on the old generation
-    val man = DeltaCompact.nextManifest(prev, watermark, retainSnapshots)
-    // stage the generation COMPLETELY (codebook first, then postings),
+    // commit races live serves, which must survive on the old generation.
+    // Stage the generation COMPLETELY (codebook first, then postings),
     // then claim-by-rename + pointer swap + GC — the shared
     // concurrent-maintainer-guarded commit (DeltaCompact scaladoc)
-    DeltaCompact.commitStagedGeneration(idxDir, man, conf) { staging =>
+    DeltaCompact.commitGeneration(view, idxDir, s.sparkContext.hadoopConfiguration,
+      retainSnapshots) { staging =>
       cents.write.mode("overwrite").parquet(s"$staging/codebook")
       StreamAnn.assign(corpus, cents)
         .write.mode("overwrite").partitionBy("assigned_cell")
         .parquet(s"$staging/postings")
     }
-    man
   }
 
   /** The SERVING codebook — current generation per the manifest. New
     * batches assign against this until the next refresh. */
-  def currentCodebook(s: SparkSession, idxDir: String): DataFrame = {
-    val man = committed(s, idxDir)
-    s.read.parquet(s"$idxDir/base_gen=${man.gen}/codebook")
-  }
+  def currentCodebook(s: SparkSession, idxDir: String): DataFrame =
+    current(s, idxDir, "codebook")
 
   /** The SERVING assignment postings — current generation per the
     * manifest, cell-partition-pruned on read like every persisted
     * posting layout. */
-  def currentAssignments(s: SparkSession, idxDir: String): DataFrame = {
-    val man = committed(s, idxDir)
-    s.read.parquet(s"$idxDir/base_gen=${man.gen}/postings")
-  }
+  def currentAssignments(s: SparkSession, idxDir: String): DataFrame =
+    current(s, idxDir, "postings")
 
-  private def committed(s: SparkSession, idxDir: String): DeltaCompact.Manifest =
-    DeltaCompact.readManifest(idxDir, s.sparkContext.hadoopConfiguration)
+  /** Table `sub` of the committed generation. */
+  private def current(s: SparkSession, idxDir: String, sub: String): DataFrame =
+    s.read.parquet(DeltaCompact.currentGenDir(idxDir, s.sparkContext.hadoopConfiguration)
       .getOrElse(throw new IllegalStateException(
-        s"no committed codebook generation under $idxDir — run refresh first"))
+        s"no committed codebook generation under $idxDir — run refresh first")) +
+      s"/$sub")
 
   // ---- the PQ tier's refresh: re-pick entries, re-encode, cut over ----
 
@@ -171,8 +144,9 @@ object StreamAnnRefresh {
       tombstoneKey: Option[String] = None,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
     GraftFunctions.register(s)
-    val conf = s.sparkContext.hadoopConfiguration
-    val (corpus, watermark) = corpusAndWatermark(s, corpusDir, tombstoneKey)
+    // the captured corpus view, exactly as in refresh
+    val view = DeltaCompact.capture(corpusDir, s.sparkContext.hadoopConfiguration)
+    val corpus = tombstoneKey.fold(view.read(s))(k => view.readLive(s, keyCol = k))
     // the new codebook: the PqEntries lowest-hash corpus vectors (the
     // reservoir rule at k = entries), ranked by the same hash — uniform
     // over the CURRENT distribution, deterministic under replay. The
@@ -185,28 +159,22 @@ object StreamAnnRefresh {
       .select(col("cent_rank"),
         transform(col("embedding"), _.cast("double")).as("c"))
       .localCheckpoint()
-    val prev = DeltaCompact.rollForward(idxDir, conf)
-    val man = DeltaCompact.nextManifest(prev, watermark, retainSnapshots)
     // stage codebook + codes COMPLETELY, then the shared guarded commit
-    DeltaCompact.commitStagedGeneration(idxDir, man, conf) { staging =>
+    DeltaCompact.commitGeneration(view, idxDir, s.sparkContext.hadoopConfiguration,
+      retainSnapshots) { staging =>
       pcents.write.mode("overwrite").parquet(s"$staging/pq_codebook")
       graft.operators.Similarity.pqAssign(corpus, pcents)
         .write.mode("overwrite").parquet(s"$staging/codes")
     }
-    man
   }
 
   /** The SERVING PQ codebook — current generation per the manifest. */
-  def currentPqCodebook(s: SparkSession, idxDir: String): DataFrame = {
-    val man = committed(s, idxDir)
-    s.read.parquet(s"$idxDir/base_gen=${man.gen}/pq_codebook")
-  }
+  def currentPqCodebook(s: SparkSession, idxDir: String): DataFrame =
+    current(s, idxDir, "pq_codebook")
 
   /** The SERVING code table (vec_id, cc0..cc7, m0..m7). */
-  def currentPqCodes(s: SparkSession, idxDir: String): DataFrame = {
-    val man = committed(s, idxDir)
-    s.read.parquet(s"$idxDir/base_gen=${man.gen}/codes")
-  }
+  def currentPqCodes(s: SparkSession, idxDir: String): DataFrame =
+    current(s, idxDir, "codes")
 
   /** The PQ drift audit: mean total reconstruction error of `emb`
     * under `pcents` — the number that sags upward when the codebook

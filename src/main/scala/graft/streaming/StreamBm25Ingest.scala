@@ -91,42 +91,25 @@ object StreamBm25Ingest {
     new org.apache.hadoop.fs.Path(batchDir, "_docid_range.json")
 
   private def writeDocIdRange(s: SparkSession, batchDir: String,
-      range: DocIdRange): Unit = {
-    val json =
-      s"""{"minId":${range.minId},"maxId":${range.maxId},"count":${range.count}}"""
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = rangePath(batchDir)
-    val out = p.getFileSystem(conf).create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      range: DocIdRange): Unit =
+    DeltaCompact.writeSidecar(rangePath(batchDir), Seq("minId" -> range.minId,
+      "maxId" -> range.maxId, "count" -> range.count),
+      s.sparkContext.hadoopConfiguration)
 
   /** The batch's doc-id envelope: the sidecar when present (one tiny
     * metadata read), else reconstructed from that batch's parquet — a
     * BATCH-sized column scan, the pre-sidecar fallback, never
     * corpus-sized. */
-  private def readDocIdRange(s: SparkSession, batchDir: String): DocIdRange = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = rangePath(batchDir)
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      def field(k: String): Long =
-        s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
-          .getOrElse(throw new IllegalStateException(
-            s"corrupt doc-id range sidecar $p: $txt")).group(1).toLong
-      DocIdRange(field("minId"), field("maxId"), field("count"))
-    } else {
-      val r = s.read.parquet(batchDir)
-        .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1))).head()
-      if (r.getLong(2) == 0L) DocIdRange(0L, -1L, 0L)
-      else DocIdRange(r.getLong(0), r.getLong(1), r.getLong(2))
+  private def readDocIdRange(s: SparkSession, batchDir: String): DocIdRange =
+    DeltaCompact.readSidecar(rangePath(batchDir), Seq("minId", "maxId", "count"),
+      "doc-id range sidecar", s.sparkContext.hadoopConfiguration) match {
+      case Some(m) => DocIdRange(m("minId"), m("maxId"), m("count"))
+      case None =>
+        val r = s.read.parquet(batchDir)
+          .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1))).head()
+        if (r.getLong(2) == 0L) DocIdRange(0L, -1L, 0L)
+        else DocIdRange(r.getLong(0), r.getLong(1), r.getLong(2))
     }
-  }
 
   /** Enforce the fold's batch-disjointness precondition in O(batches),
     * not O(docs): compare the per-batch doc-id ENVELOPES (the landed
@@ -187,28 +170,16 @@ object StreamBm25Ingest {
   def mergeIndexes(s: SparkSession, outDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     assertBatchDisjoint(s, s"$outDir/docs")
-    TextAnalysis.bm25Index(recapMergePartial(indexPartials(s, outDir)))
+    TextAnalysis.bm25Index(recapMergePartial(DeltaCompact.capture(s"$outDir/idx",
+      s.sparkContext.hadoopConfiguration).read(s)))
   }
 
-  /** Every CURRENT partial — the committed base generation (if any index
-    * compaction has run) plus each batch delta above the fold watermark.
-    * Readers go through the manifest, never by listing, so a
-    * half-written base is invisible (the [[DeltaCompact]] discipline). */
-  private def indexPartials(s: SparkSession, outDir: String): DataFrame = {
-    val idxDir = s"$outDir/idx"
-    val conf = s.sparkContext.hadoopConfiguration
-    val man = DeltaCompact.readManifest(idxDir, conf)
-    val parts =
-      man.map(m => s.read.parquet(s"$idxDir/base_gen=${m.gen}")).toSeq ++
-        DeltaCompact.unfoldedDeltas(idxDir, man, conf)
-          .map(id => s.read.parquet(s"$idxDir/batch=$id"))
-    require(parts.nonEmpty, s"no landed index partials under $idxDir")
-    parts.map(_.select("tok", "kept", "dfc"))
-      .reduce(_ unionByName _)
-  }
-
-  /** The associative fold on PARTIAL schema: per term, re-cap the
-    * concatenated min-k lists and sum the partial dfs — output is again
+  /** The associative fold on PARTIAL schema — over a captured view of
+    * the index tree (the committed base generation, if any index
+    * compaction has run, plus each batch delta above its watermark;
+    * through the manifest, never by listing, so a half-written base is
+    * invisible): per term, re-cap the concatenated min-k lists and sum
+    * the partial dfs — output is again
     * a partial (tok, kept, dfc), so folded generations keep folding with
     * future batches exactly (min-k of a union = min-k of concatenated
     * min-ks; df is additive given the batch-disjointness precondition). */
@@ -249,21 +220,14 @@ object StreamBm25Ingest {
     graft.functions.GraftFunctions.register(s)
     val idxDir = s"$outDir/idx"
     val conf = s.sparkContext.hadoopConfiguration
-    val prev = DeltaCompact.rollForward(idxDir, conf)
-    val deltas = DeltaCompact.unfoldedDeltas(idxDir, prev, conf)
-    val folded = recapMergePartial(indexPartials(s, outDir))
-    val watermark = (deltas ++ prev.map(_.maxFoldedBatch)).max
-    val man = DeltaCompact.nextManifest(prev, watermark, retainSnapshots)
-    // stage → claim-by-rename → pointer swap → GC: the shared
-    // concurrent-maintainer-guarded commit, so the protocol can't
-    // diverge between the three fold flavors
-    DeltaCompact.commitStagedGeneration(idxDir, man, conf) { staging =>
-      folded
-        .repartitionByRange(col("tok"))
-        .sortWithinPartitions("tok")
-        .write.mode("overwrite").parquet(staging)
-    }
-    man
+    // the fold reads exactly the view its watermark and slot describe: a
+    // partial landing mid-fold stays a delta above the new watermark,
+    // never folded into the base AND merged again as a delta
+    val view = DeltaCompact.captureForFold(idxDir, conf, gcGraceMs = 0L)
+    // stage → claim-by-rename → pointer swap → GC: the one generation
+    // commit all six folds share, so the protocol can't diverge
+    DeltaCompact.commitGeneration(view, idxDir, conf, retainSnapshots)(
+      writePartial(recapMergePartial(view.read(s)), _))
   }
 
   /** The lexical delete-maintenance step: pending corpus tombstones ⇒
@@ -326,8 +290,6 @@ object StreamBm25Ingest {
       gcGraceMs: Long, retainSnapshots: Int): DeltaCompact.Manifest = {
     graft.functions.GraftFunctions.register(s)
     val docsDir = s"$outDir/docs"
-    val idxDir = s"$outDir/idx"
-    val conf = s.sparkContext.hadoopConfiguration
     // retention covers BOTH trees: a detached rebuild's docs fold races
     // concurrent serve plans over the docs corpus exactly as its idx
     // commit races index serves
@@ -337,17 +299,18 @@ object StreamBm25Ingest {
     // between the fold and this read would sit above the committed
     // watermark, so baking it into the rebuilt base AND leaving it a
     // delta would double-count its docs at merge time
-    val live = DeltaCompact.readCorpusAsOf(s, docsDir, docMan.gen)
-      .select(col("doc_id"), col("text"))
-    val prev = DeltaCompact.rollForward(idxDir, conf, gcGraceMs)
-    val man = DeltaCompact.nextManifest(prev, docMan.maxFoldedBatch,
-      retainSnapshots)
-    DeltaCompact.commitStagedGeneration(idxDir, man, conf, gcGraceMs) { staging =>
-      TextAnalysis.bm25Partial(TextAnalysis.bm25Postings(live))
-        .repartitionByRange(col("tok"))
-        .sortWithinPartitions("tok")
-        .write.mode("overwrite").parquet(staging)
-    }
-    man
+    val folded = DeltaCompact.View(docsDir, Some(docMan), Nil)
+    val live = folded.read(s).select(col("doc_id"), col("text"))
+    DeltaCompact.commitGeneration(folded, s"$outDir/idx",
+      s.sparkContext.hadoopConfiguration, retainSnapshots, gcGraceMs)(
+      writePartial(TextAnalysis.bm25Partial(TextAnalysis.bm25Postings(live)), _))
   }
+
+  /** A base-generation partial in the batch-built index's layout:
+    * tok-range-partitioned, tok-sorted. */
+  private def writePartial(partial: DataFrame, path: String): Unit =
+    partial
+      .repartitionByRange(col("tok"))
+      .sortWithinPartitions("tok")
+      .write.mode("overwrite").parquet(path)
 }

@@ -88,13 +88,18 @@ object StreamLshIngest {
     * residual tb filter exactly as before. */
   def landPostingsDelta(postings: DataFrame, idxDir: String, batchId: Long): String =
     DeltaCompact.atomicLandDir(s"$idxDir/batch=$batchId",
-      postings.sparkSession.sparkContext.hadoopConfiguration) { staging =>
-      postings
-        .withColumn("shard_id",
-          graft.operators.Similarity.lshDirKey(col("tb")).cast("int"))
-        .sortWithinPartitions("shard_id", "tb")
-        .write.mode("overwrite").parquet(staging)
-    }
+      postings.sparkSession.sparkContext.hadoopConfiguration)(
+      writePostings(postings, _))
+
+  /** The one posting-file writer, for deltas and refreshed generations
+    * alike: plain files, each sorted by (shard_id, tb), `shard_id` the
+    * int `tb_hi` directory key carried as a data column. */
+  private def writePostings(postings: DataFrame, path: String): Unit =
+    postings
+      .withColumn("shard_id",
+        graft.operators.Similarity.lshDirKey(col("tb")).cast("int"))
+      .sortWithinPartitions("shard_id", "tb")
+      .write.mode("overwrite").parquet(path)
 
   // ---- geometry sidecar: the committed generation's (tables, bits) ----
 
@@ -116,13 +121,9 @@ object StreamLshIngest {
   private val GeometryFileName = "_lsh_geometry.json"
 
   private[streaming] def writeGeometry(genDir: String, g: LshGeometry,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(genDir, GeometryFileName)
-    val out = p.getFileSystem(conf).create(p, true)
-    try out.write(s"""{"tables":${g.tables},"bits":${g.bits}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    DeltaCompact.writeSidecar(new org.apache.hadoop.fs.Path(genDir, GeometryFileName),
+      Seq("tables" -> g.tables.toLong, "bits" -> g.bits.toLong), conf)
 
   /** The SERVING geometry: the committed generation's sidecar, or the
     * registry defaults for trees that predate geometry refresh (deltas
@@ -132,26 +133,12 @@ object StreamLshIngest {
     * fields. */
   def readGeometry(s: SparkSession, idxDir: String): LshGeometry = {
     val conf = s.sparkContext.hadoopConfiguration
-    DeltaCompact.readManifest(idxDir, conf) match {
-      case None => DefaultGeometry
-      case Some(m) =>
-        val p = new org.apache.hadoop.fs.Path(
-          s"$idxDir/base_gen=${m.gen}", GeometryFileName)
-        val f = p.getFileSystem(conf)
-        if (!f.exists(p)) DefaultGeometry
-        else {
-          val in = f.open(p)
-          val txt =
-            try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-              java.nio.charset.StandardCharsets.UTF_8)
-            finally in.close()
-          def field(k: String): Int =
-            s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
-              .getOrElse(throw new IllegalStateException(
-                s"corrupt LSH geometry sidecar $p: $txt")).group(1).toInt
-          LshGeometry(field("tables"), field("bits"))
-        }
-    }
+    DeltaCompact.currentGenDir(idxDir, conf)
+      .flatMap(g => DeltaCompact.readSidecar(
+        new org.apache.hadoop.fs.Path(g, GeometryFileName), Seq("tables", "bits"),
+        "LSH geometry sidecar", conf))
+      .fold(DefaultGeometry)(m =>
+        LshGeometry(Math.toIntExact(m("tables")), Math.toIntExact(m("bits"))))
   }
 
   /** Fold every landed posting delta into the next base generation —
@@ -219,16 +206,12 @@ object StreamLshIngest {
       retainSnapshots: Int = DeltaCompact.PreserveRetention): LshGeometry = {
     graft.functions.GraftFunctions.register(s)
     val conf = s.sparkContext.hadoopConfiguration
-    val corpusMan = DeltaCompact.readManifest(corpusDir, conf)
-    val corpusDeltas = DeltaCompact.unfoldedDeltas(corpusDir, corpusMan, conf)
-    require(corpusMan.nonEmpty || corpusDeltas.nonEmpty,
-      s"no landed corpus under $corpusDir")
     // the rebuild's input: exactly the CAPTURED corpus view, minus
     // tombstoned vectors — a refresh must not re-index deleted rows, and
     // a batch landing mid-refresh must stay a delta above the committed
     // watermark (the compact() forward-landing guarantee)
-    val live = DeltaCompact.readCorpusLivePinned(s, corpusDir, corpusMan,
-      corpusDeltas, keyCol = "vec_id")
+    val corpus = DeltaCompact.capture(corpusDir, conf)
+    val live = corpus.readLive(s, keyCol = "vec_id")
     val bits = bitsOverride.getOrElse(
       graft.operators.Similarity.lshGeometry(live.count(), cap))
     val geom = LshGeometry(graft.operators.Similarity.LshTables, bits)
@@ -237,26 +220,21 @@ object StreamLshIngest {
     // those after the commit — the compact() capture discipline, so a
     // delete landing mid-refresh survives to apply logically
     val tsBatches = DeltaCompact.listTombstoneBatches(idxDir, conf)
-    val watermark = (corpusDeltas ++ corpusMan.map(_.maxFoldedBatch)).max
-    val prev = DeltaCompact.rollForward(idxDir, conf, gcGraceMs)
     // retainSnapshots >= 1 for DETACHED callers: the commit races live
     // serve plans, and a history-less manifest would GC the superseded
     // base at the swap instant under a reader mid-plan (nextManifest doc)
-    val man = DeltaCompact.nextManifest(prev, watermark, retainSnapshots)
-    DeltaCompact.commitStagedGeneration(idxDir, man, conf, gcGraceMs) { staging =>
-      // plain (shard_id, tb)-sorted files, shard_id an int data column —
-      // the same no-directory layout the fold writes (shardDirs = false
-      // rationale on compactPostings): no streamed-tree serve prunes on
-      // the dirs, and the ≤128-way dynamic-partition fan-out dominated
-      // the rebuild's wall time at sf0.1 (~3 s of writer constants)
-      graft.operators.Similarity.lshPostings(live, geom.tables, geom.bits)
-        .withColumn("shard_id",
-          graft.operators.Similarity.lshDirKey(col("tb")).cast("int"))
-        .sortWithinPartitions("shard_id", "tb")
-        .write.mode("overwrite").parquet(staging)
+    DeltaCompact.commitGeneration(corpus, idxDir, conf, retainSnapshots,
+      gcGraceMs, tombstones = tsBatches) { staging =>
+      // the delta layout (writePostings), the same no-directory layout the
+      // fold writes (shardDirs = false rationale on compactPostings): no
+      // streamed-tree serve prunes on the dirs, and the ≤128-way dynamic-
+      // partition fan-out dominated the rebuild's wall time at sf0.1
+      // (~3 s of writer constants)
+      writePostings(
+        graft.operators.Similarity.lshPostings(live, geom.tables, geom.bits),
+        staging)
       writeGeometry(staging, geom, conf)
     }
-    DeltaCompact.gcTombstoneBatches(idxDir, tsBatches, conf, gcGraceMs)
     geom
   }
 

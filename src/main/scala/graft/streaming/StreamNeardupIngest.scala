@@ -47,10 +47,7 @@ object StreamNeardupIngest {
     * the new one. */
   def ingestStep(batch: DataFrame, idxDir: String, batchId: Long): DataFrame = {
     val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val hasIndex = DeltaCompact.readManifest(idxDir, conf).nonEmpty ||
-      DeltaCompact.listDeltaBatches(idxDir, conf).nonEmpty
-    if (!hasIndex) {
+    if (DeltaCompact.capture(idxDir, s.sparkContext.hadoopConfiguration).isEmpty) {
       // first batch ever: nothing can precede it — empty verdict frame
       // in the serve schema
       val verdicts = batch.select(col("doc_id"), col("doc_id").as("dup_of"),

@@ -130,19 +130,23 @@ object StreamShardRouter {
   def landBatch(batch: DataFrame, outDir: String, batchId: Long,
       numShards: Int = 16): String =
     DeltaCompact.atomicLandDir(s"$outDir/batch=$batchId",
-      batch.sparkSession.sparkContext.hadoopConfiguration) { staging =>
-      withShard(batch, numShards)
-        // co-locate each shard before the dynamic-partition write: ONE
-        // file per (batch, shard) — the fold's own layout rule — written
-        // by up to `numShards` parallel tasks. Without it every input
-        // partition writes its own file per shard (measured at sf0.1:
-        // 512 files / 2.1 s from a 32-partition batch vs 16 files /
-        // 0.5 s here, and read-back halves too — guide §6.2); a 1-
-        // partition batch instead serializes all shards through one
-        // writer task. This exchange is batch-sized by construction.
-        .repartition(col("shard_id"))
-        .write.mode("overwrite").partitionBy("shard_id").parquet(staging)
-    }
+      batch.sparkSession.sparkContext.hadoopConfiguration)(
+      writeSharded(batch, numShards, _))
+
+  /** The one batch-directory writer of both landings. */
+  private def writeSharded(batch: DataFrame, numShards: Int,
+      path: String): Unit =
+    withShard(batch, numShards)
+      // co-locate each shard before the dynamic-partition write: ONE
+      // file per (batch, shard) — the fold's own layout rule — written
+      // by up to `numShards` parallel tasks. Without it every input
+      // partition writes its own file per shard (measured at sf0.1:
+      // 512 files / 2.1 s from a 32-partition batch vs 16 files /
+      // 0.5 s here, and read-back halves too — guide §6.2); a 1-
+      // partition batch instead serializes all shards through one
+      // writer task. This exchange is batch-sized by construction.
+      .repartition(col("shard_id"))
+      .write.mode("overwrite").partitionBy("shard_id").parquet(path)
 
   /** [[landBatch]] that SKIPS an empty batch without a separate counting
     * action: the row count rides the staged write itself as an
@@ -160,12 +164,7 @@ object StreamShardRouter {
     val obs = org.apache.spark.sql.Observation()
     DeltaCompact.atomicLandDirIf(s"$outDir/batch=$batchId",
       batch.sparkSession.sparkContext.hadoopConfiguration) { staging =>
-      withShard(
-        batch.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n")),
-        numShards)
-        .repartition(col("shard_id"))
-        .write.mode("overwrite").partitionBy("shard_id").parquet(staging)
+      writeSharded(batch.observe(obs, count(lit(1)).as("n")), numShards, staging)
       obs.get("n").asInstanceOf[Long] > 0L
     }
   }
