@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.StreamGate
+
 /** Benchmark main (driver contract): one JSON line with per-query seconds
   * at SPARK_GRAFT_SF_DIR.
   *
@@ -70,18 +72,18 @@ object Bench {
     }
     progress("streaming warmup")
     locally { // streaming-path warmup (incremental planner + stats codegen)
-      val wq = streaming.StreamingStats.run(
+      StreamGate.drain(streaming.StreamingStats.run(
         spark, "sequence = [ { type = fixed, value = 7, rate = 500, duration = 2 } ]",
-        triggerMs = 100L, sink = (stats, _) => { stats.collect(); () })
-      wq.processAllAvailable(); wq.stop()
+        triggerMs = 100L, sink = (stats, _) => { stats.collect(); () }))
     }
     progress("warmup complete; measuring")
 
-    def time(f: => Unit): Double = {
+    def timed[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
+      val a = f
+      ((System.nanoTime() - t0) / 1e9, a)
     }
+    def time(f: => Unit): Double = timed(f)._1
 
     // Session-health calibration marker (SCALE.md round 11 measured
     // cross-session absolute drift up to ±40% in degraded host windows):
@@ -259,17 +261,13 @@ object Bench {
     // the representative run decides the ≤20 s real-time verdict.
     val streamRuns = (1 to 3).map { _ =>
       System.gc()
-      time {
-        val q = streaming.StreamingStats.run(
-          spark,
-          "sequence = [ { type = fixed, value = 7, rate = 50000, duration = 20 } ]",
-          numStreams = 1,
-          triggerMs = 5000L,
-          secondsPerTrigger = 5,
-          sink = (stats, _) => { stats.collect(); () })
-        q.processAllAvailable()
-        q.stop()
-      }
+      time(StreamGate.drain(streaming.StreamingStats.run(
+        spark,
+        "sequence = [ { type = fixed, value = 7, rate = 50000, duration = 20 } ]",
+        numStreams = 1,
+        triggerMs = 5000L,
+        secondsPerTrigger = 5,
+        sink = (stats, _) => { stats.collect(); () })))
     }
     results("stream_ingest_50k") = BenchMetrics.median(streamRuns)
     progress("ramp scenario")
@@ -282,16 +280,12 @@ object Bench {
     // evidence. Reported outside the per-query total like the spike.
     val rampSec = {
       System.gc()
-      time {
-        val q = streaming.StreamingStats.run(
-          spark,
-          "sequence = [ { type = ramp, startRate = 1000, endRate = 50000, value = 7, duration = 30 } ]",
-          triggerMs = 5000L,
-          secondsPerTrigger = 5,
-          sink = (stats, _) => { stats.collect(); () })
-        q.processAllAvailable()
-        q.stop()
-      }
+      time(StreamGate.drain(streaming.StreamingStats.run(
+        spark,
+        "sequence = [ { type = ramp, startRate = 1000, endRate = 50000, value = 7, duration = 30 } ]",
+        triggerMs = 5000L,
+        secondsPerTrigger = 5,
+        sink = (stats, _) => { stats.collect(); () })))
     }
     progress(f"ramp 1k->50k over 30 s of data: $rampSec%.2fs")
     progress("spike recovery scenario")
@@ -337,32 +331,24 @@ object Bench {
     // equivalent of the reference's scenario-2 experiment table.
     val (spikeRawSec, spikeRawPeakDelay, spikeRawDrain) = {
       System.gc()
-      var qh: org.apache.spark.sql.streaming.StreamingQuery = null
-      val sec = time {
-        val q = streaming.StreamingStats.run(
-          spark, spikePlan,
-          triggerMs = 1000L,
-          sink = (stats, _) => { stats.collect(); () })
-        qh = q
-        q.processAllAvailable()
-        q.stop()
-      }
-      val (pk, dr) = BenchMetrics.spikeRecovery(progressBatches(qh).drop(1), 1000L)
+      val (sec, q) = timed(StreamGate.drain(streaming.StreamingStats.run(
+        spark, spikePlan,
+        triggerMs = 1000L,
+        sink = (stats, _) => { stats.collect(); () })))
+      val (pk, dr) = BenchMetrics.spikeRecovery(progressBatches(q).drop(1), 1000L)
       (sec, pk, dr)
     }
     progress(f"spike recovery (unsteered): $spikeRawSec%.2fs, " +
       f"peak delay $spikeRawPeakDelay%.2fs, drain $spikeRawDrain%.2fs")
 
-    def controllerSpikeRun(): (Double, Double, Double) = {
+    // One steered spike run: the listener `steer` builds for `key` steers
+    // the admission cap for this run only.
+    def steeredSpikeRun(key: String,
+        steer: String => streaming.PidRateListener): (Double, Double, Double) = {
       System.gc()
-      val key = "bench-spike"
-      val pid = new streaming.PidController(
-        kp = 0.5, ki = 0.1, minRows = 1000, maxRows = 200000)
-      val listener = new streaming.PidRateListener(
-        key, triggerMs = 1000L, initialLimit = 20000L, pid)
+      val listener = steer(key)
       spark.streams.addListener(listener)
-      var qh: org.apache.spark.sql.streaming.StreamingQuery = null
-      val sec = try time {
+      val (sec, q) = try timed {
         val q = streaming.StreamingStats.run(
           spark, spikePlan,
           triggerMs = 1000L,
@@ -372,9 +358,7 @@ object Bench {
         // event from the just-stopped headline runs would otherwise
         // self-attach it to a dead query id and leave the spike unsteered.
         listener.attach(q)
-        qh = q
-        q.processAllAvailable()
-        q.stop()
+        StreamGate.drain(q)
       } finally {
         spark.streams.removeListener(listener)
         sources.RateLimitRegistry.clear(key)
@@ -382,7 +366,7 @@ object Bench {
       // wall-clock saturates at the plan length and can't distinguish
       // controllers — peak delay + drain time is the pair the reference's
       // spike experiments actually compare (BASELINE.md rows 7-8)
-      val (pk, dr) = BenchMetrics.spikeRecovery(progressBatches(qh).drop(1), 1000L) // drop(1): cold-batch exclusion, as the soak does
+      val (pk, dr) = BenchMetrics.spikeRecovery(progressBatches(q).drop(1), 1000L) // drop(1): cold-batch exclusion, as the soak does
       (sec, pk, dr)
     }
     // TWO measured runs, per-metric min reported, all runs in the detail
@@ -390,7 +374,10 @@ object Bench {
     // estimator "regression" in r13 that was indistinguishable from
     // session noise — the same repeat-and-min discipline the sub-second
     // registry rows and calib_s already use. ~30 s extra per leg.
-    val spikeRuns = Seq.fill(2)(controllerSpikeRun())
+    val spikeRuns = Seq.fill(2)(steeredSpikeRun("bench-spike",
+      new streaming.PidRateListener(_, triggerMs = 1000L,
+        initialLimit = 20000L, new streaming.PidController(
+          kp = 0.5, ki = 0.1, minRows = 1000, maxRows = 200000))))
     val (spikeSec, spikePeakDelay, spikeDrain) =
       (spikeRuns.map(_._1).min, spikeRuns.map(_._2).min, spikeRuns.map(_._3).min)
     progress(f"spike recovery: $spikeSec%.2fs for 30 s of spiked data, " +
@@ -407,34 +394,11 @@ object Bench {
     // leg steers an absolute rows/s target from processing rate +
     // scheduling-delay backlog, the semantics the reference's experiments
     // actually compare. Same plan, same bar: ≤ 2× the 30 s data duration.
-    def estimatorSpikeRun(): (Double, Double, Double) = {
-      System.gc()
-      val key = "bench-spike-est"
-      val listener = new streaming.PidRateListener(
-        key, triggerMs = 1000L, initialLimit = 20000L,
-        estimator = Some(new streaming.PidRateEstimator(
+    val spikeEstRuns = Seq.fill(2)(steeredSpikeRun("bench-spike-est", // same discipline as the controller leg
+      new streaming.PidRateListener(_, triggerMs = 1000L,
+        initialLimit = 20000L, estimator = Some(new streaming.PidRateEstimator(
           batchIntervalMs = 1000L, proportional = 1.0,
-          integral = 0.2, derivative = 0.0)))
-      spark.streams.addListener(listener)
-      var qh: org.apache.spark.sql.streaming.StreamingQuery = null
-      val sec = try time {
-        val q = streaming.StreamingStats.run(
-          spark, spikePlan,
-          triggerMs = 1000L,
-          rateLimitKey = Some(key),
-          sink = (stats, _) => { stats.collect(); () })
-        listener.attach(q)
-        qh = q
-        q.processAllAvailable()
-        q.stop()
-      } finally {
-        spark.streams.removeListener(listener)
-        sources.RateLimitRegistry.clear(key)
-      }
-      val (pk, dr) = BenchMetrics.spikeRecovery(progressBatches(qh).drop(1), 1000L) // drop(1): cold-batch exclusion, as the soak does
-      (sec, pk, dr)
-    }
-    val spikeEstRuns = Seq.fill(2)(estimatorSpikeRun()) // same discipline as the controller leg
+          integral = 0.2, derivative = 0.0)))))
     val (spikeEstSec, spikeEstPeakDelay, spikeEstDrain) = (spikeEstRuns.map(_._1).min,
       spikeEstRuns.map(_._2).min, spikeEstRuns.map(_._3).min)
     progress(f"spike recovery (estimator): $spikeEstSec%.2fs for 30 s of spiked data, " +
@@ -487,17 +451,20 @@ object Bench {
         }.getOrElse(-1L)
         finally src.close()
       } catch { case scala.util.control.NonFatal(_) => -1L }
-    def soakRun(): SoakRun = {
-      System.gc()
-      val memStart = memAvailMb()
-      val gc0 = totalGcMs()
-      val src = spark.readStream.format("plan-gen")
-        .option("plan",
-          "sequence = [ { type = fixed, value = 7, rate = 50000, duration = 120 } ]")
+    // the plan-gen source of the soak, dedup-soak and ANN legs: one
+    // stream, 5 plan-seconds per trigger, one partition per core
+    def planGen(plan: String): org.apache.spark.sql.DataFrame =
+      spark.readStream.format("plan-gen")
+        .option("plan", plan)
         .option("streamId", 0)
         .option("secondsPerTrigger", 5)
         .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
+    def soakRun(): SoakRun = {
+      System.gc()
+      val memStart = memAvailMb()
+      val gc0 = totalGcMs()
+      val src = planGen("sequence = [ { type = fixed, value = 7, rate = 50000, duration = 120 } ]")
       val q = streaming.StreamingStats.windowedStats(
         streaming.StreamingStats.withHanoiCost(src))
         .writeStream
@@ -505,7 +472,7 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(5000L))
         .format("noop")
         .start()
-      val sec = time { q.processAllAvailable(); q.stop() }
+      val sec = time(StreamGate.drain(q))
       val prog = q.recentProgress.filter(_.numInputRows > 0)
       val durs = prog.flatMap(p =>
         Option(p.durationMs.get("triggerExecution")).map(_.longValue.toDouble))
@@ -559,14 +526,8 @@ object Bench {
     // input is the boundedness evidence.
     val (dsoakSec, dsoakRows, dsoakStateMax, dsoakStateLast) = {
       System.gc()
-      val src = spark.readStream.format("plan-gen")
-        .option("plan",
-          "sequence = [ { type = fixed, value = 1, rate = 50000, duration = 60 } ]")
-        .option("streamId", 0)
-        .option("secondsPerTrigger", 5)
-        .option("numPartitions", spark.sparkContext.defaultParallelism)
-        .load()
-      val q = src.withColumn("k", org.apache.spark.sql.functions.expr("uuid()"))
+      val q = planGen("sequence = [ { type = fixed, value = 1, rate = 50000, duration = 60 } ]")
+        .withColumn("k", org.apache.spark.sql.functions.expr("uuid()"))
         .withWatermark("event_time", "10 seconds")
         .dropDuplicatesWithinWatermark("k")
         .writeStream
@@ -574,7 +535,7 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(5000L))
         .format("noop")
         .start()
-      val sec = time { q.processAllAvailable(); q.stop() }
+      val sec = time(StreamGate.drain(q))
       val prog = q.recentProgress.filter(_.numInputRows > 0)
       val rows = prog.map(_.numInputRows).sum
       val state = prog.flatMap(p =>
@@ -600,20 +561,14 @@ object Bench {
     // a generator or admission shortfall must not fake a sustained rate
     def ingestWall(rate: Int): (Double, Long) = {
       System.gc()
-      var qh: org.apache.spark.sql.streaming.StreamingQuery = null
-      val sec = time {
-        val q = streaming.StreamingStats.run(
-          spark,
-          s"sequence = [ { type = fixed, value = 7, rate = $rate, duration = 20 } ]",
-          numStreams = 1,
-          triggerMs = 5000L,
-          secondsPerTrigger = 5,
-          sink = (stats, _) => { stats.collect(); () })
-        qh = q
-        q.processAllAvailable()
-        q.stop()
-      }
-      (sec, qh.recentProgress.map(_.numInputRows).sum)
+      val (sec, q) = timed(StreamGate.drain(streaming.StreamingStats.run(
+        spark,
+        s"sequence = [ { type = fixed, value = 7, rate = $rate, duration = 20 } ]",
+        numStreams = 1,
+        triggerMs = 5000L,
+        secondsPerTrigger = 5,
+        sink = (stats, _) => { stats.collect(); () })))
+      (sec, q.recentProgress.map(_.numInputRows).sum)
     }
     val sustainBar = 25.0 // 20 s of data + one 5 s trigger of slack
     val probeCap = 6400000 // 128× the headline; bounds probe wall-time
@@ -664,16 +619,9 @@ object Bench {
       val rowsAssigned = new java.util.concurrent.atomic.AtomicLong(0)
       val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
       import org.apache.spark.sql.functions._
-      val src = spark.readStream.format("plan-gen")
-        .option("plan",
-          "sequence = [ { type = fixed, value = 7, rate = 50000, duration = 20 } ]")
-        .option("streamId", 0)
-        .option("secondsPerTrigger", 5)
-        .option("numPartitions", spark.sparkContext.defaultParallelism)
-        .load()
+      val src = planGen("sequence = [ { type = fixed, value = 7, rate = 50000, duration = 20 } ]")
       try {
-        val sec = time {
-        val q = src.writeStream
+        val sec = time(StreamGate.drain(src.writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(5000L))
           .foreachBatch { (raw: org.apache.spark.sql.DataFrame, id: Long) =>
             // enrichment happens per batch: monotonically_increasing_id is
@@ -697,10 +645,7 @@ object Bench {
             nBatches.incrementAndGet()
             ()
           }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
+          .start()))
         (sec, nBatches.get, rowsAssigned.get)
       } catch {
         // leg isolation, like every other leg's timedOr: a failing ANN

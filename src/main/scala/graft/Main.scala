@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{GnuplotGraph, LogAnalytics}
+import graft.operators.{GnuplotGraph, LogAnalytics, StreamGate}
 import graft.streaming.{FanOutServer, PlanEndpoint, StreamingStats}
 
 /** The application surface — the reference is not just a library but two
@@ -74,14 +74,11 @@ object Main {
 
   /** One plan, foreground, per-batch stats TSV on stdout. Returns when the
     * plan's data is exhausted. */
-  def runPlan(spark: SparkSession, planText: String): Unit = {
-    val q = StreamingStats.run(spark, planText, sink = (stats, batchId) => {
+  def runPlan(spark: SparkSession, planText: String): Unit =
+    StreamGate.drain(StreamingStats.run(spark, planText, sink = (stats, _) => {
       StreamingStats.toTsv(stats, System.currentTimeMillis())
         .collect().foreach(r => println(r.getString(0)))
-    })
-    q.processAllAvailable()
-    q.stop()
-  }
+    }))
 
   /** The testbed server. Blocks until `maxSeconds` elapses (forever when
     * None); returns the bound (httpPort, tcpPort) via the callback for
@@ -98,24 +95,20 @@ object Main {
     // reference app's output) and raw-value TCP delivery under
     // subscriber credit (the reference testbed's data plane)
     val endpoint = new PlanEndpoint((id, _, planText) => {
-      val stats = StreamingStats.run(spark, planText, sink = (stats, _) => {
-        StreamingStats.toTsv(stats, System.currentTimeMillis())
-          .collect().foreach(r => println(r.getString(0)))
-        ()
-      })
-      val deliver =
-        try spark.readStream.format("plan-gen")
+      // a failed start rejects the plan (500, id unlisted); the harness
+      // stops the query already started, so none outlives the rejection
+      val Seq(stats, deliver) = StreamGate.start(
+        () => StreamingStats.run(spark, planText, sink = (stats, _) => {
+          StreamingStats.toTsv(stats, System.currentTimeMillis())
+            .collect().foreach(r => println(r.getString(0)))
+          ()
+        }),
+        () => spark.readStream.format("plan-gen")
           .option("plan", planText)
           .load()
           .writeStream
           .foreachBatch(fanOut.batchSink)
-          .start()
-        catch { case e: Throwable =>
-          // the endpoint rejects the plan (500, id unlisted) on rethrow —
-          // the already-running stats query must not outlive the rejection
-          try stats.stop() catch { case _: Throwable => () }
-          throw e
-        }
+          .start())
       queries.put(2 * id, stats)
       queries.put(2 * id + 1, deliver)
       ()

@@ -1004,18 +1004,12 @@ object Similarity {
     val cents = graft.streaming.StreamAnn
       .labelCentroids(emb.filter(col("vec_id") % 5 =!= 0)).localCheckpoint()
     val landDir = s"${TmpDirs.runDir("graft_annstream")}/assigned"
-    val q = Tables.readStream(s, d, "embeddings")
-      .filter(col("vec_id") % 5 === 0)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    StreamGate.run(StreamGate.replay(
+        Tables.readStream(s, d, "embeddings").filter(col("vec_id") % 5 === 0)) {
+      (batch, _) =>
         graft.streaming.StreamAnn.assign(batch, cents)
           .write.mode("append").parquet(landDir)
-        ()
-      }
-      .start()
-    // a failed or interrupted await leaves no stream running
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    })(())
     // explicit schema: an all-empty replay leaves only _SUCCESS behind,
     // and schema inference over zero part files would fail the gate
     val outSchema = StructType(Seq(
@@ -1053,22 +1047,13 @@ object Similarity {
         .labelCentroids(emb.filter(col("vec_id") % 5 =!= 0)).localCheckpoint(),
       () => {
         // 4 source files → 4 AvailableNow micro-batches → 4 delta dirs
-        emb.filter(col("vec_id") % 5 === 0).repartition(4)
-          .write.mode("overwrite").parquet(srcDir)
+        StreamGate.split(emb.filter(col("vec_id") % 5 === 0), srcDir)
         null
       }).head
-    val q = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.streaming.StreamShardRouter.landBatch(
-          batch.withColumn("doc_id", col("vec_id")), outDir, id)
-        ()
-      }
-      .start()
-    // a failed or interrupted await leaves no stream running
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    StreamGate.run(StreamGate.replay(StreamGate.splitSource(emb, srcDir)) {
+      (batch, id) => graft.streaming.StreamShardRouter.landBatch(
+        batch.withColumn("doc_id", col("vec_id")), outDir, id)
+    })(())
     graft.streaming.DeltaCompact.compact(s, outDir)
     val corpus = graft.streaming.DeltaCompact.readCorpus(s, outDir)
     // decoupled from the run dir (reaped 3 builds later), like
@@ -2314,60 +2299,33 @@ object Similarity {
     // both source splits written before either stream starts — two
     // independent jobs overlapped from driver threads (guide §2.6), so
     // the semantic stream isn't delayed by the lexical source write
-    Par.units(
-      () => docs.repartition(4).write.mode("overwrite").parquet(lexSrc),
-      () => emb.repartition(4).write.mode("overwrite").parquet(semSrc))
-    val lexQ = s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-      .parquet(lexSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.streaming.StreamBm25Ingest.ingestStep(b, lexOut, id)
-        if (id == 1L) {
-          graft.streaming.StreamBm25Ingest.compactIndex(s, lexOut); ()
-        }
-        ()
-      }
-      .start()
-    // the semantic ingest runs CONCURRENTLY with the lexical one (started
-    // below, both awaited after) — the two streams share nothing but the
-    // session, which is the production shape: one firehose, independent
-    // index maintainers, each on its own trigger cadence
-
-    // semantic ingest: LSH posting deltas landed in SERVE layout per
-    // batch, postings generation-folded mid-run (batch 1)
+    Par.units(() => StreamGate.split(docs, lexSrc), () => StreamGate.split(emb, semSrc))
+    val lexLeg = StreamGate.replay(StreamGate.splitSource(docs, lexSrc)) { (b, id) =>
+      graft.streaming.StreamBm25Ingest.ingestStep(b, lexOut, id)
+      if (id == 1L) graft.streaming.StreamBm25Ingest.compactIndex(s, lexOut)
+    }
+    // semantic ingest, CONCURRENT with the lexical one (the two streams
+    // share nothing but the session — the production shape: one firehose,
+    // independent index maintainers, each on its own trigger cadence): LSH
+    // posting deltas landed in SERVE layout per batch, postings
+    // generation-folded mid-run (batch 1)
     val semDocs = s"$root/sem_docs"
     val semIdx = s"$root/sem_idx"
-    val probes = try {
-      val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(semSrc)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val batch = b.withColumn("doc_id", col("vec_id"))
-            .select("doc_id", "vec_id", "label", "embedding")
-          // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
-          // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
-          graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
-          if (id == 1L) {
-            graft.streaming.StreamLshIngest.compactPostings(s, semIdx); ()
-          }
-          ()
-        }
-        .start()
-      try {
-        // the query-probe checkpoint is a pure function of the BASE embeddings
-        // table (no run-dir dependency, registry geometry — this gate never
-        // refreshes it), so it runs here, backfilling executor gaps while the
-        // two ingest streams drain, instead of as a serial serve-phase action
-        // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
-        // wait for the post-fold committed geometry)
-        val p = lshQueryProbes(emb).localCheckpoint()
-        lexQ.awaitTermination()
-        semQ.awaitTermination()
-        p
-      } finally semQ.stop() // no stream outlives a failed probe or ingest
-    } finally lexQ.stop()
+    val semLeg = StreamGate.replay(StreamGate.splitSource(emb, semSrc)) { (b, id) =>
+      val batch = b.withColumn("doc_id", col("vec_id"))
+        .select("doc_id", "vec_id", "label", "embedding")
+      // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
+      // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
+      graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
+      if (id == 1L) graft.streaming.StreamLshIngest.compactPostings(s, semIdx)
+    }
+    // the query-probe checkpoint is a pure function of the BASE embeddings
+    // table (no run-dir dependency, registry geometry — this gate never
+    // refreshes it), so it runs while the two ingest streams drain,
+    // backfilling executor gaps, instead of as a serial serve-phase action
+    // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
+    // wait for the post-fold committed geometry)
+    val probes = StreamGate.run(lexLeg, semLeg)(lshQueryProbes(emb).localCheckpoint())
 
     // serve BOTH branches off the folded artifacts, fuse, done —
     // checkpointed because the run dir is reaped 3 builds later
@@ -2577,23 +2535,18 @@ object Similarity {
     // regardless of where the ACT's capture falls (watermark semantics —
     // DetachedMaintainerSpec pins this), which is why ONE oracle still
     // pins the whole gate.
-    val maint = new graft.streaming.DetachedMaintainer("hybridlife")
-
-    // lexical ingest: per-batch capped partials; takedown at batch 1;
-    // the maintenance DECIDE runs every batch and rebuilds exactly once
     val lexSrc = s"$root/lex_src"
     val lexOut = s"$root/lex"
     val semSrc = s"$root/sem_src"
-    // both source splits written before either stream starts — two
-    // independent jobs overlapped from driver threads (guide §2.6)
-    Par.units(
-      () => docs.repartition(4).write.mode("overwrite").parquet(lexSrc),
-      () => emb.repartition(4).write.mode("overwrite").parquet(semSrc))
-    val lexQ = s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-      .parquet(lexSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
+    val semDocs = s"$root/sem_docs"
+    val semIdx = s"$root/sem_idx"
+    scala.util.Using.resource(new graft.streaming.DetachedMaintainer("hybridlife")) { maint =>
+      // both source splits written before either stream starts — two
+      // independent jobs overlapped from driver threads (guide §2.6)
+      Par.units(() => StreamGate.split(docs, lexSrc), () => StreamGate.split(emb, semSrc))
+      // lexical ingest: per-batch capped partials; takedown at batch 1;
+      // the maintenance DECIDE runs every batch and rebuilds exactly once
+      val lexLeg = StreamGate.replay(StreamGate.splitSource(docs, lexSrc)) { (b, id) =>
         val incoming = if (id >= 2L) b.filter(!takedownDoc) else b
         graft.streaming.StreamBm25Ingest.ingestStep(incoming, lexOut, id)
         if (id == 1L) {
@@ -2604,55 +2557,39 @@ object Similarity {
             doomed, s"$lexOut/docs", 0L, watermark = Some(id))
         }
         graft.streaming.StreamBm25Ingest.maintainIndex(s, lexOut, maint)
-        ()
       }
-      .start()
 
-    // semantic ingest (CONCURRENT with the lexical stream, as in
-    // q_hybrid_stream_persist): LSH posting deltas at the COMMITTED
-    // geometry; takedown at batch 1 tombstones corpus AND index;
-    // AnnMaintenance.lshStep decides every batch, its ACT detached
-    val semDocs = s"$root/sem_docs"
-    val semIdx = s"$root/sem_idx"
-    try {
-      try {
-        val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-          .parquet(semSrc)
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            val shaped = b.withColumn("doc_id", col("vec_id"))
-              .select("doc_id", "vec_id", "label", "embedding")
-            val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
-            val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
-            // corpus landing ∥ posting-delta landing (r17, guide §2.6)
-            graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
-              id, geometry = geomNow)
-            if (id == 1L) {
-              val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
-                .filter(takedownVec).select(col("vec_id")).localCheckpoint()
-              // two independent tombstone trees (corpus + index), one
-              // checkpointed key set — overlap the landings (guide §2.6)
-              Par.units(
-                () => { graft.streaming.DeltaCompact.landTombstones(
-                  doomed, semDocs, 0L, watermark = Some(id)); () },
-                () => { graft.streaming.StreamLshIngest.landTombstones(
-                  doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
-                  watermark = Some(id)); () })
-            }
-            graft.streaming.AnnMaintenance.lshStep(s, semDocs, semIdx,
-              maint, autoSize = false)
-            ()
-          }
-          .start()
-        try {
-          lexQ.awaitTermination()
-          semQ.awaitTermination()
-        } finally semQ.stop() // a failed ingest stops its sibling too
-        // quiesce: both detached ACTs must have committed (or surfaced their
-        // failure HERE) before the end-of-run folds touch the same trees
-        maint.awaitAll()
-      } finally lexQ.stop()
+      // semantic ingest (CONCURRENT with the lexical stream, as in
+      // q_hybrid_stream_persist): LSH posting deltas at the COMMITTED
+      // geometry; takedown at batch 1 tombstones corpus AND index;
+      // AnnMaintenance.lshStep decides every batch, its ACT detached
+      val semLeg = StreamGate.replay(StreamGate.splitSource(emb, semSrc)) { (b, id) =>
+        val shaped = b.withColumn("doc_id", col("vec_id"))
+          .select("doc_id", "vec_id", "label", "embedding")
+        val incoming = if (id >= 2L) shaped.filter(!takedownVec) else shaped
+        val geomNow = graft.streaming.StreamLshIngest.readGeometry(s, semIdx)
+        // corpus landing ∥ posting-delta landing (r17, guide §2.6)
+        graft.streaming.StreamLshIngest.ingestAndLand(incoming, semDocs, semIdx,
+          id, geometry = geomNow)
+        if (id == 1L) {
+          val doomed = graft.streaming.DeltaCompact.readCorpus(s, semDocs)
+            .filter(takedownVec).select(col("vec_id")).localCheckpoint()
+          // two independent tombstone trees (corpus + index), one
+          // checkpointed key set — overlap the landings (guide §2.6)
+          Par.units(
+            () => { graft.streaming.DeltaCompact.landTombstones(
+              doomed, semDocs, 0L, watermark = Some(id)); () },
+            () => { graft.streaming.StreamLshIngest.landTombstones(
+              doomed.select(col("vec_id").as("neighbor_id")), semIdx, 0L,
+              watermark = Some(id)); () })
+        }
+        graft.streaming.AnnMaintenance.lshStep(s, semDocs, semIdx,
+          maint, autoSize = false)
+      }
+      StreamGate.run(lexLeg, semLeg)(())
+      // quiesce: both detached ACTs must have committed (or surfaced their
+      // failure HERE) before the end-of-run folds touch the same trees
+      maint.awaitAll()
 
       // end-of-run maintenance tick: fold the post-refresh deltas, forget
       // the vector corpus's tombstones physically, carry the geometry —
@@ -2671,7 +2608,7 @@ object Similarity {
             retainSnapshots = graft.streaming.DeltaCompact.PreserveRetention)
           maint.await(lexOut)
         })
-    } finally maint.close()
+    }
 
     // serve purely off the folded artifacts, through the registry
     // kernels; the two branch checkpoints are independent (lex docs tree

@@ -821,10 +821,8 @@ object TextAnalysis {
     // localCheckpoint: train ONCE, not once per micro-batch re-plan
     val model = nbModel(s, d).localCheckpoint()
     val landDir = s"${TmpDirs.runDir("graft_nbstream")}/scored"
-    val q = Tables.readStream(s, d, "documents")
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    StreamGate.run(StreamGate.replay(Tables.readStream(s, d, "documents")) {
+      (batch, _) =>
         graft.streaming.StreamCuration.scoreWithModel(batch, model)
           .filter(col("n_scored_tokens") > 0)
           .select(col("doc_id"), col("source"),
@@ -832,11 +830,7 @@ object TextAnalysis {
             round(col("nb_score"), 4).as("nb_score"),
             when(round(col("nb_score"), 4) > 0, 1).otherwise(0).as("predicted_pos"))
           .write.mode("append").parquet(landDir)
-        ()
-      }
-      .start()
-    // a failed or interrupted await leaves no stream running
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    })(())
     // explicit schema: an all-empty replay leaves only _SUCCESS behind,
     // and schema inference over zero part files would fail the gate
     // instead of returning the (correctly) empty result
@@ -1104,10 +1098,8 @@ object TextAnalysis {
   val qStreamShardRoute: Q = Q(
     "q_stream_shard_route", ShardAuditSql) { (s, d) =>
     val outDir = TmpDirs.runDir("graft_shards")
-    val q = graft.streaming.StreamShardRouter.route(
-      Tables.readStream(s, d, "documents"), outDir)
-    // a failed or interrupted await leaves no stream running
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    StreamGate.run(() => graft.streaming.StreamShardRouter.route(
+      Tables.readStream(s, d, "documents"), outDir))(())
     s.read.parquet(outDir)
       .groupBy(col("shard_id").cast("int").as("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1603,18 +1595,10 @@ object TextAnalysis {
     val srcDir = s"$root/src"
     val outDir = s"$root/ingested"
     // 4 source files → 4 AvailableNow micro-batches → 4 landed partials
-    docs.repartition(4).write.mode("overwrite").parquet(srcDir)
-    val q = s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.streaming.StreamBm25Ingest.ingestStep(batch, outDir, id)
-        ()
-      }
-      .start()
-    // a failed or interrupted await leaves no stream running
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    StreamGate.split(docs, srcDir)
+    StreamGate.run(StreamGate.replay(StreamGate.splitSource(docs, srcDir)) {
+      (batch, id) => graft.streaming.StreamBm25Ingest.ingestStep(batch, outDir, id)
+    })(())
     val merged = graft.streaming.StreamBm25Ingest.mergeIndexes(s, outDir)
     // decoupled from the run dir (reaped 3 builds later), like
     // q_stream_ann_compact's read-back

@@ -22,7 +22,9 @@ import graft.operators.Similarity
   *  - [[StreamLshIngest.compactPostings]] carries the committed geometry
   *    across generation folds;
   *  - [[StreamBm25Ingest.maintainIndex]]: rebuild-on-pending-tombstones,
-  *    exact vs the batch build over survivors.
+  *    exact vs the batch build over survivors;
+  *  - the gate itself: a failure before its streams start (a corrupt
+  *    source table) still closes its maintainer.
   */
 class LifecycleV2Spec extends SparkSpec {
 
@@ -172,6 +174,28 @@ class LifecycleV2Spec extends SparkSpec {
     } finally {
       m.close()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
+  }
+
+  test("q_hybrid_lifecycle closes its maintainer when the source split fails") {
+    import scala.jdk.CollectionConverters._
+    def maintThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("hybridlife-") && t.isAlive).toSet
+    withTempDir("graft_lc2_badsrc") { dir =>
+      Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+        java.nio.file.Paths.get(s"$dir/documents.parquet"))
+      // half the embeddings carry `label` as a string: the table's schema
+      // reads fine, and the scan fails only once the gate splits the source
+      val src = spark.read.parquet(s"$sf/embeddings.parquet")
+      src.filter(col("vec_id") % 2 === 0).write.parquet(s"$dir/embeddings.parquet")
+      src.filter(col("vec_id") % 2 === 1).withColumn("label", col("label").cast("string"))
+        .write.mode("append").parquet(s"$dir/embeddings.parquet")
+      val before = maintThreads()
+      intercept[Exception](Similarity.qHybridLifecycle.build(spark, dir))
+      val deadline = System.currentTimeMillis() + 10000L
+      while ((maintThreads() -- before).nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50L)
+      assert((maintThreads() -- before).isEmpty, "maintainer threads outlived the failed gate")
     }
   }
 }
