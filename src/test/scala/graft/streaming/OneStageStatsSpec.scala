@@ -7,7 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{ForeachBatchShim, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -172,5 +173,76 @@ class OneStageStatsSpec extends SparkSpec {
         assert(stageIds.map(shuffleByStage).sum == 0L)
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the stats job runs a named task function on ForeachBatchSink's LogicalRDD, planning nothing") {
+    val rows = (0 until 4000).map(i => Row(3 + i % 3, i % 2, java.lang.Long.valueOf(i.toLong)))
+    val data = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), InputSchema)
+    // the batch as ForeachBatchSink builds it: a LogicalRDD over the
+    // micro-batch's RDD, here one whose tasks report their task function
+    val (scan, batch) = ForeachBatchShim.batch(data.queryExecution.toRdd.mapPartitions(TaskFunctionSpy.wrap), data)
+    val Tag = "graft.spec.statsJob"
+    val lastRdds = new ConcurrentLinkedQueue[Int]() // per tagged job: its highest RDD id
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Tag) != null))
+          lastRdds.add(e.stageInfos.flatMap(_.rddInfos.map(_.id)).max)
+    }
+    TaskFunctionSpy.seen.clear()
+    val stats = StreamingStats.oneStageStats(batch)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      spark.sparkContext.setLocalProperty(Tag, "1")
+      val out = try stats(batch) finally spark.sparkContext.setLocalProperty(Tag, null)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (lastRdds.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      sorted(df.collect().toSeq).map(r => (r.get(0), r.get(1), r.get(2), r.get(3)))
+    assert(counts(got) == counts(StreamingStats.batchStats(data)))
+
+    // no second plan: the one job's last RDD is the LogicalRDD's own
+    assert(lastRdds.asScala.toSeq == Seq(scan.rdd.id))
+    // not a closure to Spark's cleaner: neither an `$anonfun$` class nor a
+    // synthetic (lambda) class, and it survives Java serialization
+    val fns = TaskFunctionSpy.seen.asScala.toSet
+    assert(fns.size == 1, s"task functions: $fns")
+    val fn = fns.head
+    assert(!fn.getName.contains("$anonfun$"), fn.getName)
+    assert(!fn.isSynthetic, fn.getName)
+    assert(fn == classOf[KeyedMoments.FoldPartition], fn.getName)
+    val fold = KeyedMoments.FoldPartition(0, 1, 2)
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(fold); out.close()
+    val back = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+    assert(back == fold)
+  }
+}
+
+/** Records, on a task's first pull, the class of the function Spark's
+  * `ResultTask` called with the task's iterator. Hidden frames are shown
+  * so that a lambda reports its own (synthetic) class, not its body's. */
+private object TaskFunctionSpy {
+  val seen = new ConcurrentLinkedQueue[Class[_]]()
+  private val walker = StackWalker.getInstance(java.util.Set.of(
+    StackWalker.Option.RETAIN_CLASS_REFERENCE, StackWalker.Option.SHOW_HIDDEN_FRAMES))
+
+  def wrap(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private var first = true
+    def hasNext: Boolean = {
+      if (first) { first = false; seen.add(taskFunction()) }
+      rows.hasNext
+    }
+    def next(): InternalRow = rows.next()
+  }
+
+  private def taskFunction(): Class[_] = {
+    val frames = walker.walk(_.iterator.asScala.toVector)
+    val task = frames.indexWhere(f =>
+      f.getClassName == "org.apache.spark.scheduler.ResultTask" && f.getMethodName == "runTask")
+    frames(task - 1).getDeclaringClass
   }
 }

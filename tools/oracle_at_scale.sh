@@ -8,6 +8,10 @@
 #   copies       corpus multiplier (default 10)
 #   querySubset  optional comma-separated query names for Verify;
 #                default = the FULL registry (every oracled gate).
+#                A subset run checks, and writes into
+#                CORRECTNESS_<copies>x.json, only the gates of its subset:
+#                the Verify output dir is emptied before step 3, so no
+#                gate output of an earlier run is re-checked.
 #
 # Steps (all idempotent; the synthesized corpus is cached by copies):
 #   1. graft.ScaleSmoke synthesizes <copies>× documents/embeddings/events
@@ -38,7 +42,8 @@ sbt -batch "runMain graft.ScaleSmoke $WORK synth-only $COPIES"
 echo "== [2/4] flatten to single-file sf dir at $FLAT"
 python3 tools/flatten_scale_corpus.py "$WORK" "$FLAT"
 
-echo "== [3/4] graft.Verify over the ${COPIES}x corpus"
+echo "== [3/4] graft.Verify over the ${COPIES}x corpus (into an emptied $OUT)"
+rm -rf "$OUT"
 if [ -n "$SUBSET" ]; then
   sbt -batch "runMain graft.Verify $FLAT $OUT $SUBSET"
 else
