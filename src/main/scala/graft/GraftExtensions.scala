@@ -1,63 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CollectCapped, FloatCosine, MinKCollect}
 
 /** SparkSessionExtensions hook: install graft's native functions and
   * optimizer rules at session build time
   * (`spark.sql.extensions=graft.GraftExtensions`), for users who want them
-  * available in plain SQL from the first query. */
+  * available in plain SQL from the first query. The functions are the
+  * same table `GraftFunctions.register` installs at run time. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Builders shared with GraftFunctions.register so both registration
-    // paths validate identically (arity; foldable cap — a non-literal cap
-    // must fail with a clear message, not an opaque NPE at eval()).
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.CosineName),
-      new ExpressionInfo(classOf[FloatCosine].getName, functions.GraftFunctions.CosineName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkCosine(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.CollectCappedName),
-      new ExpressionInfo(classOf[CollectCapped].getName, functions.GraftFunctions.CollectCappedName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkCollectCapped(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.MinKName),
-      new ExpressionInfo(classOf[MinKCollect].getName, functions.GraftFunctions.MinKName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkMinK(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.BloomAggName),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-        functions.GraftFunctions.BloomAggName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkBloomAgg(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.BloomContainsName),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-        functions.GraftFunctions.BloomContainsName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkBloomContains(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.HilbertName),
-      new ExpressionInfo(classOf[functions.HilbertIndex].getName,
-        functions.GraftFunctions.HilbertName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkHilbert(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.Hash60Name),
-      new ExpressionInfo(classOf[functions.Md5Hash60].getName,
-        functions.GraftFunctions.Hash60Name),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkHash60(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.Md5SlicesName),
-      new ExpressionInfo(classOf[functions.Md5Slices].getName,
-        functions.GraftFunctions.Md5SlicesName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkMd5Slices(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(functions.GraftFunctions.RegexpCountName),
-      new ExpressionInfo(classOf[functions.RegexpCount].getName,
-        functions.GraftFunctions.RegexpCountName),
-      (exprs: Seq[Expression]) => functions.GraftFunctions.mkRegexpCount(exprs)))
+    functions.GraftFunctions.SqlFunctions.foreach(ext.injectFunction)
     // binned range join (opt-in via spark.graft.rangeJoin.binWidth):
     // rewrites point-in-interval joins to an equi-join on a bin key so
     // they shuffle instead of nested-looping — see plans/BinnedRangeJoin

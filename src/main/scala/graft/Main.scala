@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{GnuplotGraph, LogAnalytics, StreamGate}
@@ -72,13 +72,16 @@ object Main {
       sys.exit(2)
   }
 
+  /** The stats sink of [[runPlan]] and [[serve]]: each batch's stats as
+    * TSV lines on stdout. */
+  private def printTsv(stats: DataFrame, batchId: Long): Unit =
+    StreamingStats.toTsv(stats, System.currentTimeMillis())
+      .collect().foreach(r => println(r.getString(0)))
+
   /** One plan, foreground, per-batch stats TSV on stdout. Returns when the
     * plan's data is exhausted. */
   def runPlan(spark: SparkSession, planText: String): Unit =
-    StreamGate.drain(StreamingStats.run(spark, planText, sink = (stats, _) => {
-      StreamingStats.toTsv(stats, System.currentTimeMillis())
-        .collect().foreach(r => println(r.getString(0)))
-    }))
+    StreamGate.drain(StreamingStats.run(spark, planText, sink = printTsv))
 
   /** The testbed server. Blocks until `maxSeconds` elapses (forever when
     * None); returns the bound (httpPort, tcpPort) via the callback for
@@ -98,11 +101,7 @@ object Main {
       // a failed start rejects the plan (500, id unlisted); the harness
       // stops the query already started, so none outlives the rejection
       val Seq(stats, deliver) = StreamGate.start(
-        () => StreamingStats.run(spark, planText, sink = (stats, _) => {
-          StreamingStats.toTsv(stats, System.currentTimeMillis())
-            .collect().foreach(r => println(r.getString(0)))
-          ()
-        }),
+        () => StreamingStats.run(spark, planText, sink = printTsv),
         () => spark.readStream.format("plan-gen")
           .option("plan", planText)
           .load()

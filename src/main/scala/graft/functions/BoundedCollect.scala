@@ -3,7 +3,8 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -60,6 +61,12 @@ case class MinKCollect(
   extends Collect[mutable.ArrayBuffer[Any]] with UnaryLike[Expression] {
 
   require(k > 0, s"graft_min_k k must be positive, got $k")
+
+  // the min-k IS an ordering; checked here, once the child is resolved
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (RowOrdering.isOrderable(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName element type ${child.dataType} is not orderable")
 
   @transient private lazy val ordering: Ordering[Any] = child.dataType match {
     // struct elements (the argmax-candidate and hash-reservoir shapes —

@@ -1,13 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, BloomFilterAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
+import org.apache.spark.sql.{Column, GraftShims, SparkSession}
 
 /** Native Catalyst expression: cosine similarity of two float vectors in a
   * single fused pass — no intermediate arrays (the `zip_with` + `aggregate`
@@ -79,9 +80,14 @@ case class FloatCosine(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Runtime registration of graft's native functions (no session-builder
-  * access needed — callable on a driver-provided session; idempotent). Also
-  * installable declaratively via `spark.sql.extensions=graft.GraftExtensions`.
+/** graft's native functions, reached two ways that share one builder per
+  * function (the `mk*` below):
+  *   - the Column API ([[cosine]], [[minK]], [[bloomAgg]], …, and
+  *     [[Portable]]'s hashes) constructs the expression directly through
+  *     `GraftShims.column`, so it needs nothing registered on the session;
+  *   - plain SQL resolves the names in [[SqlFunctions]], installed at run
+  *     time by [[register]] (idempotent, on any session) or at session
+  *     build time by `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftFunctions {
   val CosineName = "graft_cosine"
@@ -117,43 +123,41 @@ object GraftFunctions {
     }
   }
 
-  /** Build a [[CollectCapped]] from SQL arguments: the cap must be a
+  /** Build a [[CollectCapped]] from its arguments: the cap must be a
     * foldable integer (it sizes aggregation buffers at plan time).
-    * Shared by [[register]] and [[graft.GraftExtensions]] so both
-    * registration paths validate arity/foldability identically. */
-  private[graft] def mkCollectCapped(exprs: Seq[Expression]): Expression = {
+    * Shared by the Column API and the SQL surface, so both validate
+    * arity/foldability identically. */
+  private[graft] def mkCollectCapped(exprs: Seq[Expression]): CollectCapped = {
     require(exprs.length == 2,
       s"$CollectCappedName takes exactly 2 arguments (expr, cap), got ${exprs.length}")
     CollectCapped(exprs.head, foldToInt(CollectCappedName, "cap", exprs(1)))
   }
 
-  /** Build a [[MinKCollect]] from SQL arguments: k must be a foldable
-    * integer (it bounds aggregation buffers at plan time), and the
-    * element type must be orderable (the min-k IS an ordering). */
-  private[graft] def mkMinK(exprs: Seq[Expression]): Expression = {
+  /** Build a [[MinKCollect]] from its arguments: k must be a foldable
+    * integer (it bounds aggregation buffers at plan time). The element
+    * type's orderability is checked at analysis
+    * ([[MinKCollect.checkInputDataTypes]]). */
+  private[graft] def mkMinK(exprs: Seq[Expression]): MinKCollect = {
     require(exprs.length == 2,
       s"$MinKName takes exactly 2 arguments (expr, k), got ${exprs.length}")
-    require(org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(exprs.head.dataType),
-      s"$MinKName element type ${exprs.head.dataType} is not orderable")
     MinKCollect(exprs.head, foldToInt(MinKName, "k", exprs(1)))
   }
 
-  /** Build a [[FloatCosine]] from SQL arguments, with arity validation. */
+  /** Build a [[FloatCosine]] from its arguments, with arity validation. */
   private[graft] def mkCosine(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"$CosineName takes exactly 2 arguments, got ${exprs.length}")
     FloatCosine(exprs.head, exprs(1))
   }
 
-  /** Build a [[PqSubDists]] from SQL arguments, with arity validation. */
+  /** Build a [[PqSubDists]] from its arguments, with arity validation. */
   private[graft] def mkPqSubDists(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"$PqSubDistsName takes exactly 2 arguments, got ${exprs.length}")
     PqSubDists(exprs.head, exprs(1))
   }
 
-  /** Build an [[ArgmaxCosine]] from SQL arguments, with arity validation. */
+  /** Build an [[ArgmaxCosine]] from its arguments, with arity validation. */
   private[graft] def mkArgmaxCosine(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"$ArgmaxCosineName takes exactly 3 arguments (vec, cents, ids), got ${exprs.length}")
@@ -161,13 +165,12 @@ object GraftFunctions {
   }
 
   /** Build-side bloom aggregate `graft_bloom_agg(xxhash64_key, items,
-    * bits)` → BINARY. Delegates to Spark's internal
-    * [[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]]
+    * bits)` → BINARY. Delegates to Spark's internal [[BloomFilterAggregate]]
     * (the machinery behind AQE runtime filters), exposed as a first-class
     * function so a pipeline can build the filter ONCE and reuse it across
     * probe queries. Sizing args must be plan-time literals — they size
     * the aggregation buffer. */
-  private[graft] def mkBloomAgg(exprs: Seq[Expression]): Expression = {
+  private[graft] def mkBloomAgg(exprs: Seq[Expression]): BloomFilterAggregate = {
     require(exprs.length == 3,
       s"$BloomAggName takes exactly 3 arguments (keyHash, estimatedItems, numBits), got ${exprs.length}")
     require(exprs(1).foldable && exprs(2).foldable,
@@ -175,21 +178,18 @@ object GraftFunctions {
     // SQL integer literals parse as INT; the underlying aggregate demands
     // BIGINT sizing args — coerce so `graft_bloom_agg(h, 1000, 16000)`
     // just works instead of failing with a type-mismatch
-    def asLong(e: Expression): Expression =
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        e.eval().asInstanceOf[Number].longValue)
-    new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-      exprs(0), asLong(exprs(1)), asLong(exprs(2)))
+    def asLong(e: Expression): Expression = Literal(e.eval().asInstanceOf[Number].longValue)
+    new BloomFilterAggregate(exprs(0), asLong(exprs(1)), asLong(exprs(2)))
   }
 
-  /** Build a [[Md5Hash60]] from SQL arguments, with arity validation. */
+  /** Build a [[Md5Hash60]] from its arguments, with arity validation. */
   private[graft] def mkHash60(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1,
       s"$Hash60Name takes exactly 1 argument, got ${exprs.length}")
     Md5Hash60(exprs.head)
   }
 
-  /** Build a [[Md5Slices]] from SQL arguments: the slice geometry must be
+  /** Build a [[Md5Slices]] from its arguments: the slice geometry must be
     * plan-time literals (it fixes the output array shape). */
   private[graft] def mkMd5Slices(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 4,
@@ -200,7 +200,7 @@ object GraftFunctions {
       foldToInt(Md5SlicesName, "stride", exprs(3)))
   }
 
-  /** Build a [[RegexpCount]] from SQL arguments: the pattern must be a
+  /** Build a [[RegexpCount]] from its arguments: the pattern must be a
     * plan-time, non-null STRING literal (it is compiled once per
     * expression) — checked explicitly so a NULL or non-string literal
     * fails with this message at analysis, not an NPE or a silently
@@ -208,15 +208,14 @@ object GraftFunctions {
   private[graft] def mkRegexpCount(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"$RegexpCountName takes exactly 2 arguments (text, pattern), got ${exprs.length}")
-    require(exprs(1).foldable &&
-        exprs(1).dataType == org.apache.spark.sql.types.StringType,
+    require(exprs(1).foldable && exprs(1).dataType == StringType,
       s"$RegexpCountName pattern must be a literal string")
     val pat = exprs(1).eval()
     require(pat != null, s"$RegexpCountName pattern must be a literal string, got NULL")
     RegexpCount(exprs.head, pat.toString)
   }
 
-  /** Build a [[HilbertIndex]] from SQL arguments, with arity validation. */
+  /** Build a [[HilbertIndex]] from its arguments, with arity validation. */
   private[graft] def mkHilbert(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"$HilbertName takes exactly 2 arguments (x, y), got ${exprs.length}")
@@ -226,127 +225,91 @@ object GraftFunctions {
   /** Probe-side test `graft_bloom_contains(bloomBinary, xxhash64_key)`.
     * The bloom argument must be foldable (a literal carrying the built
     * filter — the broadcast seat); Spark's
-    * [[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]]
-    * enforces the same and codegens the probe. */
+    * [[BloomFilterMightContain]] enforces the same and codegens the
+    * probe. */
   private[graft] def mkBloomContains(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"$BloomContainsName takes exactly 2 arguments (bloom, keyHash), got ${exprs.length}")
     require(exprs.head.foldable,
       s"$BloomContainsName bloom argument must be a literal binary value")
-    org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-      exprs.head, exprs(1))
+    BloomFilterMightContain(exprs.head, exprs(1))
   }
 
+  /** The SQL surface: one entry per native function, walked by both
+    * [[register]] and [[graft.GraftExtensions]]. */
+  private[graft] val SqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = {
+    def entry(name: String, cls: Class[_], build: FunctionBuilder) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    Seq(
+      entry(CosineName, classOf[FloatCosine], mkCosine),
+      entry(CollectCappedName, classOf[CollectCapped], mkCollectCapped),
+      entry(MinKName, classOf[MinKCollect], mkMinK),
+      entry(BloomAggName, classOf[BloomFilterAggregate], mkBloomAgg),
+      entry(BloomContainsName, classOf[BloomFilterMightContain], mkBloomContains),
+      entry(HilbertName, classOf[HilbertIndex], mkHilbert),
+      entry(Hash60Name, classOf[Md5Hash60], mkHash60),
+      entry(Md5SlicesName, classOf[Md5Slices], mkMd5Slices),
+      entry(RegexpCountName, classOf[RegexpCount], mkRegexpCount),
+      entry(PqSubDistsName, classOf[PqSubDists], mkPqSubDists),
+      entry(ArgmaxCosineName, classOf[ArgmaxCosine], mkArgmaxCosine))
+  }
+
+  /** Installs [[SqlFunctions]] on `spark` for plain-SQL use; the Column
+    * API below needs no registration. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val cosId = FunctionIdentifier(CosineName)
-    if (!registry.functionExists(cosId)) {
-      registry.registerFunction(
-        cosId,
-        new ExpressionInfo(classOf[FloatCosine].getName, CosineName),
-        (exprs: Seq[Expression]) => mkCosine(exprs))
-    }
-    val ccId = FunctionIdentifier(CollectCappedName)
-    if (!registry.functionExists(ccId)) {
-      registry.registerFunction(
-        ccId,
-        new ExpressionInfo(classOf[CollectCapped].getName, CollectCappedName),
-        (exprs: Seq[Expression]) => mkCollectCapped(exprs))
-    }
-    val mkId = FunctionIdentifier(MinKName)
-    if (!registry.functionExists(mkId)) {
-      registry.registerFunction(
-        mkId,
-        new ExpressionInfo(classOf[MinKCollect].getName, MinKName),
-        (exprs: Seq[Expression]) => mkMinK(exprs))
-    }
-    val baId = FunctionIdentifier(BloomAggName)
-    if (!registry.functionExists(baId)) {
-      registry.registerFunction(
-        baId,
-        new ExpressionInfo(
-          "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-          BloomAggName),
-        (exprs: Seq[Expression]) => mkBloomAgg(exprs))
-    }
-    val bcId = FunctionIdentifier(BloomContainsName)
-    if (!registry.functionExists(bcId)) {
-      registry.registerFunction(
-        bcId,
-        new ExpressionInfo(
-          "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-          BloomContainsName),
-        (exprs: Seq[Expression]) => mkBloomContains(exprs))
-    }
-    val hId = FunctionIdentifier(HilbertName)
-    if (!registry.functionExists(hId)) {
-      registry.registerFunction(
-        hId,
-        new ExpressionInfo(classOf[HilbertIndex].getName, HilbertName),
-        (exprs: Seq[Expression]) => mkHilbert(exprs))
-    }
-    val h60Id = FunctionIdentifier(Hash60Name)
-    if (!registry.functionExists(h60Id)) {
-      registry.registerFunction(
-        h60Id,
-        new ExpressionInfo(classOf[Md5Hash60].getName, Hash60Name),
-        (exprs: Seq[Expression]) => mkHash60(exprs))
-    }
-    val msId = FunctionIdentifier(Md5SlicesName)
-    if (!registry.functionExists(msId)) {
-      registry.registerFunction(
-        msId,
-        new ExpressionInfo(classOf[Md5Slices].getName, Md5SlicesName),
-        (exprs: Seq[Expression]) => mkMd5Slices(exprs))
-    }
-    val rcId = FunctionIdentifier(RegexpCountName)
-    if (!registry.functionExists(rcId)) {
-      registry.registerFunction(
-        rcId,
-        new ExpressionInfo(classOf[RegexpCount].getName, RegexpCountName),
-        (exprs: Seq[Expression]) => mkRegexpCount(exprs))
-    }
-    val pqId = FunctionIdentifier(PqSubDistsName)
-    if (!registry.functionExists(pqId)) {
-      registry.registerFunction(
-        pqId,
-        new ExpressionInfo(classOf[PqSubDists].getName, PqSubDistsName),
-        (exprs: Seq[Expression]) => mkPqSubDists(exprs))
-    }
-    val axId = FunctionIdentifier(ArgmaxCosineName)
-    if (!registry.functionExists(axId)) {
-      registry.registerFunction(
-        axId,
-        new ExpressionInfo(classOf[ArgmaxCosine].getName, ArgmaxCosineName),
-        (exprs: Seq[Expression]) => mkArgmaxCosine(exprs))
+    SqlFunctions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
     }
   }
 
-  /** Column API for the native cosine (after [[register]]). */
-  def cosine(a: Column, b: Column): Column = call_function(CosineName, a, b)
+  /** The Column API's one way in: `build` is the SQL surface's builder,
+    * applied to the arguments' expressions. A plan-time argument is
+    * passed as a [[Literal]]: a Column's expression stays an unresolved
+    * wrapper until analysis, so it is never foldable here. */
+  private def native(build: FunctionBuilder, args: Expression*): Column =
+    GraftShims.column(build(args))
 
-  /** Column API for the fused PQ subspace distances (after [[register]]):
+  private def nativeAgg(build: Seq[Expression] => AggregateFunction, args: Expression*): Column =
+    GraftShims.column(build(args).toAggregateExpression())
+
+  private def expr(c: Column): Expression = GraftShims.expression(c)
+
+  /** Column API for the native cosine. */
+  def cosine(a: Column, b: Column): Column = native(mkCosine, expr(a), expr(b))
+
+  /** Column API for the fused PQ subspace distances:
     * `ARRAY<DOUBLE>[8]`, subspace s = Σ (a[i]-b[i])² over [s*8, s*8+8). */
-  def pqSubDists(a: Column, b: Column): Column =
-    call_function(PqSubDistsName, a, b)
+  def pqSubDists(a: Column, b: Column): Column = native(mkPqSubDists, expr(a), expr(b))
 
-  /** Column API for the fused nearest-centroid argmax (after
-    * [[register]]): `cents`/`ids` are plan literals (ascending id order
-    * — the caller's tie contract), the result is the winning id or NULL
-    * when every similarity is NaN. See [[ArgmaxCosine]]. */
+  /** Column API for the fused nearest-centroid argmax: `cents`/`ids` are
+    * plan literals (ascending id order — the caller's tie contract), the
+    * result is the winning id or NULL when every similarity is NaN. See
+    * [[ArgmaxCosine]]. */
   def argmaxCosine(vec: Column, cents: Column, ids: Column): Column =
-    call_function(ArgmaxCosineName, vec, cents, ids)
+    native(mkArgmaxCosine, expr(vec), expr(cents), expr(ids))
 
-  /** Column API for the bounded collect (after [[register]]): at most
-    * `cap + 1` elements retained per group — size `cap + 1` flags an
-    * overflowing group (see [[CollectCapped]]). */
-  def collectCapped(e: Column, cap: Int): Column =
-    call_function(CollectCappedName, e, org.apache.spark.sql.functions.lit(cap))
+  /** Column API for the bounded collect: at most `cap + 1` elements
+    * retained per group — size `cap + 1` flags an overflowing group (see
+    * [[CollectCapped]]). */
+  def collectCapped(e: Column, cap: Int): Column = nativeAgg(mkCollectCapped, expr(e), Literal(cap))
 
-  /** Column API for the deterministic bounded min-k (after [[register]]):
-    * the `k` smallest elements per group, ascending — see [[MinKCollect]]. */
-  def minK(e: Column, k: Int): Column =
-    call_function(MinKName, e, org.apache.spark.sql.functions.lit(k))
+  /** Column API for the deterministic bounded min-k: the `k` smallest
+    * elements per group, ascending — see [[MinKCollect]]. */
+  def minK(e: Column, k: Int): Column = nativeAgg(mkMinK, expr(e), Literal(k))
+
+  /** Column API for the build-side bloom aggregate over a hashed key
+    * (`xxhash64`): one BINARY filter per group, see [[mkBloomAgg]]. */
+  def bloomAgg(keyHash: Column, estimatedItems: Long, numBits: Long): Column =
+    nativeAgg(mkBloomAgg, expr(keyHash), Literal(estimatedItems), Literal(numBits))
+
+  /** Column API for the probe-side test of a [[bloomAgg]] filter against
+    * a hashed key (`xxhash64`): true when the key MIGHT be in `bloom`. */
+  def bloomContains(bloom: Array[Byte], keyHash: Column): Column =
+    native(mkBloomContains, Literal(bloom), expr(keyHash))
+
+  /** Column API for the 2-D Hilbert curve index, see [[HilbertIndex]]. */
+  def hilbert(x: Column, y: Column): Column = native(mkHilbert, expr(x), expr(y))
 
   /** null/NaN mask for a [[minK]] argmin/argmax candidate whose ordering
     * key is `key`: a masked (null) ELEMENT is skipped by the aggregate —

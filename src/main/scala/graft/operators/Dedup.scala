@@ -166,7 +166,6 @@ object Dedup {
          |FROM longc a JOIN longc b
          |  ON a.band_id = b.band_id AND a.bhash = b.bhash AND a.doc_id < b.doc_id""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s)
     val bands = qMinhashBands.build(s, d)
     val long = bands.selectExpr(
       "doc_id",
@@ -207,7 +206,6 @@ object Dedup {
        |FROM inter JOIN sizes sa ON sa.doc_id = doc_a
        |JOIN sizes sb ON sb.doc_id = doc_b
        |ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val ds = withShingles(s, d).select(col("doc_id"), array_distinct(col("sh")).as("sh"))
     // Carry each doc's shingle-set size INTO the inverted index, so the
     // bucket expansion emits (doc_a, sa, doc_b, sb) directly — no size
@@ -265,7 +263,6 @@ object Dedup {
          |JOIN mhs ma ON ma.doc_id = c.doc_a JOIN mhs mb ON mb.doc_id = c.doc_b
          |JOIN ds da ON da.doc_id = c.doc_a JOIN ds db ON db.doc_id = c.doc_b""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s)
     val pairs = sharedPairs(s, d)
     val sigs = minhashSigs(s, d)
     val ds = withShingles(s, d)
@@ -371,7 +368,6 @@ object Dedup {
          |  ON a.band_id = b.band_id AND a.band = b.band AND a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
          |ORDER BY hamming, doc_a, doc_b LIMIT 20""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
       val sig = simhashSig(Tables.documents(s, d), bits)
       val long = sig.selectExpr(
         "doc_id", "simhash",
@@ -925,7 +921,6 @@ object Dedup {
     * shared by the memoized gate build and the scale smoke, so the
     * measured artifact is the served artifact. */
   private[graft] def buildNeardupIndex(corpus: DataFrame, dir: String): Unit = {
-    GraftFunctions.register(corpus.sparkSession) // collectCapped
     bandsLong(withBandCols(sigsOf(shingled(corpus))))
       .groupBy("band_id", "bhash")
       .agg(GraftFunctions.collectCapped(
@@ -963,7 +958,6 @@ object Dedup {
   private[graft] def neardupServeIndex(idx: DataFrame,
       incoming: DataFrame): DataFrame = {
     val s = incoming.sparkSession
-    GraftFunctions.register(s)
     val probes = signatureRows(incoming)
       .select(col("doc_id").as("in_doc") +:
         mhNames.map(n => col(n).as(s"i$n")) :+ col("band_id") :+ col("bhash"): _*)
@@ -1058,7 +1052,6 @@ object Dedup {
 
   private[graft] val simhashIndex = TmpDirs.BuildOnce("graft_simhashidx", "documents") {
     (s, d, dir) =>
-      GraftFunctions.register(s)
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") % IncomingMod =!= IncomingRem)
         .select(col("doc_id"), col("text"))
@@ -1103,7 +1096,6 @@ object Dedup {
          |   FROM cand WHERE hamming <= $ShMaxHamming)
          |WHERE rn = 1""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = simhashIndex.dir(s, d)
     val idx = s.read.parquet(s"$dir/bands")
     val incoming = Tables.documents(s, d)
@@ -1169,7 +1161,6 @@ object Dedup {
          |   FROM est WHERE est >= $NeardupMinEst)
          |WHERE rn = 1""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val root = TmpDirs.runDir("graft_neardupstream")
     val idx = s"$root/idx"

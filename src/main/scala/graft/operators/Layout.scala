@@ -132,7 +132,6 @@ object Layout {
     * tile-boundary jumps. Two dimensions (the classic formulation). */
   def writeHilbertOrdered(df: org.apache.spark.sql.DataFrame,
       x: Column, y: Column, path: String, numFiles: Int): Unit = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val aggExprs = Seq(min(x).cast("long"), max(x).cast("long"),
       min(y).cast("long"), max(y).cast("long"))
     val b = df.agg(aggExprs.head, aggExprs.tail: _*).head()
@@ -141,7 +140,7 @@ object Layout {
     def lane(c: Column, lo: Long, hi: Long): Column =
       ((c.cast("long") - lit(lo)) * lit(65535L) / lit(math.max(hi - lo, 1L)))
         .cast("long")
-    df.withColumn("_hkey", call_function(graft.functions.GraftFunctions.HilbertName,
+    df.withColumn("_hkey", graft.functions.GraftFunctions.hilbert(
         lane(x, b.getLong(0), b.getLong(1)), lane(y, b.getLong(2), b.getLong(3))))
       .repartitionByRange(numFiles, col("_hkey"))
       .sortWithinPartitions("_hkey")

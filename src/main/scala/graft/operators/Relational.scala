@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.GraftFunctions
 
 /** The relational operator surface (SURVEY.md §2.2-2.8) expressed as
   * declarative DataFrame programs over the testdata tables, each paired with
@@ -506,21 +507,15 @@ object Relational {
     * broadcast seat (≈ numBits/8 bytes — the same residency any broadcast
     * join's small side has, NOT a data-plane collect). */
   def buildBloom(dim: DataFrame, key: org.apache.spark.sql.Column,
-      estimatedItems: Long, numBits: Long): Array[Byte] = {
-    graft.functions.GraftFunctions.register(dim.sparkSession)
-    dim.select(call_function(graft.functions.GraftFunctions.BloomAggName,
-        xxhash64(key), lit(estimatedItems), lit(numBits)).as("bf"))
+      estimatedItems: Long, numBits: Long): Array[Byte] =
+    dim.select(GraftFunctions.bloomAgg(xxhash64(key), estimatedItems, numBits).as("bf"))
       .head.getAs[Array[Byte]]("bf")
-  }
 
   /** Probe-side bloom prefilter: keep rows whose key MIGHT be in the
     * filter (no false negatives — every true match survives). */
   def bloomPrefilter(fact: DataFrame, key: org.apache.spark.sql.Column,
-      bloom: Array[Byte]): DataFrame = {
-    graft.functions.GraftFunctions.register(fact.sparkSession)
-    fact.filter(call_function(graft.functions.GraftFunctions.BloomContainsName,
-      lit(bloom), xxhash64(key)))
-  }
+      bloom: Array[Byte]): DataFrame =
+    fact.filter(GraftFunctions.bloomContains(bloom, xxhash64(key)))
 
   /** Bloom-prefiltered fact-dim join — the explicit form of a runtime
     * semi-join filter: build a bloom over the (filtered) dim keys, prune

@@ -38,7 +38,6 @@ object Similarity {
        |   FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
        |   WHERE q.vec_id < $NumQueries))
        |WHERE rank <= $K""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
@@ -129,6 +128,23 @@ object Similarity {
        |   FROM qsims)
        |  WHERE rn <= 4)""".stripMargin
 
+  /** The IVF probe-and-rank pipeline in DuckDB, shared verbatim by
+    * [[qKnnIvf]] and [[qKnnIvfPersist]] — persistence must not change a
+    * result bit, so the oracle is identical. */
+  private val DuckIvfSql: String =
+    s"""WITH $DuckIvfCtes,
+       |scored AS (SELECT p.query_id, a.vec_id AS neighbor_id,
+       |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+       |      CAST(n.embedding AS DOUBLE[])) AS sim
+       |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.query_id
+       |  JOIN embeddings q ON q.vec_id = p.query_id
+       |  JOIN embeddings n ON n.vec_id = a.vec_id)
+       |SELECT query_id, neighbor_id, round(sim,4) AS cosine, rank FROM
+       |  (SELECT query_id, neighbor_id, sim, row_number() OVER
+       |     (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+       |   FROM scored)
+       |WHERE rank <= $K""".stripMargin
+
   /** IVF ANN, the scale path: ≈√n coarse cells (stride-seeded, then 2
     * deterministic Lloyd iterations train the codebook), assign every
     * vector to its nearest cell, probe the query's 4 nearest cells,
@@ -149,22 +165,7 @@ object Similarity {
     * exchange row per vector; Lloyd means are hash aggregates on
     * (cell, dim). Nothing all-pairs, nothing driver-side but the √n
     * codebook. */
-
-  val qKnnIvf: Q = Q(
-    "q_knn_ivf",
-    s"""WITH $DuckIvfCtes,
-       |scored AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |      CAST(n.embedding AS DOUBLE[])) AS sim
-       |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.query_id
-       |  JOIN embeddings q ON q.vec_id = p.query_id
-       |  JOIN embeddings n ON n.vec_id = a.vec_id)
-       |SELECT query_id, neighbor_id, round(sim,4) AS cosine, rank FROM
-       |  (SELECT query_id, neighbor_id, sim, row_number() OVER
-       |     (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |   FROM scored)
-       |WHERE rank <= $K""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
+  val qKnnIvf: Q = Q("q_knn_ivf", DuckIvfSql) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val cents = ivfCodebook(emb)
     val assigned = ivfAssign(emb, cents)
@@ -233,7 +234,6 @@ object Similarity {
        |WHERE rank <= $K""".stripMargin
 
   val qKnnFiltered: Q = Q("q_knn_filtered", DuckFilteredSql) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val cents = ivfCodebook(emb)
     val assigned = ivfAssign(emb, cents)
@@ -309,7 +309,6 @@ object Similarity {
        |WHERE rank <= $K""".stripMargin
 
   val qHardNegatives: Q = Q("q_hard_negatives", DuckHardNegSql) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val cents = ivfCodebook(emb)
     val assigned = ivfAssign(emb, cents)
@@ -344,7 +343,6 @@ object Similarity {
     * checkpoint-scan → pruned postings scan → hash joins only. Oracle
     * IDENTICAL to [[qKnnFiltered]] — persistence must not change a bit. */
   val qKnnFilteredPersist: Q = Q("q_knn_filtered_persist", DuckFilteredSql) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = ivfIndex.dir(s, d)
     val codebook = s.read.parquet(s"$dir/codebook")
     val postings = s.read.parquet(s"$dir/postings")
@@ -379,7 +377,6 @@ object Similarity {
     * inequality stays on the joined rows, between probe join and ranking
     * as always. Oracle identical to [[qHardNegatives]]. */
   val qHardNegativesPersist: Q = Q("q_hard_negatives_persist", DuckHardNegSql) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = ivfIndex.dir(s, d)
     val codebook = s.read.parquet(s"$dir/codebook")
     val postings = s.read.parquet(s"$dir/postings")
@@ -529,23 +526,7 @@ object Similarity {
         .partitionBy("cell").parquet(s"$dir/postings")
   }
 
-  val qKnnIvfPersist: Q = Q(
-    "q_knn_ivf_persist", {
-      // same query semantics as q_knn_ivf — the oracle is identical
-      s"""WITH $DuckIvfCtes,
-         |scored AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-         |      CAST(n.embedding AS DOUBLE[])) AS sim
-         |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.query_id
-         |  JOIN embeddings q ON q.vec_id = p.query_id
-         |  JOIN embeddings n ON n.vec_id = a.vec_id)
-         |SELECT query_id, neighbor_id, round(sim,4) AS cosine, rank FROM
-         |  (SELECT query_id, neighbor_id, sim, row_number() OVER
-         |     (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-         |   FROM scored)
-         |WHERE rank <= $K""".stripMargin
-    }) { (s, d) =>
-    GraftFunctions.register(s)
+  val qKnnIvfPersist: Q = Q("q_knn_ivf_persist", DuckIvfSql) { (s, d) =>
     val dir = ivfIndex.dir(s, d)
     val codebook = s.read.parquet(s"$dir/codebook")
     // The cell id is a vec_id — a LONG. Directory-name inference types the
@@ -678,7 +659,6 @@ object Similarity {
     * leaf assignment). See [[qKnnIvf2]] for the full design notes. */
   private[graft] def ivf2Index(s: SparkSession, d: String,
       checkpoint: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    GraftFunctions.register(s)
     // checkpoint=false: test hook — keeps the FULL build lineage visible
     // so Ivf2InvariantSpec can assert the plan is Window/Sort-free
     def ck(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint() else df
@@ -811,7 +791,6 @@ object Similarity {
     * cost AND partition-pruned serving. Oracle identical to [[qKnnIvf2]]
     * — persistence must not change a single result bit. */
   val qKnnIvf2Persist: Q = Q("q_knn_ivf2_persist", DuckIvf2Sql) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = ivf2Persisted.dir(s, d)
     val topSeeds = s.read.parquet(s"$dir/topcodebook")
     val refined = s.read.parquet(s"$dir/codebook")
@@ -973,7 +952,6 @@ object Similarity {
 
   val qKnnIncrAssign: Q = Q(
     "q_knn_incr_assign", IncrAssignOracle) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     // frozen index from the HISTORIC slice only; the new batch assigned
     // by the shared streaming kernel (one implementation, two paths)
@@ -998,7 +976,6 @@ object Similarity {
   val qKnnStreamAssign: Q = Q(
     "q_knn_stream_assign", IncrAssignOracle) { (s, d) =>
     import org.apache.spark.sql.types._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     // the frozen index is built ONCE from history, not once per batch
     val cents = graft.streaming.StreamAnn
@@ -1034,7 +1011,6 @@ object Similarity {
     * batch); production streams are multi-batch by nature. */
   val qStreamAnnCompact: Q = Q(
     "q_stream_ann_compact", IncrAssignOracle) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val root = TmpDirs.runDir("graft_compact")
     val srcDir = s"$root/src"
@@ -1135,7 +1111,6 @@ object Similarity {
     * stage behind [[qEmbedNearDup]] (ranked top-k) and [[qEmbedClusters]]
     * (component labeling). */
   private def embedPairs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     // Hyperplane components r(b, k) in [-1, 1) are CONSTANTS (the same
     // portable-hash derivation as before), so they are computed once on
@@ -1219,7 +1194,6 @@ object Similarity {
       |FROM sims s JOIN mx m ON s.vec_id = m.vec_id
       |WHERE m.ms >= 0.35
       |GROUP BY s.vec_id""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val bench = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("bm_id"), col("embedding").as("q_embedding"))
@@ -1488,7 +1462,6 @@ object Similarity {
          |  round($err, 6) AS pq_err
          |FROM d JOIN mins m ON d.vec_id = m.vec_id GROUP BY d.vec_id""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s) // pqAssign's fused graft_pq_sub_dists kernel
     val emb = Tables.embeddings(s, d)
     pqAssign(emb, pqCodebook(emb))
       .select(col("vec_id") +:
@@ -1541,7 +1514,6 @@ object Similarity {
          |   FROM summed WHERE neighbor_id <> query_id)
          |WHERE rank <= $K""".stripMargin
     }) { (s, d) =>
-    GraftFunctions.register(s) // pqAssign's fused graft_pq_sub_dists kernel
     val emb = Tables.embeddings(s, d)
     val cents = pqCodebook(emb)
     val codes = pqAssign(emb, cents).select(col("vec_id") +:
@@ -1625,7 +1597,6 @@ object Similarity {
   }
 
   val qKnnIvfPq: Q = Q("q_knn_ivf_pq", DuckIvfPqSql) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val icents = ivfCodebook(emb)
     val assigned = ivfAssign(emb, icents).select(col("vec_id"), col("cell"))
@@ -1705,7 +1676,6 @@ object Similarity {
     * (query, candidate) → per-query top-k. Oracle IDENTICAL to the
     * in-flight gate: persistence and code-only serving change no bit. */
   val qKnnIvfPqPersist: Q = Q("q_knn_ivf_pq_persist", DuckIvfPqSql) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = ivfPqIndex.dir(s, d)
     val emb = Tables.embeddings(s, d)
     val icents = s.read.parquet(s"$dir/ivf_codebook")
@@ -1796,7 +1766,6 @@ object Similarity {
        |     JOIN embeddings q ON q.vec_id = co.query_id
        |     JOIN embeddings n ON n.vec_id = co.neighbor_id))
        |WHERE rank <= $K""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
@@ -1976,15 +1945,10 @@ object Similarity {
     * zero training dependencies, where the ivf2 chain needs the frozen
     * leaf codebook first. */
   private[graft] def lshPostings(vectors: DataFrame, tables: Int = LshTables,
-      bits: Int = LshBits): DataFrame = {
-    // idempotent: the fused-cosine expression rides the session registry,
-    // and this kernel's callers include paths (streaming foreachBatch)
-    // that never went through a gate's register() call
-    GraftFunctions.register(vectors.sparkSession)
+      bits: Int = LshBits): DataFrame =
     vectors.select(col("vec_id").as("neighbor_id"), col("embedding"),
       explode(array((0 until tables).map(t =>
         lshTb(t, col("embedding"), bits)): _*)).as("tb"))
-  }
 
   /** Build-once half of the LSH build/serve split: [[qKnnLsh]]'s posting
     * rows written `tb`-partitioned, built once per (data fingerprint,
@@ -2024,7 +1988,6 @@ object Similarity {
     * [[qKnnLshPersist]] and the streaming delta-fold serve path. */
   private[graft] def lshQueryProbes(emb: DataFrame, tables: Int = LshTables,
       bits: Int = LshBits): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     emb.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"),
         explode(array((0 until tables).map(t =>
@@ -2058,7 +2021,6 @@ object Similarity {
     shiftright(tb, LshDirShift).cast("long")
 
   val qKnnLshPersist: Q = Q("q_knn_lsh_persist", DuckLshSql) { (s, d) =>
-    GraftFunctions.register(s)
     val dir = lshIndex.dir(s, d)
     // tb_hi is read back from directory names as int while values fit —
     // cast the COLUMN to long (same rationale as qKnnIvfPersist: the
@@ -2172,7 +2134,6 @@ object Similarity {
     * the write; everything downstream is identical). */
   private[graft] def knnLshCappedIndex(emb: DataFrame, tables: Int = LshTables,
       bits: Int = LshBits, cap: Int = LshCap): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     lshPostings(emb, tables, bits)
       .withColumn("prio", Portable.hash60(col("neighbor_id").cast("string")))
       .groupBy("tb")
@@ -2286,7 +2247,6 @@ object Similarity {
     * ≤13-rows-per-query fusion. */
   val qHybridStreamPersist: Q = Q(
     "q_hybrid_stream_persist", DuckHybridStreamSql) { (s, d) =>
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
     val root = TmpDirs.runDir("graft_hybridstream")
@@ -2423,7 +2383,6 @@ object Similarity {
   }
 
   val qKnnDeleteServe: Q = Q("q_knn_delete_serve", DuckLshDeleteSql) { (s, d) =>
-    GraftFunctions.register(s)
     val idx = lshDeleteIndex.dir(s, d)
     // localCheckpoint: the run dir is reaped 3 builds later, like the
     // other run-dir gates
@@ -2433,7 +2392,6 @@ object Similarity {
   }
 
   val qKnnDeleteCompact: Q = Q("q_knn_delete_compact", DuckLshDeleteSql) { (s, d) =>
-    GraftFunctions.register(s)
     val idx = lshDeleteIndex.dir(s, d)
     // fold only when something is unfolded — a repeat invocation over the
     // memoized (already-folded) tree skips the no-op base rewrite
@@ -2516,7 +2474,6 @@ object Similarity {
     * fusion. */
   val qHybridLifecycle: Q = Q(
     "q_hybrid_lifecycle", DuckHybridLifecycleSql) { (s, d) =>
-    GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val emb = Tables.embeddings(s, d)
     val root = TmpDirs.runDir("graft_hybridlife")

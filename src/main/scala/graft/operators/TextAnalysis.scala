@@ -904,7 +904,6 @@ object TextAnalysis {
       |    ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT),
       |             doc_id) AS rn
       |  FROM documents WHERE doc_id IS NOT NULL) WHERE rn <= 100""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       // minKCandidate convention: an unidentifiable (null-id) document
       // cannot be sampled — masked out on BOTH engines, not sorted first
@@ -942,7 +941,6 @@ object TextAnalysis {
       |    ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT),
       |             doc_id) AS rn
       |  FROM documents WHERE doc_id IS NOT NULL) WHERE rn <= 20""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("source"), graft.functions.GraftFunctions.minKCandidate(
         Portable.hash60(col("doc_id").cast("string")),
@@ -1461,7 +1459,6 @@ object TextAnalysis {
     s"""WITH $DuckBm25Ctes
        |SELECT query_id, doc_id, round(CAST(score AS DOUBLE), 4) AS bm25, rank
        |FROM bm25ranked WHERE rank <= $Bm25K""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     // plain scan: r17 15-rep A/B, 0.90 vs 1.04 s min — the build is one
     // tok-keyed aggregate whose shuffle already spreads the work
     val docs = Tables.documentsPlain(s, d)
@@ -1565,7 +1562,6 @@ object TextAnalysis {
     * table supplies only the query batch's text (queries are inputs by
     * definition — production would receive them over the wire). */
   private[graft] def bm25ServePersisted(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val dir = bm25Persisted.dir(s, d)
     bm25ServeWith(bm25Index(s.read.parquet(s"$dir/partial")),
       s.read.parquet(s"$dir/dl"), Tables.documents(s, d))
@@ -1589,7 +1585,6 @@ object TextAnalysis {
     s"""WITH $DuckBm25Ctes
        |SELECT query_id, doc_id, round(CAST(score AS DOUBLE), 4) AS bm25, rank
        |FROM bm25ranked WHERE rank <= $Bm25K""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val root = TmpDirs.runDir("graft_bm25stream")
     val srcDir = s"$root/src"
@@ -1632,7 +1627,6 @@ object TextAnalysis {
        |${duckBm25Ctes("dlive")}
        |SELECT query_id, doc_id, round(CAST(score AS DOUBLE), 4) AS bm25, rank
        |FROM bm25ranked WHERE rank <= $Bm25K""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val root = TmpDirs.runDir("graft_bm25delete")
     val corpusDir = s"$root/docs"

@@ -52,7 +52,6 @@ object StreamAnnRefresh {
     * Deterministic ⇒ a re-run retrains the identical codebook, which is
     * what makes refresh idempotent under crash-replay. */
   def reservoir(corpus: DataFrame, k: Int = DefaultSampleSize): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     corpus
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("prio", Portable.hash60(col("vec_id").cast("string")))
@@ -82,7 +81,6 @@ object StreamAnnRefresh {
       sampleSize: Int = DefaultSampleSize,
       tombstoneKey: Option[String] = None,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
-    GraftFunctions.register(s)
     val view = DeltaCompact.capture(corpusDir, s.sparkContext.hadoopConfiguration)
     val corpus = tombstoneKey.fold(view.read(s))(k => view.readLive(s, keyCol = k))
     val cents = StreamAnn.labelCentroids(reservoir(corpus, sampleSize))
@@ -143,7 +141,6 @@ object StreamAnnRefresh {
       sampleSize: Int = DefaultSampleSize,
       tombstoneKey: Option[String] = None,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
-    GraftFunctions.register(s)
     // the captured corpus view, exactly as in refresh
     val view = DeltaCompact.capture(corpusDir, s.sparkContext.hadoopConfiguration)
     val corpus = tombstoneKey.fold(view.read(s))(k => view.readLive(s, keyCol = k))
@@ -181,7 +178,6 @@ object StreamAnnRefresh {
     * stops fitting and recovers after [[refreshPq]]. */
   def pqReconError(emb: DataFrame, pcents: DataFrame): Double = {
     import org.apache.spark.sql.functions.avg
-    GraftFunctions.register(emb.sparkSession) // pqAssign's fused kernel
     graft.operators.Similarity.pqAssign(emb, pcents)
       .select(((0 until 8).map(i => col(s"m$i")).reduce(_ + _)).as("err"))
       .agg(avg(col("err"))).head().getDouble(0)

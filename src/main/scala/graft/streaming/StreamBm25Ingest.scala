@@ -43,7 +43,6 @@ object StreamBm25Ingest {
   def ingestStep(batch: DataFrame, outDir: String, batchId: Long,
       numShards: Int = 16): DataFrame = {
     val s = batch.sparkSession
-    graft.functions.GraftFunctions.register(s)
     // The docs landing and the batch's capped partial derive from the
     // SAME batch rows and write DISTINCT trees (`docs/batch=<id>` vs
     // `idx/batch=<id>`), so the two actions overlap from driver threads
@@ -168,7 +167,6 @@ object StreamBm25Ingest {
     * of the SAME batch id is fine (landBatch overwrites its own
     * directory, so the doc still lives under one batch). */
   def mergeIndexes(s: SparkSession, outDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     assertBatchDisjoint(s, s"$outDir/docs")
     TextAnalysis.bm25Index(recapMergePartial(DeltaCompact.capture(s"$outDir/idx",
       s.sparkContext.hadoopConfiguration).read(s)))
@@ -217,7 +215,6 @@ object StreamBm25Ingest {
     * base + unfolded deltas; after, one vocab-sized generation. */
   def compactIndex(s: SparkSession, outDir: String,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): DeltaCompact.Manifest = {
-    graft.functions.GraftFunctions.register(s)
     val idxDir = s"$outDir/idx"
     val conf = s.sparkContext.hadoopConfiguration
     // the fold reads exactly the view its watermark and slot describe: a
@@ -288,7 +285,6 @@ object StreamBm25Ingest {
     * tick, never a per-delete rewrite. */
   private def rebuildFromSurvivors(s: SparkSession, outDir: String,
       gcGraceMs: Long, retainSnapshots: Int): DeltaCompact.Manifest = {
-    graft.functions.GraftFunctions.register(s)
     val docsDir = s"$outDir/docs"
     // retention covers BOTH trees: a detached rebuild's docs fold races
     // concurrent serve plans over the docs corpus exactly as its idx

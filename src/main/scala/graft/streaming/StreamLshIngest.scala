@@ -204,7 +204,6 @@ object StreamLshIngest {
       bitsOverride: Option[Int] = None,
       gcGraceMs: Long = 0L,
       retainSnapshots: Int = DeltaCompact.PreserveRetention): LshGeometry = {
-    graft.functions.GraftFunctions.register(s)
     val conf = s.sparkContext.hadoopConfiguration
     // the rebuild's input: exactly the CAPTURED corpus view, minus
     // tombstoned vectors — a refresh must not re-index deleted rows, and

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and `Bench` and `Main` drain through `StreamGate.drain`. Comments are
   * ignored. `awaitTermination` with two arguments is
   * `ExecutorService.awaitTermination` (`Par`'s pool), not a stream
-  * await, so it is not flagged. */
+  * await, so it is not flagged. Likewise graft's native functions are
+  * reached one way: outside `functions/` and `GraftExtensions.scala` no
+  * code looks one up by name or registers them. */
 class StreamHarnessLintSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -46,6 +48,17 @@ class StreamHarnessLintSpec extends AnyFunSuite {
     val found = Seq("Bench.scala", "Main.scala")
       .flatMap(f => hits(mainRoot.resolve(f), "processAllAvailable".r))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("native functions are built through the Column API, never looked up by name") {
+    val files = Files.walk(mainRoot).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.startsWith(mainRoot.resolve("functions")) &&
+        p.getFileName.toString != "GraftExtensions.scala")
+      .toSeq
+    assert(files.nonEmpty)
+    val found = files.flatMap(hits(_, raw"call_function\(|GraftFunctions\.register\(".r))
+    assert(found.isEmpty, s"${found.size} hits" + found.mkString("\n", "\n", ""))
   }
 
   test("the lint sees a stream call in code and ignores one in a comment") {

@@ -11,7 +11,6 @@ class ArgmaxCosineSpec extends SparkSpec {
 
   test("matches the crossJoin + graft_min_k argmax exactly, including " +
     "duplicate-centroid ties (smallest id wins)") {
-    GraftFunctions.register(spark)
     val centRows = (0 until 23).map(i => (i * 97L, vec()))
     // force ties: two extra entries DUPLICATE existing centroid vectors
     // at higher ids — the argmax must keep the smaller id
@@ -45,7 +44,6 @@ class ArgmaxCosineSpec extends SparkSpec {
 
   test("null vector yields null; all-NaN similarities yield null " +
     "(zero-vector centroids only)") {
-    GraftFunctions.register(spark)
     val zeroCents = Seq(Seq.fill(64)(0f), Seq.fill(64)(0f))
     val ids = Seq(1L, 2L)
     val df = Seq(
@@ -63,11 +61,10 @@ class ArgmaxCosineSpec extends SparkSpec {
     GraftFunctions.register(spark)
     val c0 = vec(); val c1 = vec()
     Seq((10L, c0), (11L, c1)).toDF("id", "v").createOrReplaceTempView("amc_vecs")
-    spark.sql("SELECT 1").collect() // session warm
-    val lit = Seq(c0, c1)
-    val got = Seq((10L, c0), (11L, c1)).toDF("id", "v")
-      .select(col("id"), GraftFunctions.argmaxCosine(col("v"),
-        typedLit(lit), typedLit(Seq(100L, 200L))).as("cell"))
+    // the centroids and ids ride in as plan literals, as the Column API's do
+    val got = spark.sql(
+      "SELECT id, graft_argmax_cosine(v, :cents, :ids) AS cell FROM amc_vecs",
+      Map("cents" -> typedLit(Seq(c0, c1)), "ids" -> typedLit(Seq(100L, 200L))))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(10L -> 100L, 11L -> 200L))
   }

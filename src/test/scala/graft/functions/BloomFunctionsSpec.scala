@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class BloomFunctionsSpec extends SparkSpec {
 
@@ -14,10 +13,11 @@ class BloomFunctionsSpec extends SparkSpec {
       .head.getAs[Array[Byte]]("bf")
     assert(bf.nonEmpty)
 
-    val hits = (1L to 2000L).toDF("k")
-      .withColumn("hit",
-        call_function(GraftFunctions.BloomContainsName, lit(bf), xxhash64(col("k"))))
-      .filter(col("hit")).select("k").as[Long].collect().toSet
+    (1L to 2000L).toDF("k").createOrReplaceTempView("bloom_probe")
+    val hits = spark.sql(
+      "SELECT k FROM bloom_probe WHERE graft_bloom_contains(:bf, xxhash64(k))",
+      Map("bf" -> bf))
+      .as[Long].collect().toSet
     // no false negatives on the inserted keys
     assert((1L to 1000L).forall(hits), "bloom dropped inserted keys")
     // bounded false positives on the absent half (16 bits/key ≈ sub-1% FPP)

@@ -11,10 +11,8 @@ import graft.SparkSpec
 class BoundedCollectSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("groups at or under the cap are collected in full") {
-    val s = registered
+    val s = spark
     val df = s.range(0, 100)
       .select((col("id") % 10).as("k"), col("id").as("v"))
       .groupBy("k")
@@ -29,7 +27,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("an overflowing group is bounded at cap+1, never the true size") {
-    val s = registered
+    val s = spark
     // one hot key with 100k values across many partitions — the unbounded
     // collect_list would materialize all 100k; the cap keeps 33
     val n = s.range(0, 100000, 1, 16)
@@ -42,7 +40,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("min-k keeps exactly the k smallest, ascending, regardless of partitioning") {
-    val s = registered
+    val s = spark
     // values arrive across 16 partitions in id order per partition; the
     // k smallest of each group are a SET property — the result must be
     // identical however the rows were distributed (unlike collectCapped)
@@ -63,7 +61,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("min-k on a struct orders by (first, second) fields — the hash-reservoir shape") {
-    val s = registered
+    val s = spark
     val rows = s.range(0, 1000, 1, 8)
       .select(lit(1).as("k"),
         struct((col("id") % 10).as("h"), col("id").as("vec_id")).as("c"))
@@ -78,7 +76,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("min-k null semantics: null elements skipped; null struct FIELDS sort first (mask at call sites)") {
-    val s = registered
+    val s = spark
     // null element (whole candidate) → skipped: only non-null rows collect
     val skipped = s.range(0, 10)
       .select(lit(1).as("k"),
@@ -102,7 +100,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("nulls are skipped like collect_list") {
-    val s = registered
+    val s = spark
     val n = s.range(0, 10)
       .select(lit(1).as("k"), when(col("id") % 2 === 0, col("id")).as("v"))
       .groupBy("k")
@@ -113,7 +111,8 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_collect_capped via GraftExtensions registry") {
-    val s = registered
+    val s = spark
+    GraftFunctions.register(s)
     s.range(0, 50).createOrReplaceTempView("bc_sql_in")
     val n = s.sql(
       "SELECT size(graft_collect_capped(id, 7)) AS n FROM bc_sql_in")
@@ -122,7 +121,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("degenerate corpus: 1500 identical docs complete with buckets dropped, exact dedup still catches them") {
-    val s = registered
+    val s = spark
     import s.implicits._
     // 1500 byte-identical docs + 2 genuine near-dups. All 1500 collapse
     // into the SAME MinHash band buckets (bucket size 1500 > MaxBucket =
@@ -150,7 +149,7 @@ class BoundedCollectSpec extends SparkSpec {
   }
 
   test("hot shingle across 1k docs: jaccard pipeline stays bounded and exact for uncommon shingles") {
-    val s = registered
+    val s = spark
     import s.implicits._
     // every doc contains one shared hot 3-gram ("common filler words") —
     // df=1000 > MaxShingleDf, so it is excluded from the inverted index;

@@ -16,7 +16,6 @@ class FloatCosineSpec extends SparkSpec {
   }
 
   test("native expression is bit-identical to the portable formulation") {
-    GraftFunctions.register(spark)
     val both = vecs.select(
       GraftFunctions.cosine(col("a"), col("b")).as("native"),
       Portable.cosine(col("a"), col("b")).as("portable"))
@@ -40,13 +39,11 @@ class FloatCosineSpec extends SparkSpec {
   }
 
   test("null inputs yield null") {
-    GraftFunctions.register(spark)
     val df = Seq((Some(Seq(1f, 2f)), None: Option[Seq[Float]])).toDF("a", "b")
     assert(df.select(GraftFunctions.cosine(col("a"), col("b"))).head.isNullAt(0))
   }
 
   test("interpreted eval matches codegen (identity vector = 1)") {
-    GraftFunctions.register(spark)
     val df = Seq((Seq(3f, 4f), Seq(3f, 4f))).toDF("a", "b")
     val v = df.select(GraftFunctions.cosine(col("a"), col("b"))).head.getDouble(0)
     assert(math.abs(v - 1.0) < 1e-12)

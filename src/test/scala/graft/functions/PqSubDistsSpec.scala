@@ -26,7 +26,6 @@ class PqSubDistsSpec extends SparkSpec {
 
   test("native kernel is bit-identical to the zip_with/slice/aggregate " +
     "formulation across all 8 subspaces") {
-    GraftFunctions.register(spark)
     val rows = vecs.select(
       GraftFunctions.pqSubDists(col("a"), col("b")).as("native") +:
         (0 until 8).map(s => hof(s, col("a"), col("b")).as(s"h$s")): _*)
@@ -52,7 +51,6 @@ class PqSubDistsSpec extends SparkSpec {
   }
 
   test("null inputs yield null; short arrays follow slice semantics") {
-    GraftFunctions.register(spark)
     val df = Seq((Some(Seq(1d, 2d)), None: Option[Seq[Double]]))
       .toDF("a", "b")
     assert(df.select(GraftFunctions.pqSubDists(col("a"), col("b")))

@@ -24,7 +24,6 @@ class AnnMaintenanceSpec extends SparkSpec {
 
   test("refresh fires on drift only, and heals the next drifted batch") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annmaint").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"
@@ -62,7 +61,6 @@ class AnnMaintenanceSpec extends SparkSpec {
 
   test("an empty micro-batch neither crashes the step nor counts as drift") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annmaint_empty").toFile.getAbsolutePath
     val m = new DetachedMaintainer("annmaint-spec-empty")
     try {

@@ -24,7 +24,6 @@ class DeleteLifecycleSpec extends SparkSpec {
 
   test("LSH tombstones: logical serve ≡ physical serve; fold forgets; replay harmless") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, sf)
     val idx = Files.createTempDirectory("graft_del_lsh").toFile.getAbsolutePath
     try {
@@ -92,7 +91,6 @@ class DeleteLifecycleSpec extends SparkSpec {
   test("sequence rule: a key re-ingested AFTER its delete survives; at-or-before rows die") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val idx = Files.createTempDirectory("graft_del_seq").toFile.getAbsolutePath
     def vec(id: Long) = (id, Array.tabulate(64)(j => ((id + j) % 7).toFloat / 7f))
     val batch0 = Seq(vec(1L), vec(2L)).toDF("vec_id", "embedding")

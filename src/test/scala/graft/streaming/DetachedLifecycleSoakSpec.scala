@@ -73,7 +73,6 @@ class DetachedLifecycleSoakSpec extends SparkSpec {
       gcGraceMs: Long, actSleepMs: Long, midFoldAt: Int,
       checkEvery: Int, awaitBeforeServe: Boolean = false): Unit = {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val corpusDir = tmp("graft_dls_corpus")
     val idxDir = tmp("graft_dls_idx")
     val m = new DetachedMaintainer("dls-soak")

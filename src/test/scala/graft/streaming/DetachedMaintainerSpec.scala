@@ -42,7 +42,6 @@ class DetachedMaintainerSpec extends SparkSpec {
   test("LSH reclaim detached: ingest cadence continues, serves stay on the " +
     "old generation, post-swap serve ≡ the synchronous composition") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val corpusDir = tmp("graft_dm_corpus")
     val idxDir = tmp("graft_dm_idx")
     val m = new DetachedMaintainer("dm-spec-lsh")
@@ -136,7 +135,6 @@ class DetachedMaintainerSpec extends SparkSpec {
   test("BM25 rebuild detached: ingest cadence continues, the old index " +
     "serves until the swap, post-swap merge ≡ batch build over survivors") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val out = tmp("graft_dm_bm25")
     val m = new DetachedMaintainer("dm-spec-bm25")
     try {
@@ -205,7 +203,6 @@ class DetachedMaintainerSpec extends SparkSpec {
   test("codebook drift refresh detached: drifted batches keep assigning " +
     "against the old codebook while the retrain runs; the cut-over heals") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.functions.avg
     def vecs(from: Int, until: Int, label: Int => Int): DataFrame = {
       import s.implicits._
@@ -271,7 +268,6 @@ class DetachedMaintainerSpec extends SparkSpec {
   test("detached commit retains the superseded generation: a serve plan " +
     "pinned on the old base survives the swap (retainSnapshots >= 1)") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val corpusDir = tmp("graft_dm_ret_corpus")
     val idxDir = tmp("graft_dm_ret_idx")
     val m = new DetachedMaintainer("dm-spec-retain")

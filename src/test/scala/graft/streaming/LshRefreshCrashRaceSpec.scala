@@ -29,7 +29,6 @@ class LshRefreshCrashRaceSpec extends SparkSpec {
 
   test("crash injection: refresh killed after staging, before the claim — serving stays on the old generation, next refresh absorbs, orphan TTL-swept") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_lshcrash").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"

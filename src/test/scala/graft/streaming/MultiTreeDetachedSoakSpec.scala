@@ -71,7 +71,6 @@ class MultiTreeDetachedSoakSpec extends SparkSpec {
     ">= 2 real ACTs concurrently with >= 1 queued, the FIFO drains, every " +
     "serve stays exact, each final state ≡ its synchronous composition") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val corpusA = tmp("graft_mt_corpusA"); val idxA = tmp("graft_mt_idxA")
     val corpusB = tmp("graft_mt_corpusB"); val idxB = tmp("graft_mt_idxB")
     val outC = tmp("graft_mt_bm25")

@@ -20,7 +20,6 @@ class StreamAnnRecoverySpec extends SparkSpec {
   test("crash after land, before commit: restart re-lands the same batch id, no loss, no dupes") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annrecover").toFile.getAbsolutePath
     val srcDir = s"$base/src"
     val outDir = s"$base/landed"

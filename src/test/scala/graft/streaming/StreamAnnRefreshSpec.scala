@@ -27,7 +27,6 @@ class StreamAnnRefreshSpec extends SparkSpec {
 
   test("drifted batch's assignment agreement recovers after refresh; cut-over is atomic") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annrefresh").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"
@@ -94,7 +93,6 @@ class StreamAnnRefreshSpec extends SparkSpec {
 
   test("refresh is deterministic under replay: re-running retrains the identical codebook") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annrefresh2").toFile.getAbsolutePath
     try {
       StreamShardRouter.landBatch(vecs(0, 60, _ % 3), s"$base/corpus", 0L)
@@ -116,7 +114,6 @@ class StreamAnnRefreshSpec extends SparkSpec {
 
   test("refresh reads THROUGH the corpus manifest: folded base + unfolded deltas") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annrefresh3").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"
@@ -147,7 +144,6 @@ class StreamAnnRefreshSpec extends SparkSpec {
 
   test("tombstone-aware refresh: deleted vectors neither train nor reassign") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_annrefresh4").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"

@@ -19,7 +19,6 @@ class StreamBm25IngestSpec extends SparkSpec {
 
   test("folded per-batch partials ≡ batch index; serve parity with q_bm25_topk") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, sf)
 
     val expectIdx = TextAnalysis
@@ -90,7 +89,6 @@ class StreamBm25IngestSpec extends SparkSpec {
 
   test("index compaction: re-cap generation fold under the manifest protocol stays exact") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, sf)
     val expectIdx = TextAnalysis
       .bm25Index(TextAnalysis.bm25Partial(TextAnalysis.bm25Postings(docs)))
@@ -137,7 +135,6 @@ class StreamBm25IngestSpec extends SparkSpec {
   test("merge enforces batch-disjoint doc_ids; same-id replay stays mergeable") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val batch = Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text")
     val outDir = java.nio.file.Files.createTempDirectory("graft_bm25dis").toFile
@@ -167,7 +164,6 @@ class StreamBm25IngestSpec extends SparkSpec {
     // batches — NOT reject on the envelope alone
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val outDir = java.nio.file.Files.createTempDirectory("graft_bm25ilv").toFile
     try {
       StreamBm25Ingest.ingestStep(
@@ -196,7 +192,6 @@ class StreamBm25IngestSpec extends SparkSpec {
     // semantic branch's twin windows are StreamAnnRecoverySpec /
     // LshRefreshCrashRaceSpec; this pins the lexical branch explicitly.)
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, sf).select(col("doc_id"), col("text"))
       .localCheckpoint()
     val crashed = Files.createTempDirectory("graft_bm25crash").toFile

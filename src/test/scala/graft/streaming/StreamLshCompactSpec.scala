@@ -26,7 +26,6 @@ class StreamLshCompactSpec extends SparkSpec {
 
   test("crash-replayed posting deltas fold to the exact serve layout; serve ≡ q_knn_lsh") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, sf)
     val base = Files.createTempDirectory("graft_lshcompact").toFile.getAbsolutePath
     val srcDir = s"$base/src"

@@ -21,7 +21,6 @@ class StreamNeardupIngestSpec extends SparkSpec {
 
   test("dedup-before-index, same-batch blindness, tombstones, fold transparency") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val idx = Files.createTempDirectory("graft_ndstream").toFile.getAbsolutePath + "/idx"
     val clone = "the quick brown fox jumps over the lazy dog tonight"
     try {

@@ -27,7 +27,6 @@ class StreamPqRefreshSpec extends SparkSpec {
 
   test("drifted batch's reconstruction error recovers after PQ refresh; replay deterministic") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_pqrefresh").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"
@@ -82,7 +81,6 @@ class StreamPqRefreshSpec extends SparkSpec {
 
   test("crash injection: refresh killed between codebook write and commit leaves serving on gen g; next refresh absorbs the orphan") {
     val s = spark
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft_pqcrash").toFile.getAbsolutePath
     val corpusDir = s"$base/corpus"
     val idxDir = s"$base/idx"
